@@ -17,8 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..sources.registry import fan_for_compute
 from .text import WORD_RE
 
 
@@ -86,10 +86,9 @@ def shingles(
     emitted shingle (see ``jaccard_pairs``; measured ~20× on this corpus).
     Sweep with ``cache.free_cached_blocks`` after consuming in multi-query
     sessions."""
-    # _spread, not an unconditional repartition: a properly-split lake
-    # scan (partitions >= cores) must NOT pay a full-corpus shuffle —
-    # the exchange fires only when the scan is genuinely coalesced
-    arr = shingle_arrays(_spread(df), id_col, text_col, n).persist()
+    # fan only an under-split scan: a properly-split lake scan must NOT
+    # pay a full-corpus shuffle
+    arr = shingle_arrays(fan_for_compute(df, min_bytes=0), id_col, text_col, n).persist()
     return arr.select(F.col(id_col), F.explode("sh_arr").alias("shingle"))
 
 
@@ -120,11 +119,10 @@ def jaccard_pairs(
     the persisted frame is MEMORY_AND_DISK and ~the corpus size — write
     the shingle frame to the lake instead if it is reused across jobs.
     """
-    # Spread the regex-heavy shingle stage across all cores (a small file
-    # arrives as one input split) and MATERIALIZE it (see docstring) — it
-    # feeds both the size lookup and the posting-list build.  _spread is
-    # conditional: a wide lake scan passes through without the shuffle.
-    arrs = shingle_arrays(_spread(df), id_col, text_col, n).persist()
+    # Fan the regex-heavy shingle stage out when the scan is under-split,
+    # and MATERIALIZE it (see docstring): it feeds both the size lookup
+    # and the posting-list build.
+    arrs = shingle_arrays(fan_for_compute(df, min_bytes=0), id_col, text_col, n).persist()
     sizes = arrs.select(F.col(id_col), F.col("n_shingles"))  # map-side, no agg
     sh = arrs.select(F.col(id_col), F.explode("sh_arr").alias("shingle"))
 
@@ -177,57 +175,6 @@ def jaccard_pairs(
     )
 
 
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a pathologically-coalesced input (one small parquet split)
-    across the cluster's cores before a compute-heavy map stage: one
-    RoundRobin exchange, only when the scan has fewer partitions than the
-    default parallelism.  A properly-split lake scan passes through
-    untouched (the sf1 rehearsal caught the 64-hash signature stage
-    grinding on a single 6 MB input split).
-
-    Partition COUNT alone is a lying proxy on few-file inputs: the
-    scheduler byte-splits a file into ``size/maxPartitionBytes`` ranges,
-    but parquet readers consume whole ROW GROUPS — a file with R row
-    groups feeds at most R tasks and the other byte-range splits come up
-    empty.  The sf10 probe caught exactly this: a 59.5 MB single file
-    (5 row groups) "split" into 32 partitions ran the whole simhash vote
-    on 5 tasks — 30× wall for 10× rows.  So when the input is few files,
-    the check reads the REAL row-group count from the local footers
-    (driver-side, metadata-only, only on the few-file path) and spreads
-    when it undershoots.  Non-local or unreadable footers pass through
-    untouched — at lake scale inputs are thousands of files and the
-    file-count guard short-circuits everything."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    if not files or len(files) >= par:
-        return df
-    try:
-        from urllib.parse import unquote, urlparse
-
-        import pyarrow.parquet as pq
-
-        groups = 0
-        for f in files:
-            u = urlparse(f)
-            if u.scheme not in ("file", ""):
-                return df  # remote fs: metadata read not worth a guess
-            if not f.endswith(".parquet"):
-                return df
-            groups += pq.ParquetFile(unquote(u.path)).metadata.num_row_groups
-            if groups >= par:
-                return df
-    except Exception:
-        return df
-    return df.repartition(par)
-
-
 def _fan(df: DataFrame, *cols: str) -> DataFrame:
     """Force a candidate-pair frame onto full parallelism BEFORE a
     compute-heavy verify join.  AQE coalesces shuffle partitions by
@@ -249,7 +196,7 @@ def minhash_signatures(
     """MinHash signature per document: num_perm seeded-xxhash64 minima over
     the shingle set — computed entirely map-side from the per-doc shingle
     array (``array_min`` over a hash ``transform``) — no shuffle beyond
-    the conditional ``_spread`` of an under-split scan.
+    the conditional scan fan (``fan_for_compute``) of an under-split scan.
 
     The shingle frame is persisted BEFORE both the empty-doc filter and
     the num_perm min-hash columns.  Order is load-bearing twice over:
@@ -261,7 +208,7 @@ def minhash_signatures(
     exactly once and filters on the cached column.  Callers sweep with
     ``cache.free_cached_blocks``."""
     arrs = (
-        shingle_arrays(_spread(df), id_col, text_col, n)
+        shingle_arrays(fan_for_compute(df, min_bytes=0), id_col, text_col, n)
         .persist()
         .filter(F.col("n_shingles") > 0)
     )
@@ -368,7 +315,7 @@ def minhash_lsh_pairs(
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash per document from token xxhash64s — the per-bit ±1
     vote runs as one array aggregate, no Python; under-split scans are
-    spread first (see ``_spread``).
+    spread first (see ``sources.registry.fan_for_compute``).
 
     The vote is a SINGLE left fold over the token hashes carrying a
     64-int accumulator (``zip_with`` per step), not 64 separate
@@ -376,7 +323,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     — same 64·T adds, but one pass over the hash array instead of 64
     re-walks was measured 2.5× faster at sf1 (2.56 → 1.04 s, r8) and is
     bit-identical (integer adds commute per bit position)."""
-    df = _spread(df)
+    df = fan_for_compute(df, min_bytes=0)
     toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0)
     votes = F.expr(
         "aggregate(__th, array_repeat(0, 64), (acc, h) -> "
@@ -407,7 +354,7 @@ def embedding_near_dup_pairs(
     """
     from .similarity import with_norm, cosine_expr
 
-    v = with_norm(_spread(df), id_col, vec_col)
+    v = with_norm(fan_for_compute(df, min_bytes=0), id_col, vec_col)
     a = v.select(F.col(id_col).alias("id_a"), F.col("vec").alias("vec_a"), F.col("norm").alias("norm_a"))
     b = v.select(F.col(id_col).alias("id_b"), F.col("vec").alias("vec_b"), F.col("norm").alias("norm_b"))
     return (
@@ -595,7 +542,7 @@ def embedding_near_dup_pairs_bucketed(
         id_type = dict(df.dtypes)[id_col]
         if id_type not in ("tinyint", "smallint", "int", "bigint"):
             screen = "fold"
-    v = with_norm(_spread(df), id_col, vec_col)
+    v = with_norm(fan_for_compute(df, min_bytes=0), id_col, vec_col)
     leaders = (
         v.orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)), F.col(id_col))
         .limit(n_leaders)
@@ -802,7 +749,7 @@ def substring_span_dedup(
         ),
     ).otherwise(F.expr("CAST(array() AS array<string>)"))
     base = (
-        _spread(df)
+        fan_for_compute(df, min_bytes=0)
         .select(F.col(id_col), toks.alias("__toks"))
         .withColumn("__grams", grams_expr)
         .persist()  # MATERIALIZATION FENCE: feeds the explode AND the rebuild
@@ -891,9 +838,7 @@ def incremental_jaccard_matches(
     ``jaccard >= threshold``: (id, n_matches, best_match_id,
     best_jaccard) — best = highest jaccard, ties to the lowest corpus id.
     """
-    from pyspark.sql import Window
-
-    c_arr = shingle_arrays(_spread(corpus), id_col, text_col, n).persist()
+    c_arr = shingle_arrays(fan_for_compute(corpus, min_bytes=0), id_col, text_col, n).persist()
     d_arr = shingle_arrays(delta, id_col, text_col, n).persist()
 
     posting = (
@@ -967,7 +912,7 @@ def prefix_filter_pairs(
     equality is pinned in tests/test_prefix_filter.py and by sharing its
     DuckDB oracle."""
     t_eff = max(threshold - 5e-5, 0.0)
-    arrs = shingle_arrays(_spread(df), id_col, text_col, n).persist()
+    arrs = shingle_arrays(fan_for_compute(df, min_bytes=0), id_col, text_col, n).persist()
     arrs = arrs.filter(F.col("n_shingles") > 0)
     sh = arrs.select(F.col(id_col), F.explode("sh_arr").alias("shingle"))
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("__df"))
@@ -1082,7 +1027,7 @@ def sorted_neighborhood_pairs(
         .select("__ia", "__ib")
     )
     cand = _fan(cand, "__ia")  # per-pair array_intersect is CPU, not bytes
-    arrs = shingle_arrays(_spread(df), id_col, text_col, n).persist()
+    arrs = shingle_arrays(fan_for_compute(df, min_bytes=0), id_col, text_col, n).persist()
     fa = arrs.select(
         F.col(id_col).alias("__ia"),
         F.col("sh_arr").alias("__sa"),

@@ -22,7 +22,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.media import (
@@ -145,23 +144,6 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
 
     return docs.select("doc_id", "text", "source", "lang").mapInPandas(
         run, schema=_MEDIA_SCHEMA
-    )
-
-
-def media_summary(features: DataFrame) -> DataFrame:
-    """Per-modality/format rollup of decoded header metadata — the sanity
-    dashboard a corpus curator runs first (decode rate, size, dims)."""
-    return (
-        features.groupBy("modality", "format")
-        .agg(
-            F.count("*").alias("n_assets"),
-            F.sum("n_bytes").alias("total_bytes"),
-            F.avg("width").alias("avg_width"),
-            F.avg("height").alias("avg_height"),
-            F.avg("duration_ms").alias("avg_duration_ms"),
-            F.count_distinct("content_hash").alias("n_unique"),
-        )
-        .orderBy("modality", "format")
     )
 
 

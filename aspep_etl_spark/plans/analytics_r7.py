@@ -66,7 +66,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load_table as _t
+from ..sources.registry import fan_for_compute, load_table as _t
 from .lloyd_sql import lloyd_assign_prefix
 from .xxh64_sql import PRELUDE as _XXH_PRELUDE
 from .xxh64_sql import classifier_wts_ctes as _cls_wts
@@ -97,7 +97,7 @@ def docs_dsir_weights(spark, sf_dir):
     unigram models, Laplace-smoothed.  The 256-bucket model is a
     broadcast relation; scoring is one token scan + ordered position
     fold, ``round(·, 6)`` absorbing libm log10 slack."""
-    docs = _t(spark, sf_dir, "documents", fan_compute=True)
+    docs = fan_for_compute(_t(spark, sf_dir, "documents"))
     # two persist fences (r8; measured 8.4 → 6.0 s at sf1): the array
     # frame fences the regexp from posexplode's per-emitted-element
     # re-evaluation (the documented explode trap), and the token frame

@@ -50,7 +50,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..sources.registry import load_table as _t
+from ..sources.registry import fan_for_compute, load_table as _t
 
 R8_QUERIES: dict = {}
 R8_ORACLE_SQL: dict = {}
@@ -626,7 +626,7 @@ def docs_logreg_train(spark, sf_dir):
     # the serial scan was the whole training wall's floor).  Read through
     # the adaptive fan (no-op at sf0.1/at-scale); all downstream sums
     # are integer-exact and order-insensitive by design.
-    docs = _t(spark, sf_dir, "documents", fan_compute=True).select(
+    docs = fan_for_compute(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         (F.substring("source", 4, 10).cast("int") % 2 == 0).cast("long").alias("y"),
         "text",

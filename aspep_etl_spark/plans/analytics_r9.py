@@ -55,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load_table as _t
+from ..sources.registry import fan_for_compute, load_table as _t
 from .oracle_util import SPARK_ROUND4_MACRO
 from .xxh64_sql import PRELUDE as _XXH_PRELUDE
 from .xxh64_sql import classifier_wts_ctes as _cls_wts
@@ -891,7 +891,7 @@ def docs_nb_crossval(spark, sf_dir):
     # plain scan — per-row work there is a trivial count.  Downstream is
     # order-insensitive by construction (integer count aggs; scoring
     # folds over an array_sort'ed (pos, term) array).
-    tok = _t(spark, sf_dir, "documents", fan_compute=True).withColumn(
+    tok = fan_for_compute(_t(spark, sf_dir, "documents")).withColumn(
         "fold", _cv_fold(F.col("doc_id"))
     ).select(
         "doc_id",
@@ -1141,7 +1141,7 @@ def docs_nb_crossval_capped(spark, sf_dir):
     # fan (no-op at sf0.1/at-scale, see registry.fan_for_compute); the
     # prior/scoring branches keep the plain scan — their per-row work is
     # trivial and the scoring join re-exchanges on doc_id anyway.
-    docs_fanned = _t(spark, sf_dir, "documents", fan_compute=True).withColumn(
+    docs_fanned = fan_for_compute(_t(spark, sf_dir, "documents")).withColumn(
         "fold", _cv_fold(F.col("doc_id"))
     )
     dw = (

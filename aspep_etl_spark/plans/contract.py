@@ -48,7 +48,7 @@ from ..operators.windows import cohort_ranks, signed_delta_ranks, yoy_deltas
 from ..streaming.events import hourly_rollup_batch, run_streaming_rollup
 
 
-from ..sources.registry import load_table as _t  # (spark, sf_dir, name)
+from ..sources.registry import fan_for_compute, load_table as _t  # (spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -817,7 +817,7 @@ WHERE round(n_common / (sa.n + sb.n - n_common), 4) >= 0.05
 
 def text_quality_q(spark, sf_dir):
     """Per-document quality metrics: token count, punctuation/stopword ratios, token length."""
-    docs = _t(spark, sf_dir, "documents", fan_compute=True)
+    docs = fan_for_compute(_t(spark, sf_dir, "documents"))
     m = quality_metrics(F.col("text"))
     return docs.select(
         "doc_id",
@@ -888,7 +888,7 @@ def ann_cosine_topk_q(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     # fan the CORPUS side only (the per-row cosine×|queries| work); the
     # query side is a 10-row broadcast build that needs no parallelism
-    corpus = _t(spark, sf_dir, "embeddings", fan_compute=True)
+    corpus = fan_for_compute(_t(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 10)
     out = brute_force_topk(corpus, queries, k=5)
     return out.select(

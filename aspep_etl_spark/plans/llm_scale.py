@@ -26,7 +26,7 @@ from ..operators.bloom import bloom_build, bloom_probe
 from ..operators.classifier import score_documents
 from ..operators.dedup import incremental_jaccard_matches, shingles
 from ..operators.text import WORD_RE
-from ..sources.registry import load_table as _t
+from ..sources.registry import fan_for_compute, load_table as _t
 from .xxh64_sql import PRELUDE as _XXH_PRELUDE
 from .xxh64_sql import classifier_wts_ctes as _cls_wts
 
@@ -36,7 +36,7 @@ def docs_classifier_score(spark, sf_dir):
     sigmoid per document.  Map-only — the plan has zero Exchanges; at
     100 TB this is a scan-bound single pass, the cheapest possible shape
     for a corpus-wide model gate."""
-    docs = _t(spark, sf_dir, "documents", fan_compute=True)
+    docs = fan_for_compute(_t(spark, sf_dir, "documents"))
     return score_documents(docs, "text", "doc_id", dim=4096)
 
 

@@ -75,22 +75,6 @@ def aspep_raw_schema() -> T.StructType:
     return T.StructType(fields)
 
 
-def aspep_fact_schema() -> T.StructType:
-    """Canonical long/tidy fact table, grain (state_code, gov_function, year)."""
-    fields = [
-        T.StructField("index", T.LongType(), True),
-        T.StructField("state", T.StringType(), True),
-        T.StructField("state_code", T.StringType(), True),
-        T.StructField("region", T.StringType(), True),
-        T.StructField("division", T.StringType(), True),
-        T.StructField("state_scope", T.StringType(), True),
-        T.StructField("gov_function", T.StringType(), True),
-        T.StructField("year", T.IntegerType(), True),
-    ]
-    fields += [T.StructField(c, T.DoubleType(), True) for c in MEASURE_COLS]
-    return T.StructType(fields)
-
-
 def census_dim_schema() -> T.StructType:
     """Broadcast dimension: state code → (full name, region, division).
 
@@ -115,42 +99,3 @@ def numeric_stat_cols(df_schema: T.StructType, exclude=STAT_EXCLUDE_COLS) -> lis
         for f in df_schema.fields
         if isinstance(f.dataType, T.NumericType) and f.name not in exclude
     ]
-
-
-# ---------------------------------------------------------------------------
-# [EXT] extension-surface schemas (driver testdata, TESTDATA.md)
-# ---------------------------------------------------------------------------
-
-def documents_schema() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("text", T.StringType(), True),
-            T.StructField("lang", T.StringType(), True),
-            T.StructField("source", T.StringType(), True),
-            T.StructField("n_chars", T.LongType(), True),
-        ]
-    )
-
-
-def embeddings_schema() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("vec_id", T.LongType(), False),
-            T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-            T.StructField("label", T.IntegerType(), True),
-        ]
-    )
-
-
-def multimodal_schema() -> T.StructType:
-    """Opaque binary payload + typed metadata for image/audio/video columns
-    ([EXT], SURVEY.md §2.11)."""
-    return T.StructType(
-        [
-            T.StructField("asset_id", T.LongType(), False),
-            T.StructField("modality", T.StringType(), False),  # image|audio|video
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", T.MapType(T.StringType(), T.StringType()), True),
-        ]
-    )

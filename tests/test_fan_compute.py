@@ -60,7 +60,7 @@ def test_fan_is_noop_below_size_floor(spark, sf):
     docs_classifier_score zero-Exchange pin — hold wherever the fan does
     not fire)."""
     base = load_table(spark, sf, "documents")
-    fanned = load_table(spark, sf, "documents", fan_compute=True)
+    fanned = fan_for_compute(load_table(spark, sf, "documents"))
     assert plan_of(fanned) == plan_of(base)
 
 
@@ -71,7 +71,7 @@ def test_fan_fires_when_forced_and_preserves_rows(spark, sf, monkeypatch):
     the row SET must be unchanged."""
     monkeypatch.setenv("SPARK_GRAFT_FAN_MIN_BYTES", "1")
     base = load_table(spark, sf, "documents")
-    fanned = load_table(spark, sf, "documents", fan_compute=True)
+    fanned = fan_for_compute(load_table(spark, sf, "documents"))
     plan = plan_of(fanned)
     assert "REPARTITION_BY_NUM" in plan or "RoundRobinPartitioning" in plan
     par = spark.sparkContext.defaultParallelism
@@ -102,7 +102,7 @@ def test_fan_skips_subscribed_scans(spark, tmp_path, monkeypatch):
         df = spark.read.parquet(path)
         par = spark.sparkContext.defaultParallelism
         assert df.rdd.getNumPartitions() * 2 > par  # premise: subscribed
-        out = fan_for_compute(df, path)
+        out = fan_for_compute(df)
         assert out is df
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)

@@ -1,5 +1,6 @@
-"""Regression pin for ``_spread``'s row-group starvation fix
-(``operators/dedup.py``).
+"""Regression pin for the scan fan's row-group starvation fix, called
+here as the dedup operators call it: ``_spread`` is
+``sources.registry.fan_for_compute`` with no size floor.
 
 The r9 sf10 probe caught a real 30x-wall scale bug: the scheduler
 byte-splits a parquet file into ``size/maxPartitionBytes`` ranges, but
@@ -21,13 +22,16 @@ footer-reading branch is ever removed:
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from aspep_etl_spark.operators.dedup import _spread
+from aspep_etl_spark.sources.registry import fan_for_compute
+
+_spread = partial(fan_for_compute, min_bytes=0)
 
 
 def _write_one_file(path: str, n_rows: int, row_group_size: int) -> None:

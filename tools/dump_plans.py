@@ -1,7 +1,17 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for the headline queries,
-so plan shapes (pushdown, broadcast, exchanges, codegen) are reviewable
-without running Spark."""
+"""Formatted physical plans, so plan shapes (pushdown, broadcast,
+exchanges, codegen) are reviewable without running Spark.
+
+Usage: python tools/dump_plans.py [--vanilla] [OUT_DIR SUFFIX [query ...]]
+
+With no OUT_DIR, regenerate PLANS.md from ``QUERIES`` (sf0.01 inputs).
+With one, write OUT_DIR/<query>_<SUFFIX>.txt per query (default: the
+``bench.py`` headline set, sf0.1 inputs); run it once per checkout, e.g.
+SUFFIX=before and SUFFIX=after, and diff.  ``$SPARK_GRAFT_SF_DIR``
+overrides the inputs.  Plans come from ``get_spark``'s tuned session;
+``--vanilla`` uses a bare ``SparkSession.builder.getOrCreate()``, whose
+join strategies can differ.
+"""
 
 from __future__ import annotations
 
@@ -13,6 +23,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+USAGE = "usage: python tools/dump_plans.py [--vanilla] [OUT_DIR SUFFIX [query ...]]"
 QUERIES = [
     "q1_pricing_summary",
     "q5_region_revenue",
@@ -108,11 +119,44 @@ QUERIES = [
 ]
 
 
-def main() -> None:
-    from aspep_etl_spark.plans.contract import SPARK_QUERIES
-    from aspep_etl_spark.session import get_spark
+def formatted_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue().rstrip()
 
-    spark = get_spark(app_name="dump-plans")
+
+def main() -> None:
+    from bench import BENCH_QUERIES, SF_DIR as BENCH_SF_DIR
+
+    from aspep_etl_spark.plans.contract import SPARK_QUERIES
+
+    args = sys.argv[1:]
+    vanilla = "--vanilla" in args
+    if vanilla:
+        args.remove("--vanilla")
+    names = args[2:] or (BENCH_QUERIES if args else QUERIES)
+    unknown = [n for n in names if n not in SPARK_QUERIES]
+    if len(args) == 1 or unknown:
+        sys.exit(f"unknown queries: {unknown}\n{USAGE}" if unknown else USAGE)
+    sf_dir = BENCH_SF_DIR if args else SF_DIR
+    if vanilla:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.builder.appName("dump-plans").getOrCreate()
+    else:
+        from aspep_etl_spark.session import get_spark
+
+        spark = get_spark(app_name="dump-plans")
+    if args:
+        os.makedirs(args[0], exist_ok=True)
+        for name in names:
+            path = os.path.join(args[0], f"{name}_{args[1]}.txt")
+            with open(path, "w") as f:
+                f.write(formatted_plan(SPARK_QUERIES[name](spark, sf_dir)) + "\n")
+            print(f"wrote {path}")
+        spark.stop()
+        return
     out = [
         "# PLANS — formatted physical plans of headline queries",
         "",
@@ -124,11 +168,8 @@ def main() -> None:
         "",
     ]
     for name in QUERIES:
-        df = SPARK_QUERIES[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain(mode="formatted")
-        out += [f"## {name}", "", "```", buf.getvalue().rstrip(), "```", ""]
+        plan = formatted_plan(SPARK_QUERIES[name](spark, sf_dir))
+        out += [f"## {name}", "", "```", plan, "```", ""]
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(QUERIES)} plans")
