@@ -26,7 +26,7 @@ def recode_values(col: Column, mapping: dict[str, str]) -> Column:
     """Exact-match value recode with pass-through (J2/J3) as a literal map
     expression evaluated entirely inside codegen."""
     map_expr = F.create_map(*[F.lit(x) for x in chain.from_iterable(mapping.items())])
-    return F.coalesce(map_expr.getItem(col), col)
+    return F.coalesce(map_expr[col], col)
 
 
 def recode_via_join(

@@ -77,32 +77,37 @@ def run_aspep_job(
     write_canonical_store(fact, paths.store_dir)
     fact = spark.read.parquet(paths.store_dir)
 
-    stats = derive_stats(fact)
-    ext = derive_extended_stats(stats)
-
     from ..operators.setops import sort_canonical
 
-    artifacts = {
-        # reference sorts the combined artifact by (state, year, function)
-        # before publishing (assets.py:322) — O1 total sort at publish time
-        "combined_data": write_json_array(
-            sort_canonical(fact), os.path.join(paths.out_dir, "combined_data.json")
-        ),
-        "derived_stats": write_json_array(
-            stats, os.path.join(paths.out_dir, "aspep_with_derived_stats.json")
-        ),
-        "extended_stats": write_json_array(
-            ext, os.path.join(paths.out_dir, "aspep_with_extended_derived_stats.json")
-        ),
-    }
-    if gzip_artifacts:
-        artifacts = {k: gzip_publish(p) for k, p in artifacts.items()}
-    result = {"artifacts": artifacts, "bad_files": bad_files, "store": paths.store_dir}
-    if golden_checks:
-        from .golden_checks import run_golden_checks
+    # ``derived_stats`` publishes the stats plan and ``extended_stats``
+    # derives from it: cache it so it runs once.  Publishing already caps it
+    # at JSON_ARRAY_MAX_ROWS on the driver, so the cache adds no scale risk.
+    stats = derive_stats(fact).cache()
+    try:
+        ext = derive_extended_stats(stats)
+        artifacts = {
+            # reference sorts the combined artifact by (state, year, function)
+            # before publishing (assets.py:322) — O1 total sort at publish time
+            "combined_data": write_json_array(
+                sort_canonical(fact), os.path.join(paths.out_dir, "combined_data.json")
+            ),
+            "derived_stats": write_json_array(
+                stats, os.path.join(paths.out_dir, "aspep_with_derived_stats.json")
+            ),
+            "extended_stats": write_json_array(
+                ext, os.path.join(paths.out_dir, "aspep_with_extended_derived_stats.json")
+            ),
+        }
+        if gzip_artifacts:
+            artifacts = {k: gzip_publish(p) for k, p in artifacts.items()}
+        result = {"artifacts": artifacts, "bad_files": bad_files, "store": paths.store_dir}
+        if golden_checks:
+            from .golden_checks import run_golden_checks
 
-        result["golden_checks"] = run_golden_checks(
-            spark,
-            {"combine_years": fact, "derive_stats": stats, "derive_extended_stats": ext},
-        ).collect()
-    return result
+            result["golden_checks"] = run_golden_checks(
+                spark,
+                {"combine_years": fact, "derive_stats": stats, "derive_extended_stats": ext},
+            ).collect()
+        return result
+    finally:
+        stats.unpersist()

@@ -190,6 +190,14 @@ def ingest_grids(
     flat-header pandas frame (tidy era).  Bad years are quarantined, not
     fatal (reference assets.py:317-320).  Returns the normalized canonical
     fact DataFrame plus the quarantine list.
+
+    Each year is converted by its own ``createDataFrame``, so a year whose
+    frame fails the Arrow path (e.g. a numeric cell in ``state``) falls
+    back alone, and a year that fails outright is quarantined alone.  Each
+    conversion slices its frame into ``defaultParallelism`` partitions, so
+    the union is coalesced back to ``defaultParallelism`` (no shuffle; the
+    driver already holds every row) — otherwise N years reach the store
+    writer as N × cores tasks and files of a few rows each.
     """
     from ..operators.setops import union_by_name
     from ..plans.pipeline import normalize_fact
@@ -214,7 +222,8 @@ def ingest_grids(
     if not frames:
         empty = spark.createDataFrame([], schema.aspep_raw_schema())
         return empty, bad
-    return normalize_fact(union_by_name(frames), census_dim), bad
+    raw_fact = union_by_name(frames).coalesce(spark.sparkContext.defaultParallelism)
+    return normalize_fact(raw_fact, census_dim), bad
 
 
 def ingest_binary_workbooks(

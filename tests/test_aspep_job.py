@@ -69,3 +69,37 @@ def test_full_job_offline(spark, tmp_path):
         if r["state_code"] == "WI" and r["gov_function"] == "judicial and legal"
     ]
     assert wi and wi[0]["ft_pay"] == 7300000.0
+
+
+def test_job_releases_stats_cache(spark, tmp_path, monkeypatch):
+    """The stats frame is cached for the two stats artifacts and released
+    before the job returns — also when a sink raises.  Only "no id added"
+    is asserted: the ContextCleaner may drop other tests' stale RDDs at
+    any time, which only shrinks the set."""
+    import pytest
+
+    from aspep_etl_spark import cache
+    from aspep_etl_spark.plans import aspep_job
+
+    grids = {2003: legacy_grid_2003(), 2024: tidy_frame_2024()}
+    before = cache.persistent_rdd_ids(spark)
+    run_aspep_job(spark, JobPaths(str(tmp_path / "ok")), grids_by_year=grids)
+    assert cache.persistent_rdd_ids(spark) - before == set()
+
+    real = aspep_job.write_json_array
+    calls = []
+
+    def fail_on_second(df, path, **kw):
+        out = real(df, path, **kw)
+        calls.append(cache.persistent_rdd_ids(spark) - before)
+        if len(calls) == 2:
+            raise RuntimeError("sink failed")
+        return out
+
+    monkeypatch.setattr(aspep_job, "write_json_array", fail_on_second)
+    before = cache.persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="sink failed"):
+        run_aspep_job(spark, JobPaths(str(tmp_path / "fail")), grids_by_year=grids)
+    assert len(calls) == 2
+    assert calls[1], "derived_stats should have filled the stats cache"
+    assert cache.persistent_rdd_ids(spark) - before == set()

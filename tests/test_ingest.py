@@ -128,3 +128,49 @@ def test_ingest_grids_end_to_end(spark):
 def test_ingest_empty_input(spark):
     fact, bad = ingest_grids(spark, {})
     assert fact.count() == 0 and bad == []
+
+
+def test_ingest_grids_store_layout(spark, tmp_path):
+    """Per-year conversions are unioned and coalesced to the session's
+    parallelism, so the store writer runs at most ``defaultParallelism``
+    tasks and writes at most one file per (task, year)."""
+    import glob
+
+    from aspep_etl_spark.sinks.publish import write_canonical_store
+
+    years = list(range(2015, 2024))
+    fact, bad = ingest_grids(spark, {y: tidy_frame_2024() for y in years})
+    assert bad == []
+    cores = spark.sparkContext.defaultParallelism
+    assert fact.rdd.getNumPartitions() <= cores
+
+    store = str(tmp_path / "store")
+    write_canonical_store(fact, store)
+    files = glob.glob(f"{store}/year=*/*.parquet")
+    assert len({f.split("/")[-2] for f in files}) == len(years)
+    assert len(files) <= len(years) + cores
+    assert spark.read.parquet(store).count() == 3 * len(years)
+
+
+def test_ingest_grids_numeric_state_falls_back_alone(spark):
+    """A numeric ``state`` cell fails the Arrow conversion of its year only:
+    that year takes the non-Arrow path (the cell is stringified, its NaN
+    measures stay NaN) and is not quarantined, while every other year keeps
+    the Arrow path (NaN measures → null)."""
+    grid = legacy_grid_2003()
+    grid[5][0] = 1.5  # "Alabama  " → a number on the Streets & Hwys row
+    grids = {2003: grid, **{y: tidy_frame_2024() for y in range(2015, 2023)}}
+    fact, bad = ingest_grids(spark, grids)
+    assert bad == []
+    rows = fact.collect()
+    assert {r["year"] for r in rows} == {2003, *range(2015, 2023)}
+
+    hwy = [r for r in rows if r["year"] == 2003 and r["gov_function"] == "highways"]
+    assert len(hwy) == 1
+    assert hwy[0]["state"] == "1.5" and hwy[0]["state_code"] == "1.5"
+    assert hwy[0]["ft_pay"] == 9000000.0
+    assert math.isnan(hwy[0]["pt_hours"])  # non-Arrow path keeps NaN
+
+    neighbours = [r for r in rows if r["year"] != 2003]
+    assert len(neighbours) == 3 * 8
+    assert all(r["pt_hour"] is None for r in neighbours)
