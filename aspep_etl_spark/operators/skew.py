@@ -1,11 +1,11 @@
-"""Skew-mitigation utilities: salted aggregation and salted joins
-(engine-only scale surface — no reference analog; SURVEY.md §6 north-star
-mandate, PERF.md "Skew").
+"""Skew-mitigation utility: salted aggregation (engine-only scale
+surface — no reference analog; SURVEY.md §6 north-star mandate,
+PERF.md "Skew").
 
 AQE's skew-join splitting (on in ``session.get_spark``) handles most
-runtime skew; these explicit forms are for the cases AQE can't fix —
+runtime skew; the explicit form here is for the case AQE can't fix —
 a single hot grouping key whose partial aggregate still overwhelms one
-task, or a broadcast-ineligible join against a skewed key distribution.
+task.
 
 Pattern: two-phase aggregation.  Phase 1 groups on (key, salt) so the hot
 key's rows spread over ``n_salts`` tasks and map-side combine still
@@ -16,7 +16,7 @@ this way; holistic ones (median) need AQE or pre-partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
@@ -49,24 +49,3 @@ def salted_sum_count(
     for c in measure_cols:
         phase2 = phase2.withColumn(f"{c}_avg", F.col(f"{c}_sum") / F.col("n_rows"))
     return phase2
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skewed-key equi-join without broadcast: salt the big side, replicate
-    the small side across all salts, join on (key, salt).
-
-    The small side grows ×n_salts — use only when it is modest but above
-    the broadcast threshold, and the big side's key distribution is skewed
-    enough that a plain shuffle join stalls on one task.
-    """
-    big_s = big.withColumn(SALT_COL, F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts)))
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias(SALT_COL)
-    small_r = small.select("*", salts)
-    out = big_s.join(small_r, [key, SALT_COL], how)
-    return out.drop(SALT_COL)

@@ -66,105 +66,6 @@ def grouped_stats_fused(
     return df.groupBy(*group_keys).agg(*agg_exprs)
 
 
-def grouped_median_mean_preagg(
-    df: DataFrame,
-    group_keys: list[str],
-    stat_cols: list[str],
-) -> DataFrame:
-    """Exact grouped median+mean via (keys, value) PRE-AGGREGATION
-    (guide §2.3 "aggregate before you shuffle") — the A/B twin of the
-    ``grouped_stats_fused`` percentile path (r11 VERDICT ask #4).
-
-    Shape: one scan exploding each row into (col_id, value), a codegen
-    hash partial+final aggregate at (keys, col_id, value) grain, a
-    window cumsum per (keys, col_id) for weighted-rank selection, and a
-    pivot back to one row per key group.  Versus ``F.median``'s
-    ObjectHashAggregate this trades the Java-serialized per-task
-    OpenHashMap percentile buffers (and the final single-task per-group
-    sort of every distinct value) for codegen aggregation and a
-    distributed sort — at the cost of two extra Exchanges of
-    value-grain rows.
-
-    Selection reproduces ``F.median``'s ``Percentile.getPercentile``
-    double math exactly: position = 0.5·(n−1) (exact in binary64),
-    lower/higher its floor/ceil, result
-    (higher−position)·v[lower] + (position−lower)·v[higher] — so where
-    both indices land on one distinct value the result is that value
-    bit-for-bit, and the even-n midpoint is fl((vl+vh)/2) on both
-    formulations.  Mean is Σ(value·count)/n — a different (but still
-    partition-order-free per distinct value) summation than ``F.avg``'s;
-    callers rounding to ≤6 dp are unaffected (verified against the
-    DuckDB oracles at every SF).
-    """
-    from pyspark.sql import Window
-
-    structs = F.array(
-        *[
-            F.struct(F.lit(i).alias("cid"), F.col(c).alias("v"))
-            for i, c in enumerate(stat_cols)
-        ]
-    )
-    g = (
-        df.select(*group_keys, F.explode(structs).alias("s"))
-        .groupBy(*group_keys, F.col("s.cid").alias("cid"), F.col("s.v").alias("v"))
-        .agg(F.count("*").alias("cnt"))
-    )
-    part = [*group_keys, "cid"]
-    w_run = (
-        Window.partitionBy(*part)
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy(*part)
-    g = (
-        g.withColumn("cum", F.sum("cnt").over(w_run))
-        .withColumn("n", F.sum("cnt").over(w_all))
-        .withColumn("wsum", F.sum(F.col("v") * F.col("cnt")).over(w_all))
-    )
-    pos = F.lit(0.5) * (F.col("n") - 1).cast("double")
-    lo = F.floor(pos)
-    hi = F.ceil(pos)
-    prev = F.col("cum") - F.col("cnt")
-    sel = (
-        g.withColumn("vl", F.when((prev <= lo) & (lo < F.col("cum")), F.col("v")))
-        .withColumn("vh", F.when((prev <= hi) & (hi < F.col("cum")), F.col("v")))
-        .filter(F.col("vl").isNotNull() | F.col("vh").isNotNull())
-        .groupBy(*part)
-        .agg(
-            F.max("vl").alias("vl"),
-            F.max("vh").alias("vh"),
-            F.first("n").alias("n"),
-            F.first("wsum").alias("wsum"),
-        )
-    )
-    posf = F.lit(0.5) * (F.col("n") - 1).cast("double")
-    lof = F.floor(posf).cast("double")
-    hif = F.ceil(posf).cast("double")
-    median = F.when(
-        lof == hif, F.col("vl")
-    ).otherwise((hif - posf) * F.col("vl") + (posf - lof) * F.col("vh"))
-    mean = F.col("wsum") / F.col("n").cast("double")
-    per_col = sel.select(
-        *group_keys,
-        "cid",
-        median.alias("__med"),
-        mean.alias("__mean"),
-    )
-    aggs = []
-    for i, c in enumerate(stat_cols):
-        aggs.append(
-            F.max(F.when(F.col("cid") == i, F.col("__med"))).alias(
-                f"__median__{c}"
-            )
-        )
-        aggs.append(
-            F.max(F.when(F.col("cid") == i, F.col("__mean"))).alias(
-                f"__mean__{c}"
-            )
-        )
-    return per_col.groupBy(*group_keys).agg(*aggs)
-
-
 def grouped_stats(
     df: DataFrame,
     group_keys: list[str],

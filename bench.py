@@ -3,32 +3,11 @@
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line.
 
-Each query executes to completion through the noop sink (full distributed
-compute, no driver-side collect) and is timed wall-clock.
-
-Methodology: one untimed warmup pass over the query list, then timed
-passes with the per-query MINIMUM reported (standard benchmark-harness
-practice, cf. JMH / spark-sql-perf).  The warmup amortizes first-touch
-costs that are environment noise, not plan cost — Python worker spawn,
-Arrow init, parquet footer reads on a cold page cache, codegen
-compilation — which on a cold VM can dominate the first execution of a
-query by 3-4× (measured: the mapInPandas pipeline query runs 14.9s cold /
-3.5s steady-state on a freshly booted host).
-
-SELF-CERTIFICATION (r4 verdict ask #4): the r4 committed artifact was
-taken under ~2-core background host load and read +17% vs r3 — a number
-that cost review time to exonerate.  The harness now (a) records
-``/proc/loadavg`` before and after, (b) AUTO-EXTENDS timed passes
-(min 2, cap 6) until the time-weighted second-best spread —
-(Σ second-best − Σ best) / Σ best across queries — is ≤ 5% AND (r10
-verdict ask #3) every individual query's two best observations agree
-within 12%, so the certificate is per-query, not just total-level;
-queries still spreading at the pass cap are named in
-``non_converged_queries`` instead of hiding inside a green total — and
-(c) emits the per-query spread between its two best observations — so a
-committed BENCH_r*.json carries the evidence that it is plan cost, not
-load noise (``converged: false`` + high loadavg = rerun on a quiet
-host).
+Each query executes to completion through the noop sink and is timed
+wall-clock; the loop, its warmup and convergence policy and the
+quiet-host gate live in ``aspep_etl_spark/measure.py``.  A committed
+result with ``converged: false`` or ``load_warning: true`` should be
+rerun on a quiet host before it is read as plan cost.
 """
 
 from __future__ import annotations
@@ -36,7 +15,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -49,11 +27,11 @@ BENCH_QUERIES = [
     "q5_region_revenue",
     "flagship_ratio_rank",
     "a1_grouped_median",
-    # r9: the approx-median headline slot is the SKETCH-ONLY pass (the
-    # 100 TB plan — one mergeable hash-agg); the r8 rank-count-audited
-    # `a1_grouped_median_approx` stays registry-green as its strong
-    # oracle twin but is no longer benchmarked (it pays for its own
-    # verification with a second full scan, 1.31 s vs 0.72 s at sf0.1).
+    # The approx-median slot is the sketch-only pass (the 100 TB plan: one
+    # mergeable hash-agg).  The rank-count-audited
+    # `a1_grouped_median_approx` stays in the registry as its oracle twin
+    # but is not benchmarked: it pays for its own verification with a
+    # second full scan.
     "a1_grouped_median_sketch",
     "w1_lag_deltas",
     "w3_rank_null_parity",
@@ -65,207 +43,47 @@ BENCH_QUERIES = [
     "docs_classifier_score",
     "dedup_embedding_cosine",
     "docs_dsir_weights",
-    # r8: the K-fold CV headline slot is the CAPPED sufficient-stats twin
-    # (the 100 TB path); the exact positional-fold `docs_nb_crossval`
-    # stays registry-green as its oracle twin (the dedup_ngram_jaccard /
-    # _capped precedent) but is no longer benchmarked.
+    # The K-fold CV slot is the capped sufficient-stats twin (the 100 TB
+    # path); the exact positional-fold `docs_nb_crossval` stays in the
+    # registry as its oracle twin.
     "docs_nb_crossval_capped",
 ]
 
 # Queries added to the headline set after round 3 — excluded from the
 # like-for-like r3_queryset_total subtotal.
 _POST_R3_QUERIES = {
-    "a1_grouped_median_sketch",  # r9 slot split of the r4-added approx entry
+    "a1_grouped_median_sketch",
     "docs_classifier_score",
-    "dedup_embedding_cosine",  # r5: BLAS filter-refine showcase
-    "docs_dsir_weights",  # r6: scan-bound data-selection showcase
-    "docs_nb_crossval_capped",  # r7: vocab-capped sufficient-stats CV scale twin
+    "dedup_embedding_cosine",
+    "docs_dsir_weights",
+    "docs_nb_crossval_capped",
 }
 
 
+def report(gate: dict, result: dict) -> dict:
+    from aspep_etl_spark import measure
+
+    r3_subtotal = sum(
+        v for k, v in result["queries"].items() if k not in _POST_R3_QUERIES
+    )
+    return measure.report(
+        "headline_queries_total",
+        gate,
+        result,
+        SF_DIR,
+        r3_queryset_total=round(r3_subtotal, 3),
+    )
+
+
 def main() -> None:
-    from aspep_etl_spark.cache import free_cached_blocks
-    from aspep_etl_spark.plans.contract import SPARK_QUERIES
+    from aspep_etl_spark import measure
     from aspep_etl_spark.session import get_spark
 
-    # 128 MB input splits (the engine default) are right for cluster-scale
-    # scans but leave a ~25 MB local bench file as one task; small splits
-    # let local[N] parallelize the scan stage.
-    spark = get_spark(
-        app_name="aspep-etl-spark-bench",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": os.environ.get(
-                "SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"
-            ),
-            "spark.sql.files.openCostInBytes": "1m",
-        },
-    )
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    observations: dict[str, list[float]] = {q: [] for q in BENCH_QUERIES}
-    pass_totals: list[float] = []
-
-    def loadavg() -> list[float]:
-        try:
-            with open("/proc/loadavg") as f:
-                return [float(x) for x in f.read().split()[:3]]
-        except OSError:  # non-Linux fallback
-            return []
-
-    # QUIET-WINDOW GATE (r9 verdict ask #6): the r9 driver artifact ran at
-    # loadavg 10.8 and burned a full quiet-host A/B just to prove the +15-34%
-    # was noise.  Background load on this 32-core box makes artifacts
-    # uninterpretable, so before timing anything the harness waits (up to
-    # SPARK_GRAFT_BENCH_QUIET_WAIT_SEC, default 180 s — the 1-min loadavg
-    # decays with a ~1 min time constant, so a burst from a preceding test
-    # run drains within that budget) for the 1-min loadavg to drop under
-    # SPARK_GRAFT_BENCH_LOAD_MAX (default 2.0).  If it never quiets, the
-    # run proceeds but the artifact carries ``load_warning: true`` so a
-    # reviewer knows to discount it rather than re-derive that conclusion.
-    load_max = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_MAX", "2.0"))
-    quiet_budget = float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_WAIT_SEC", "180"))
-    waited = 0.0
-    while loadavg() and loadavg()[0] > load_max and waited < quiet_budget:
-        time.sleep(10.0)
-        waited += 10.0
-    load_before = loadavg()
-    load_warning = bool(load_before) and load_before[0] > load_max
-    if load_warning:
-        print(
-            f"WARNING: loadavg {load_before[0]} > {load_max} after waiting "
-            f"{waited:.0f}s — timings will include background-load noise",
-            file=sys.stderr,
-        )
-
-    # ADAPTIVE untimed warmup (r9 verdict ask #3): the measured cause of
-    # aspep_extended_pipeline's 3.1-5.2 s day-range is JIT warm-up — the
-    # ~150-column generated codegen methods cost ~35 s of C2 compile time
-    # on first execution, decaying over 5-8 runs to steady state (PERF.md
-    # "the day-range named"), so ONE warmup pass left the min-of-passes
-    # stranded partway down a load-dependent decay curve.  Each query now
-    # warms until two consecutive warmup runs agree within 12% (cap 4);
-    # cheap queries stabilize on the second run, the pipeline query takes
-    # the cap and arrives at the timed passes JIT-settled.
-    try:
-        jit = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
-    except Exception:  # noqa: BLE001 — telemetry only
-        jit = None
-    warmup_runs: dict[str, int] = {}
-    for name in BENCH_QUERIES:
-        prev = None
-        for i in range(int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP_MAX", "4"))):
-            t0 = time.time()
-            SPARK_QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            free_cached_blocks(spark)
-            warmup_runs[name] = i + 1
-            if prev is not None and abs(dt - prev) <= 0.12 * prev:
-                break
-            prev = dt
-
-    # Auto-extending timed passes: since the reported number is the
-    # per-query MINIMUM, the certificate is that each minimum is backed by
-    # a second independent observation — stop when the TIME-WEIGHTED
-    # second-best spread (Σ second_best − Σ best) / Σ best is ≤ 5%.
-    # (Per-pass totals are recorded but NOT the criterion: a total mixes
-    # all queries, so one noisy query would veto convergence forever.)
-    # Cap at SPARK_GRAFT_BENCH_MAX_PASSES (default 6).
-    min_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    max_passes = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_PASSES", "6"))
-    converged = False
-    jit_ms_per_pass: list[int] = []
-    for p in range(max_passes):
-        pass_total = 0.0
-        jit0 = jit.getTotalCompilationTime() if jit is not None else 0
-        for name in BENCH_QUERIES:
-            t0 = time.time()
-            SPARK_QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t0, 3)
-            observations[name].append(dt)
-            pass_total += dt
-            free_cached_blocks(spark)
-        pass_totals.append(round(pass_total, 3))
-        if jit is not None:
-            jit_ms_per_pass.append(int(jit.getTotalCompilationTime() - jit0))
-        # convergence needs a second observation per query — with
-        # SPARK_GRAFT_BENCH_PASSES=1 the check is skipped (converged=False)
-        if p + 1 >= max(min_passes, 2):
-            best = sum(sorted(o)[0] for o in observations.values())
-            second = sum(sorted(o)[1] for o in observations.values())
-            total_ok = best > 0 and (second - best) <= 0.05 * best
-            # PER-QUERY certificate (r10 verdict ask #3): the total-level
-            # gate alone let a `converged: true` artifact carry a 15.8%
-            # single-query spread (a1_grouped_median, r10) — fine for the
-            # headline sum, misleading for anyone reading one query's
-            # round-over-round delta.  Every query's two best observations
-            # must also agree within 12% (the warmup tolerance); queries
-            # still spreading at the pass cap are named in
-            # ``non_converged_queries`` rather than silently averaged.
-            per_query_ok = all(
-                sorted(o)[1] - sorted(o)[0] <= 0.12 * sorted(o)[0]
-                for o in observations.values()
-                if sorted(o)[0] > 0
-            )
-            converged = total_ok and per_query_ok
-            if converged:
-                break
-
-    timings = {q: min(obs) for q, obs in observations.items()}
-    # PASS-COUNT-NEUTRAL companion numbers (r11 verdict ask #6): the
-    # reported metric stays min-of-all-passes, but because convergence can
-    # extend one round's run to more passes than another's, min-of-all is
-    # mildly flattered by extra sampling.  ``min_of_first_2`` uses the same
-    # pass count every run, so round-over-round deltas read off it are
-    # immune to pass asymmetry; ``observations`` carries the raw per-pass
-    # numbers so any other statistic can be recomputed later.  Additions
-    # only — no existing field changes.
-    min_of_first_2 = {q: min(obs[:2]) for q, obs in observations.items()}
-    # per-query spread between the two best observations: ≤ ~5% means the
-    # reported minimum is a stable number, not a lucky outlier
-    spread_pct = {
-        q: round(100.0 * (sorted(obs)[1] - sorted(obs)[0]) / sorted(obs)[0], 1)
-        if len(obs) >= 2 and sorted(obs)[0] > 0
-        else None
-        for q, obs in observations.items()
-    }
-    non_converged_queries = sorted(
-        q for q, s in spread_pct.items() if s is not None and s > 12.0
-    )
-    load_after = loadavg()
-    total = round(sum(timings.values()), 3)
-    # like-for-like vs rounds ≤3: a1_grouped_median_approx was ADDED to the
-    # headline set in r4, so the raw total is not comparable across rounds —
-    # this subtotal is the r3 query set under the current code
-    r3_subtotal = round(
-        sum(v for k, v in timings.items() if k not in _POST_R3_QUERIES), 3
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "queries_min_of_first_2": min_of_first_2,
-                "total_min_of_first_2": round(sum(min_of_first_2.values()), 3),
-                "observations": observations,
-                "r3_queryset_total": r3_subtotal,
-                "warmup": True,
-                "warmup_runs": warmup_runs,
-                "jit_ms_per_pass": jit_ms_per_pass,
-                "passes": len(pass_totals),
-                "pass_totals": pass_totals,
-                "converged": converged,
-                "query_spread_pct": spread_pct,
-                "non_converged_queries": non_converged_queries,
-                "loadavg_before": load_before,
-                "loadavg_after": load_after,
-                "load_threshold": load_max,
-                "quiet_wait_sec": waited,
-                "load_warning": load_warning,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            }
-        )
-    )
+    spark = get_spark(app_name="aspep-etl-spark-bench", extra_conf=measure.SPARK_CONF)
+    gate = measure.quiet_gate()
+    run = measure.spark_runner(spark, SF_DIR)
+    result = measure.measure(run, BENCH_QUERIES, measure.jit_clock(spark))
+    print(json.dumps(report(gate, result)))
     spark.stop()
 
 

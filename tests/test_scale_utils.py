@@ -1,4 +1,4 @@
-"""Scale utilities: salted aggregation/join equivalence, dynamic-partition
+"""Scale utilities: salted aggregation equivalence, dynamic-partition
 upsert idempotence, and bucketed co-located joins (no-shuffle plan)."""
 
 from __future__ import annotations
@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from aspep_etl_spark.operators.skew import salted_join, salted_sum_count
+from aspep_etl_spark.operators.skew import salted_sum_count
 from aspep_etl_spark.sinks.publish import upsert_year_partitions, write_canonical_store
 
 
@@ -23,16 +23,6 @@ def test_salted_sum_count_matches_plain(spark, sf_dir):
     for k in p:
         assert s[k][1] == p[k][1]
         assert abs(s[k][0] - p[k][0]) < 1e-6 * max(1.0, abs(p[k][0]))
-
-
-def test_salted_join_matches_plain(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    plain = orders.join(cust, "o_custkey").groupBy("c_mktsegment").count()
-    salted = salted_join(orders, cust, "o_custkey", n_salts=4).groupBy("c_mktsegment").count()
-    assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in salted.collect()}
 
 
 def test_upsert_year_partitions_idempotent_refresh(spark, tmp_path):

@@ -1,15 +1,17 @@
 #!/usr/bin/env python
-"""Scale-tier bench: times the dedup / ANN / iterative / sketch queries
-(the ones whose SCALING is the interesting property — candidate-pair
-growth, iteration costs, sketch merges) at ``$SPARK_GRAFT_SF_DIR``.
+"""Scale-tier bench: times the dedup / ANN / iterative / sketch /
+streaming queries — the ones whose scaling is the interesting property
+(candidate-pair growth, iteration costs, sketch merges, state growth) —
+at ``$SPARK_GRAFT_SF_DIR`` and prints one JSON line.
 
-Same methodology as bench.py (untimed warmup, min over passes, loadavg
-recorded); one JSON line.  Used for the sf0.1 → sf1 dress-rehearsal
-curve (r4 verdict ask #6): a map-shaped or bucketed query should scale
-~linearly in rows; superlinear growth flags a candidate-generation
-blow-up the skew tests didn't catch.
+Same loop and policy as bench.py (``aspep_etl_spark/measure.py``).  After
+the timed passes, an untimed ``count()`` per query records ``rows_out``,
+so ``tools/bench_compare.py`` can judge pair emitters on work per
+emitted row.  A map-shaped or bucketed query should scale ~linearly in
+rows; superlinear growth flags a candidate-generation blow-up.
 
-Usage: SPARK_GRAFT_SF_DIR=... python tools/bench_tier.py
+Usage: SPARK_GRAFT_SF_DIR=... python tools/bench_tier.py [query ...]
+(no names: the whole tier).
 """
 
 from __future__ import annotations
@@ -17,7 +19,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -41,30 +42,30 @@ TIER_QUERIES = [
     "orders_price_deciles_scaled",
     "customer_abc_analysis_scaled",
     "customer_rfm_segments_scaled",
-    # round 6 additions: new ANN variants, tokenizer training, graph ops,
-    # posting-list novelty — each with its own candidate/iteration scaling
+    # ANN variants, tokenizer training, graph ops, posting-list novelty —
+    # each with its own candidate/iteration scaling
     "ann_pq_adc_topk",
     "ann_mmr_topk",
     "docs_bpe_merges",
     "docs_ngram_novelty",
     "graph_weighted_sssp",
     "graph_hits",
-    # round-6 batch 3: data-selection scan, in-cluster quadratic screen,
-    # ×40 replicate expansion, pair fan-out, LPA + modularity aggs
+    # data-selection scan, in-cluster quadratic screen, x40 replicate
+    # expansion, pair fan-out, LPA + modularity aggs
     "docs_dsir_weights",
     "dedup_semantic",
     "events_bootstrap_ci",
     "docs_pmi_pairs",
     "graph_modularity",
     "events_agms_join_size",
-    # round-6 batch 4: bounded-state distinct sketch + rollup-by-merge,
-    # blocked record linkage (pair fan-out), bucketed-join layout
+    # bounded-state distinct sketch + rollup-by-merge, blocked record
+    # linkage (pair fan-out), bucketed-join layout
     "events_hll_distinct",
     "events_hll_daily_rollup",
     "customer_record_linkage",
     "layout_bucketed_join",
-    # round-6 batch 5/6: GD training rounds, basket pair fan-out,
-    # tokenize-once blocklist probe, one-scan K-fold CV, scoring scans
+    # GD training rounds, basket pair fan-out, tokenize-once blocklist
+    # probe, one-scan K-fold CV, scoring scans
     "docs_logreg_train",
     "items_cooccurrence_topk",
     "docs_blocklist_phrases",
@@ -74,9 +75,8 @@ TIER_QUERIES = [
     "embedding_jl_audit",
     "lineitem_reconciliation",
     "components_incremental",
-    # round 7: the full (now-oracled) ASPEP chain, the linkage→ER chain
-    # and streaming MV maintenance (r6 verdict ask #9: deepen the curve),
-    # plus the three r7 scale-swap twins
+    # the full ASPEP chain, the linkage -> ER chain, streaming MV
+    # maintenance and three capped scale twins
     "aspep_extended_pipeline",
     "linkage_entity_clusters",
     "streaming_mv_maintenance",
@@ -84,19 +84,14 @@ TIER_QUERIES = [
     "docs_source_kl_drift_capped",
     "dedup_ngram_jaccard_capped",
     "mv_join_incremental",
-    # round 8 (r7 verdict ask #7): the rest of the incremental-MV
-    # triangle, and streaming MV under a 10× BATCH COUNT (state/merge
-    # growth, not just data growth)
+    # the rest of the incremental-MV triangle, and streaming MV under a
+    # 10x batch count (state/merge growth, not just data growth)
     "mv_join_retraction",
     "mv_join_dim_update",
     "streaming_mv_many_batches",
-    # round 12 (r11 verdict ask #8, streaming tier visibility): the
-    # non-MV streaming maintenance paths — stateful sessionize, the two
-    # watermarked dedup shapes, per-key rate limiting, the watermarked
-    # stream-stream join, sketch maintenance and micro-batch rollup —
-    # were correctness-swept but never tier-benched, so their scaling
-    # cost was invisible.  Each drives the real streaming engine
-    # (file-stream readers, checkpoints, state store) per micro-batch.
+    # the non-MV streaming maintenance paths; each drives the real
+    # streaming engine (file-stream readers, checkpoints, state store)
+    # per micro-batch
     "streaming_sessionize",
     "streaming_debounce",
     "streaming_dedup",
@@ -108,120 +103,26 @@ TIER_QUERIES = [
 
 
 def main() -> None:
+    from aspep_etl_spark import measure
     from aspep_etl_spark.cache import free_cached_blocks
     from aspep_etl_spark.plans.contract import SPARK_QUERIES
     from aspep_etl_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="aspep-etl-spark-bench-tier",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": os.environ.get(
-                "SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"
-            ),
-            "spark.sql.files.openCostInBytes": "1m",
-        },
-    )
-    names = [n for n in TIER_QUERIES if n in SPARK_QUERIES]
+    names = sys.argv[1:] or TIER_QUERIES
+    unknown = [n for n in names if n not in SPARK_QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown query name(s): {', '.join(unknown)}")
 
-    def loadavg():
-        try:
-            with open("/proc/loadavg") as f:
-                return [float(x) for x in f.read().split()[:3]]
-        except OSError:
-            return []
-
-    load_before = loadavg()
-    observations: dict[str, list[float]] = {q: [] for q in names}
-    rows_out: dict[str, int] = {}
-
-    def run_pass(record: bool) -> None:
-        for name in names:
-            t0 = time.time()
-            # the warmup execution is PLAN-IDENTICAL to the timed passes
-            # (same noop write): Catalyst prunes projected-only expensive
-            # expressions under count(), so a count()-based warmup would
-            # skip the codegen/Python-worker/expression paths the timed
-            # passes exercise and the first timed pass would absorb the
-            # cold start
-            SPARK_QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.time() - t0
-            free_cached_blocks(spark)
-            if record:
-                observations[name].append(round(dt, 3))
-                continue
-            # ADAPTIVE warmup (the r10 JIT finding, PERF.md): large
-            # codegen units re-profile over the first several runs, so
-            # repeat until two consecutive warmup runs agree within 12%
-            # (cap 3) — timed passes then start JIT-settled
-            prev = dt
-            for _ in range(2):
-                t0 = time.time()
-                SPARK_QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.time() - t0
-                free_cached_blocks(spark)
-                if abs(dt - prev) <= 0.12 * prev:
-                    break
-                prev = dt
-            if name not in rows_out:
-                # output-size census on the warmup pass only, via a
-                # separate cheap count(): emitted row counts let the
-                # artifact normalize wall-clock by output (pair-emitting
-                # queries legitimately grow output ~k² under tiled
-                # corpora — sec/row is the scaling metric, see
-                # make_sf1_artifact.py)
-                rows_out[name] = SPARK_QUERIES[name](spark, SF_DIR).count()
-                free_cached_blocks(spark)
-
-    # Same self-certification as bench.py: the reported number is the
-    # per-query MINIMUM; auto-extend timed passes until the time-weighted
-    # second-best spread is ≤ 5% (each minimum backed by an independent
-    # observation), capped at SPARK_GRAFT_BENCH_MAX_PASSES.
-    min_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    max_passes = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_PASSES", "5"))
-    run_pass(record=False)  # warmup
-    converged = False
-    n_passes = 0
-    for p in range(max_passes):
-        run_pass(record=True)
-        n_passes = p + 1
-        if n_passes >= max(min_passes, 2):
-            best = sum(sorted(o)[0] for o in observations.values())
-            second = sum(sorted(o)[1] for o in observations.values())
-            converged = best > 0 and (second - best) <= 0.05 * best
-            if converged:
-                break
-    timings = {q: min(o) for q, o in observations.items()}
-    # per-query spread between the two best observations (bench.py's
-    # self-certification): a non-converged run names its noisy queries
-    spread_pct = {
-        q: round(100.0 * (sorted(o)[1] - sorted(o)[0]) / sorted(o)[0], 1)
-        if len(o) >= 2 and sorted(o)[0] > 0
-        else None
-        for q, o in observations.items()
-    }
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    print(
-        json.dumps(
-            {
-                "metric": "scale_tier_total",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": timings,
-                "rows_out": rows_out,
-                "query_spread_pct": spread_pct,
-                "warmup": True,
-                "passes": n_passes,
-                "converged": converged,
-                "loadavg_before": load_before,
-                "loadavg_after": loadavg(),
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            }
-        )
-    )
+    spark = get_spark(app_name="aspep-etl-spark-bench-tier", extra_conf=measure.SPARK_CONF)
+    gate = measure.quiet_gate()
+    run = measure.spark_runner(spark, SF_DIR)
+    result = measure.measure(run, names, measure.jit_clock(spark))
+    rows_out = {}
+    for name in names:
+        rows_out[name] = SPARK_QUERIES[name](spark, SF_DIR).count()
+        free_cached_blocks(spark)
+    line = measure.report("scale_tier_total", gate, result, SF_DIR, rows_out=rows_out)
+    print(json.dumps(line))
     spark.stop()
 
 
