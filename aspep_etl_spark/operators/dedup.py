@@ -19,6 +19,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.registry import fan_for_compute
+from .candidates import PAIR_ENDS, _fan, attach, bucket_pairs, dedup_pairs, posting_pairs, verify
+from .similarity import (
+    assign_buckets_gemm, collect_leader_matrix, cosine_expr, gemm_screen_pairs, with_norm,
+)
 from .text import WORD_RE
 
 
@@ -123,7 +127,6 @@ def jaccard_pairs(
     # and MATERIALIZE it (see docstring): it feeds both the size lookup
     # and the posting-list build.
     arrs = shingle_arrays(fan_for_compute(df, min_bytes=0), id_col, text_col, n).persist()
-    sizes = arrs.select(F.col(id_col), F.col("n_shingles"))  # map-side, no agg
     sh = arrs.select(F.col(id_col), F.explode("sh_arr").alias("shingle"))
 
     # Only shingles shared by ≥2 docs can produce a pair — pre-aggregating
@@ -137,57 +140,15 @@ def jaccard_pairs(
         # corpus together; dropping them bounds pair fan-out at some recall
         # cost.
         posting = posting.filter(F.size("ids") <= max_shingle_df)
-    # Sort ONCE per posting before the pair transform — an `array_sort`
-    # inlined in the lambda re-sorts per element, O(k² log k) on the
-    # stopword-shingle postings the frequency cap exists for.
-    # _fan: the posting frame is byte-tiny but each row EXPLODES into
-    # O(df²) pairs feeding the intersection agg — without the explicit
-    # numbered repartition AQE coalesces it to ~2 tasks (sf1 rehearsal).
-    pairs = (
-        _fan(posting, "shingle").select(F.array_sort("ids").alias("ids"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-    )
+    pairs = posting_pairs(posting, "shingle", "ids")
     inter = pairs.groupBy("id_a", "id_b").agg(F.count("*").alias("n_common"))
-
     # Size lookups: one row per doc — NOT force-broadcast (at corpus scale
     # that's billions of rows); AQE converts to broadcast when small.
-    sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
-    return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    jaccard = F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4)
+    return verify(
+        inter, (arrs, arrs), id_col, PAIR_ENDS, {"n_shingles": "n"},
+        {"jaccard": jaccard}, threshold, ["id_a", "id_b", "jaccard"],
     )
-
-
-def _fan(df: DataFrame, *cols: str) -> DataFrame:
-    """Force a candidate-pair frame onto full parallelism BEFORE a
-    compute-heavy verify join.  AQE coalesces shuffle partitions by
-    BYTE size — a bare-(id_a, id_b) candidate list is a few MB even
-    when each row expands into an interpreted 64-element cosine/Jaccard
-    fold after the vector/array attach, so AQE happily funnels millions
-    of folds through 2 tasks (the sf1 rehearsal measured two 1100-second
-    tasks in `dedup_embedding_cosine`'s verify stage, ~16× the whole
-    query's budget).  An explicit numbered repartition is exempt from
-    AQE coalescing and restores the cluster's parallelism at the cost
-    of one cheap exchange of bare ids."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par, *[F.col(c) for c in cols])
 
 
 def minhash_signatures(
@@ -281,34 +242,18 @@ def minhash_lsh_pairs(
     # from several bands would otherwise drag two ~1 KB signature arrays
     # through the dedup's shuffle once per band.  Dedup on (id_a, id_b)
     # first, then re-attach each signature exactly once.
-    left = bands_long.select(F.col(id_col).alias("id_a"), "band", "band_hash")
-    right = bands_long.select(F.col(id_col).alias("id_b"), "band", "band_hash")
-    # _fan: band rows are bytes-tiny, the bucket self-join output is not —
-    # keep the join + dedup off AQE's ~2-task coalesce (sf1 rehearsal)
-    cand_pairs = (
-        _fan(left, "band", "band_hash").join(right, ["band", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
+    cand = dedup_pairs(bucket_pairs(bands_long, id_col, ["band", "band_hash"]))
     sigs = banded.select(
         id_col, F.array(*[F.col(f"mh_{i}") for i in range(num_perm)]).alias("sig")
     )
-    # dedup rides the _fan fence's numbered id_a exchange (subset-key
-    # partitioning satisfies the aggregate) — one exchange, not the r11
-    # distinct + fence back-to-back pair; signature-agreement folds
-    # downstream are per-pair CPU, so the fence stays load-bearing
-    cand_ids = _fan(cand_pairs, "id_a").dropDuplicates(["id_a", "id_b"])
-    cand = cand_ids.join(
-        sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
-    ).join(sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
     agree = F.expr(
         "aggregate(zip_with(sig_a, sig_b, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
         " 0, (acc, v) -> acc + v)"
     )
-    return (
-        cand.withColumn("est_jaccard", F.round(agree / F.lit(num_perm), 4))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
+    return verify(
+        cand, (sigs, sigs), id_col, PAIR_ENDS, {"sig": "sig"},
+        {"est_jaccard": F.round(agree / F.lit(num_perm), 4)}, threshold,
+        ["id_a", "id_b", "est_jaccard"],
     )
 
 
@@ -352,8 +297,6 @@ def embedding_near_dup_pairs(
     Brute-force all-pairs baseline — O(n²), small corpora and oracle checks
     ONLY.  The scale path is ``embedding_near_dup_pairs_bucketed`` below.
     """
-    from .similarity import with_norm, cosine_expr
-
     v = with_norm(fan_for_compute(df, min_bytes=0), id_col, vec_col)
     a = v.select(F.col(id_col).alias("id_a"), F.col("vec").alias("vec_a"), F.col("norm").alias("norm_a"))
     b = v.select(F.col(id_col).alias("id_b"), F.col("vec").alias("vec_b"), F.col("norm").alias("norm_b"))
@@ -450,8 +393,6 @@ def embedding_near_dup_pairs_bucketed(
     callers should sweep with ``cache.free_cached_blocks`` after
     materializing the result, as elsewhere in this module.
     """
-    from .similarity import with_norm, cosine_expr
-
     if collapse_exact:
         # self-cosine computed INTO the persisted frame so the explodes
         # below duplicate a cached scalar instead of re-evaluating the
@@ -499,23 +440,12 @@ def embedding_near_dup_pairs_bucketed(
             F.element_at("__ids", 1).alias("__rep"), F.explode("__ids").alias("__m")
         )
         # rep_pairs is a bare (id,id,cosine) stream that the joins expand
-        # by multiplicity² — AQE would coalesce it to 1-2 tasks by BYTES
-        # (the documented trap); the explicit numbered repartition keeps
-        # the expansion parallel
-        cross = (
-            _fan(rep_pairs, "id_a").join(
-                members.select(F.col("__rep").alias("id_a"), F.col("__m").alias("__a")),
-                "id_a",
-            )
-            .join(
-                members.select(F.col("__rep").alias("id_b"), F.col("__m").alias("__b")),
-                "id_b",
-            )
-            .select(
-                F.least("__a", "__b").alias("id_a"),
-                F.greatest("__a", "__b").alias("id_b"),
-                "cosine",
-            )
+        # by multiplicity² — fenced like any candidate stream
+        cross = attach(
+            _fan(rep_pairs, "id_a"), (members, members), "__rep", {"id_a": "a", "id_b": "b"},
+            {"__m": "__"},
+        ).select(
+            F.least("__a", "__b").alias("id_a"), F.greatest("__a", "__b").alias("id_b"), "cosine"
         )
         within = (
             groups.filter(
@@ -553,18 +483,8 @@ def embedding_near_dup_pairs_bucketed(
         )
     )
     if screen == "gemm":
-        from .similarity import (
-            assign_buckets_gemm,
-            collect_leader_matrix,
-            gemm_screen_pairs,
-        )
-
         lids, lmat = collect_leader_matrix(leaders, "bucket", "vec_l")
         assign = assign_buckets_gemm(v, lids, lmat, id_col, n_assign)
-        # gemm_screen_pairs already fans the candidate stream onto a
-        # NUMBERED id_a hash exchange and dedups on it — no second
-        # exchange before the verify joins (r12: one Exchange where the
-        # r11 plan had distinct's + the fence's back-to-back)
         cand = gemm_screen_pairs(assign, v, id_col, threshold=threshold)
     else:
         scored = v.crossJoin(F.broadcast(leaders)).withColumn(
@@ -576,26 +496,11 @@ def embedding_near_dup_pairs_bucketed(
             .filter(F.col("__r") <= n_assign)
             .select(id_col, "bucket")
         )
-        pairs = (
-            _fan(assign.select(F.col(id_col).alias("id_a"), "bucket"), "bucket")
-            .join(assign.select(F.col(id_col).alias("id_b"), "bucket"), "bucket")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        # the across-bucket dedup RIDES the _fan fence's numbered id_a
-        # exchange (subset-key partitioning satisfies the aggregate's
-        # clustered distribution) — one exchange instead of the r11
-        # distinct + fence pair, and strictly fewer shuffled bytes
-        # (cross-bucket duplicates never met map-side anyway)
-        cand = _fan(pairs, "id_a").dropDuplicates(["id_a", "id_b"])
-    a = v.select(F.col(id_col).alias("id_a"), F.col("vec").alias("vec_a"), F.col("norm").alias("norm_a"))
-    b = v.select(F.col(id_col).alias("id_b"), F.col("vec").alias("vec_b"), F.col("norm").alias("norm_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("cosine", F.round(cosine_expr("vec_a", "vec_b", "norm_a", "norm_b"), 4))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+        cand = dedup_pairs(bucket_pairs(assign, id_col, ["bucket"]))
+    return verify(
+        cand, (v, v), id_col, PAIR_ENDS, {"vec": "vec", "norm": "norm"},
+        {"cosine": F.round(cosine_expr("vec_a", "vec_b", "norm_a", "norm_b"), 4)},
+        threshold, ["id_a", "id_b", "cosine"],
     )
 
 
@@ -857,16 +762,10 @@ def incremental_jaccard_matches(
         .agg(F.count("*").alias("n_common"))
     )
 
-    sz_new = d_arr.select(F.col(id_col).alias("__new_id"), F.col("n_shingles").alias("n_new"))
-    sz_old = c_arr.select(F.col(id_col).alias("__old_id"), F.col("n_shingles").alias("n_old"))
-    scored = (
-        inter.join(sz_new, "__new_id")
-        .join(sz_old, "__old_id")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_common") / (F.col("n_new") + F.col("n_old") - F.col("n_common")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    jaccard = F.round(F.col("n_common") / (F.col("n_new") + F.col("n_old") - F.col("n_common")), 4)
+    scored = verify(
+        inter, (d_arr, c_arr), id_col, {"__new_id": "_new", "__old_id": "_old"},
+        {"n_shingles": "n"}, {"jaccard": jaccard}, threshold, ["__old_id", "__new_id", "jaccard"],
     )
     w = Window.partitionBy("__new_id").orderBy(F.desc("jaccard"), F.asc("__old_id"))
     return (
@@ -942,42 +841,14 @@ def prefix_filter_pairs(
         .agg(F.collect_list(id_col).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    cand = (
-        _fan(posting, "shingle")  # posting rows explode into O(df²) pairs
-        .select(F.array_sort("ids").alias("ids"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-    )
-    # dedup rides the _fan fence's numbered id_a exchange (subset-key
-    # partitioning satisfies the aggregate) — one exchange, not two;
-    # per-pair array_intersect downstream is CPU, not bytes
-    cand = _fan(cand, "id_a").dropDuplicates(["id_a", "id_b"])
+    cand = dedup_pairs(posting_pairs(posting, "shingle", "ids"))
     # exact verification against the persisted full arrays (candidate-
     # bounded: two hash joins on the doc id, no re-shingling)
-    fa = arrs.select(
-        F.col(id_col).alias("id_a"), F.col("sh_arr").alias("__sa"), F.col("n_shingles").alias("n_a")
-    )
-    fb = arrs.select(
-        F.col(id_col).alias("id_b"), F.col("sh_arr").alias("__sb"), F.col("n_shingles").alias("n_b")
-    )
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    return (
-        cand.join(fa, "id_a")
-        .join(fb, "id_b")
-        .withColumn("__nc", inter)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("__nc") / (F.col("n_a") + F.col("n_b") - F.col("__nc")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    nc = F.size(F.array_intersect("__s_a", "__s_b"))
+    jaccard = F.round(F.col("__nc") / (F.col("n_a") + F.col("n_b") - F.col("__nc")), 4)
+    return verify(
+        cand, (arrs, arrs), id_col, PAIR_ENDS, {"sh_arr": "__s", "n_shingles": "n"},
+        {"__nc": nc, "jaccard": jaccard}, threshold, ["id_a", "id_b", "jaccard"],
     )
 
 
@@ -1011,6 +882,8 @@ def sorted_neighborhood_pairs(
     """
     from .global_order import global_row_number
 
+    if window < 2:
+        raise ValueError(f"sorted_neighborhood_pairs: window={window}, must be >= 2")
     key = F.substring(
         F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", " "), 1, key_chars
     )

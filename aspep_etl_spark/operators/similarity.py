@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .candidates import attach, dedup_pairs
+
 
 def _dot(a: str, b: str) -> Column:
     return F.expr(
@@ -323,7 +325,7 @@ def collect_leader_matrix(leaders: DataFrame, bucket_col: str, vec_col: str):
 
     rows = leaders.select(bucket_col, vec_col).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]) if rows else np.empty((0, 0))
     order = np.argsort(ids)
     return ids[order], mat[order]
 
@@ -406,22 +408,9 @@ def gemm_screen_pairs(
     ``block_rows`` row-blocks so a hot bucket of k vectors peaks at
     O(block_rows·k) floats, not k².  Zero-norm rows yield NaN sims and
     screen out.  Output: bare (id_a < id_b), de-duplicated across
-    buckets AND already fanned to full parallelism on a NUMBERED id_a
-    hash exchange (the ``_fan`` fence, see ``operators/dedup.py``) —
+    buckets on the numbered id_a fence (``candidates.dedup_pairs``) —
     feed straight to the exact fold for refinement, no further
     repartition needed.
-
-    The across-bucket dedup RIDES that fan exchange instead of paying
-    its own: hash partitioning on ``id_a`` co-locates every copy of an
-    (id_a, id_b) pair (subset-key partitioning satisfies the
-    aggregate's clustered distribution), so the planner elides the
-    dedup's exchange — one shuffle of the candidate stream where the
-    r11 plan had two back-to-back (distinct's ENSURE_REQUIREMENTS
-    exchange + the caller's REPARTITION_BY_NUM fence), and the shuffle
-    now happens before dedup, which is strictly fewer bytes than the
-    old partial-dedup + dedup double shuffle (cross-bucket duplicates
-    land in different map tasks, so map-side partial dedup caught
-    ~nothing).
 
     The default ``margin`` is NOT a bare ulp guard: the refine filter
     (and the DuckDB oracle) accept ``round(cosine, 4) >= threshold``,
@@ -460,9 +449,7 @@ def gemm_screen_pairs(
             {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
         )
 
-    pairs = joined.groupBy(bucket_col).applyInPandas(fn, "id_a long, id_b long")
-    par = pairs.sparkSession.sparkContext.defaultParallelism
-    return pairs.repartition(par, F.col("id_a")).dropDuplicates(["id_a", "id_b"])
+    return dedup_pairs(joined.groupBy(bucket_col).applyInPandas(fn, "id_a long, id_b long"))
 
 
 def pq_adc_topk(
@@ -658,13 +645,9 @@ def mmr_topk(
     cv = with_norm(corpus, id_col, vec_col)
     a = rel.select("query_id", F.col("neighbor_id").alias("a"))
     b = rel.select("query_id", F.col("neighbor_id").alias("b"))
-    va = cv.withColumnsRenamed({id_col: "a", "vec": "vec_a", "norm": "norm_a"})
-    vb = cv.withColumnsRenamed({id_col: "b", "vec": "vec_b", "norm": "norm_b"})
+    pool = a.join(b, "query_id").filter(F.col("a") != F.col("b"))
     pair = (
-        a.join(b, "query_id")
-        .filter(F.col("a") != F.col("b"))
-        .join(va, "a")
-        .join(vb, "b")
+        attach(pool, (cv, cv), id_col, {"a": "_a", "b": "_b"}, {"vec": "vec", "norm": "norm"})
         .withColumn("sim", F.round(cosine_expr("vec_a", "vec_b", "norm_a", "norm_b"), 4))
         .select("query_id", "a", "b", "sim")
         .persist()

@@ -246,6 +246,7 @@ def dedup_semantic(spark, sf_dir):
     grows with n (√n like ``canopy_leader_count``), which bounds
     cluster sizes — fixed k = 4 here keeps the oracle's unrolled Lloyd
     chain small."""
+    from ..operators.candidates import PAIR_ENDS, verify
     from ..operators.clustering import lloyd_kmeans_assign, seeded_label_init
     from ..operators.similarity import cosine_expr, gemm_screen_pairs, with_norm
 
@@ -255,34 +256,14 @@ def dedup_semantic(spark, sf_dir):
         emb, "vec_id", "embedding", init, iters=_SEM_ITERS, round_dp=6
     ).select("vec_id", "cluster")
     v = with_norm(emb, "vec_id", "embedding")
-    cand = gemm_screen_pairs(
-        assigned.select("vec_id", F.col("cluster").alias("bucket")),
-        v,
-        "vec_id",
-        threshold=_SEM_THRESHOLD,
-    )
-    a = v.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("vec").alias("vec_a"),
-        F.col("norm").alias("norm_a"),
-    )
-    b = v.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("vec").alias("vec_b"),
-        F.col("norm").alias("norm_b"),
-    )
-    # gemm_screen_pairs already fans the candidate stream onto a numbered
-    # id_a hash exchange (and dedups on it) — re-fanning here would add
-    # back the exchange the r12 restructure removed
+    buckets = assigned.select("vec_id", F.col("cluster").alias("bucket"))
+    cand = gemm_screen_pairs(buckets, v, "vec_id", threshold=_SEM_THRESHOLD)
     dropped = (
-        cand
-        .join(a, "id_a")
-        .join(b, "id_b")
-        .filter(
-            F.round(cosine_expr("vec_a", "vec_b", "norm_a", "norm_b"), 4)
-            >= _SEM_THRESHOLD
+        verify(
+            cand, (v, v), "vec_id", PAIR_ENDS, {"vec": "vec", "norm": "norm"},
+            {"__cos": F.round(cosine_expr("vec_a", "vec_b", "norm_a", "norm_b"), 4)},
+            _SEM_THRESHOLD, [F.col("id_b").alias("vec_id")],
         )
-        .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("__dropped", F.lit(True))
     )

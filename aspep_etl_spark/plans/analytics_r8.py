@@ -295,7 +295,7 @@ def _linkage_candidates(spark, sf_dir):
     with a ``name_dist`` column — the relation the skew audit counts.
 
     Both sides get an explicit NUMBERED repartition before the joins
-    (the dedup._fan discipline): the customer scan is byte-small even
+    (the candidates._fan discipline): the customer scan is byte-small even
     at sf1 (~4 input splits), and every probe row runs substring +
     levenshtein and fans out ×3 band offsets — AQE's byte-based
     coalescing funneled that compute through 2-4 tasks (r7 artifact:

@@ -21,12 +21,17 @@ def _empty_events(spark):
 
 def test_dedup_family_on_empty(spark):
     from aspep_etl_spark.operators.dedup import (
+        embedding_near_dup_pairs_bucketed,
         exact_dedup,
+        incremental_jaccard_matches,
         jaccard_pairs,
         levenshtein_pairs,
         minhash_lsh_pairs,
+        prefix_filter_pairs,
         simhash,
+        sorted_neighborhood_pairs,
     )
+    from aspep_etl_spark.operators.similarity import srp_lsh_topk
 
     docs = _empty_docs(spark)
     assert exact_dedup(docs, ["text"], "doc_id").count() == 0
@@ -34,6 +39,19 @@ def test_dedup_family_on_empty(spark):
     assert minhash_lsh_pairs(docs, "doc_id", "text", 3, 64, 16, 0.5).count() == 0
     assert simhash(docs, "doc_id", "text").count() == 0
     assert levenshtein_pairs(docs, "doc_id", "text").count() == 0
+    assert prefix_filter_pairs(docs, "doc_id", "text", 3, 0.5).count() == 0
+    assert sorted_neighborhood_pairs(docs, "doc_id", "text").count() == 0
+    assert incremental_jaccard_matches(docs, docs, "doc_id", "text").count() == 0
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    for screen in ("gemm", "fold"):
+        for collapse in (True, False):
+            out = embedding_near_dup_pairs_bucketed(
+                emb, screen=screen, collapse_exact=collapse
+            )
+            assert out.columns == ["id_a", "id_b", "cosine"]
+            assert out.count() == 0, (screen, collapse)
+    assert srp_lsh_topk(emb, emb).count() == 0
 
 
 def test_components_and_asof_on_empty(spark):

@@ -1,5 +1,5 @@
 """Regression pin for the ``_fan`` AQE-coalesce fence
-(``operators/dedup.py``).
+(``operators/candidates.py``).
 
 AQE coalesces shuffle partitions by BYTE size.  A bare (id_a, id_b)
 candidate-pair frame is a few MB even when each row expands into an
@@ -16,12 +16,13 @@ These tests fail if the fence is weakened or removed:
   to ~1 partition (setup validity), and ``_fan`` restores full
   ``defaultParallelism`` with rows actually landing spread;
 - plan pins: each guarded production query's physical plan must contain
-  the numbered exchange — ``dedup_embedding_cosine`` and
-  ``dedup_semantic`` a ``hashpartitioning(id_a…, par)`` fence above the
-  verify join, ``customer_record_linkage`` the two
-  ``RoundRobinPartitioning(par)`` side fences.  Removing the ``_fan`` /
-  ``repartition(par)`` call at any of the three call sites
-  (``operators/dedup.py``, ``plans/analytics_r7.py``,
+  the numbered exchange — the candidate-dedup queries
+  (``dedup_minhash_lsh``, ``dedup_prefix_filter``,
+  ``dedup_embedding_cosine``, ``dedup_semantic``) exactly one
+  ``hashpartitioning(id_a…, par)`` fence that the pair dedup rides (no
+  ``(id_a, id_b)`` exchange of its own), ``customer_record_linkage``
+  the two ``RoundRobinPartitioning(par)`` side fences.  Removing the
+  ``_fan`` / ``repartition(par)`` call (``operators/candidates.py``,
   ``plans/analytics_r8.py:_linkage_candidates``) drops the marker and
   fails the pin — correctness gates alone would stay green because the
   funnel only costs wall-time.
@@ -31,9 +32,10 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
-from aspep_etl_spark.operators.dedup import _fan
+from aspep_etl_spark.operators.candidates import _fan
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -73,30 +75,31 @@ def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_fan_pin_dedup_embedding_cosine(spark):
-    """The verify join's candidate stream must sit above a numbered
-    hash exchange on id_a at full parallelism."""
-    from aspep_etl_spark.plans.contract import dedup_embedding_cosine_q
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_minhash_lsh", "dedup_prefix_filter", "dedup_embedding_cosine", "dedup_semantic"],
+)
+def test_fan_pin_dedup_rides_fence(spark, name):
+    """The candidate dedup rides the verify join's fence: exactly one
+    numbered hash exchange on id_a at full parallelism, and no exchange
+    of the dedup's own on (id_a, id_b)."""
+    from aspep_etl_spark.plans.contract import SPARK_QUERIES
 
     par = spark.sparkContext.defaultParallelism
-    plan = _physical_plan(dedup_embedding_cosine_q(spark, SF_DIR))
-    pat = rf"Exchange hashpartitioning\(id_a#\d+L?, {par}\), REPARTITION_BY_NUM"
-    assert re.search(pat, plan), (
-        "dedup_embedding_cosine lost its _fan fence: no "
-        f"numbered id_a hash exchange at par={par} in the physical plan"
+    plan = _physical_plan(SPARK_QUERIES[name](spark, SF_DIR))
+    fences = re.findall(
+        rf"Exchange hashpartitioning\(id_a#\d+L?, {par}\), REPARTITION_BY_NUM", plan
     )
-
-
-def test_fan_pin_dedup_semantic(spark):
-    """SemDeDup's exact-fold re-score join carries the same fence."""
-    from aspep_etl_spark.plans.analytics_r7 import dedup_semantic
-
-    par = spark.sparkContext.defaultParallelism
-    plan = _physical_plan(dedup_semantic(spark, SF_DIR))
-    pat = rf"Exchange hashpartitioning\(id_a#\d+L?, {par}\), REPARTITION_BY_NUM"
-    assert re.search(pat, plan), (
-        "dedup_semantic lost its _fan fence: no numbered id_a hash "
-        f"exchange at par={par} in the physical plan"
+    assert len(fences) == 1, (
+        f"{name}: expected exactly one numbered id_a hash exchange at "
+        f"par={par} (the _fan fence), found {len(fences)}"
+    )
+    pair_exchanges = re.findall(
+        r"Exchange hashpartitioning\(id_a#\d+L?, id_b#\d+L?", plan
+    )
+    assert not pair_exchanges, (
+        f"{name}: the candidate dedup pays its own (id_a, id_b) exchange "
+        "instead of riding the id_a fence"
     )
 
 

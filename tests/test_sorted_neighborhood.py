@@ -3,6 +3,7 @@ adjacency recall, linear candidate volume, and schema parity."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from aspep_etl_spark.operators.dedup import (
@@ -51,3 +52,13 @@ def test_candidate_volume_is_linear(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = sorted_neighborhood_pairs(df, "doc_id", "text", window=4, threshold=0.05)
     assert out.count() <= 3 * 100
+
+
+@pytest.mark.parametrize("window", [1, 0, -3])
+def test_window_below_two_rejected(spark, window):
+    # sequence(1, window - 1) counts DOWN for window < 2, which paired
+    # every doc with itself (and earlier neighbors) instead of nothing
+    rows = [(1, "alpha beta gamma delta"), (2, "omega psi chi phi")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    with pytest.raises(ValueError, match=f"window={window}"):
+        sorted_neighborhood_pairs(df, "doc_id", "text", window=window)
