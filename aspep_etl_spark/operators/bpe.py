@@ -17,9 +17,9 @@ Scale shape (the part that matters at 100 TB of text):
    fold), so it must cross the driver; it is O(1) per round.
 3. Re-segmentation is a JVM-side ``F.aggregate`` left fold per word —
    exact greedy left-to-right pair merging, no Python, no shuffle.
-   Per-round ``localCheckpoint`` bounds lineage exactly like the other
-   iterative operators (components.py / pagerank.py), with the measured
-   block-hygiene discipline (free the previous round's blocks).
+   Per-round ``cache.checkpoint`` bounds lineage and frees the previous
+   round, exactly like the other iterative operators (components.py /
+   pagerank.py).
 
 The fold is string arithmetic (no floats), so the DuckDB oracle — the
 same algorithm unrolled one CTE per round with ``list_reduce`` — is
@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import checkpoint, release
 from .text import WORD_RE
 
 END_MARK = "</w>"
@@ -104,11 +105,7 @@ def bpe_learn_merges(
     table a downstream tokenizer would apply.  Ties on count break
     lexicographically (left asc, right asc): deterministic across engines
     and runs, which is what makes the DuckDB twin hash-exact."""
-    from ..cache import persistent_rdd_ids, unpersist_rdds
-
-    spark = docs.sparkSession
-    seg = initial_segmentation(word_frequencies(docs, text_col)).localCheckpoint()
-    ids: set[int] = set()
+    seg = checkpoint(initial_segmentation(word_frequencies(docs, text_col)))
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         best = (
@@ -121,13 +118,11 @@ def bpe_learn_merges(
             break
         left, right, cnt = best[0]["l"], best[0]["r"], best[0]["pair_count"]
         merges.append((rank, left, right, cnt))
-        before = persistent_rdd_ids(spark)
-        seg = seg.withColumn("seg", _merge_fold(left, right)).localCheckpoint()
-        new_ids = persistent_rdd_ids(spark) - before
-        unpersist_rdds(spark, ids)
-        ids = new_ids
-    unpersist_rdds(spark, ids)
-    return spark.createDataFrame(
+        seg = checkpoint(
+            seg.withColumn("seg", _merge_fold(left, right)), supersedes=seg
+        )
+    release(seg)
+    return docs.sparkSession.createDataFrame(
         merges, "merge_rank int, left string, right string, pair_count bigint"
     )
 
@@ -168,19 +163,12 @@ def apply_bpe_merges_staged(df, seg_col: str, merges: list[tuple[str, str]]):
     inlined-subtree disease PERF.md documents for the PQ norm fold.
     Staging one rule per ``localCheckpoint`` keeps every plan linear;
     the fenced frame is vocab-grain (distinct words), which is exactly
-    the table a production tokenizer materializes anyway.  Earlier
-    stages' blocks are freed as soon as the next stage is checkpointed
-    (same hygiene as the iterative graph operators)."""
-    from ..cache import persistent_rdd_ids, unpersist_rdds
-
-    spark = df.sparkSession
-    prev_ids: set = set()
+    the table a production tokenizer materializes anyway.  Each stage
+    supersedes the previous one (``cache.checkpoint``)."""
+    prev = None
     for left, right in merges:
-        before = persistent_rdd_ids(spark)
-        df = df.withColumn(
-            seg_col, apply_bpe_merges(F.col(seg_col), [(left, right)])
-        ).localCheckpoint()
-        new_ids = persistent_rdd_ids(spark) - before
-        unpersist_rdds(spark, prev_ids)
-        prev_ids = new_ids
+        df = prev = checkpoint(
+            df.withColumn(seg_col, apply_bpe_merges(F.col(seg_col), [(left, right)])),
+            supersedes=prev,
+        )
     return df

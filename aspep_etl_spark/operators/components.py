@@ -24,13 +24,11 @@ probed with a ``limit(1).count()`` on the already-materialized frame, so
 there is no extra per-round join).  The loop is in the driver but ALL
 data movement is distributed joins.
 
-Block lifetime: once a round's checkpoint is materialized, the previous
-round's blocks are dead weight — they are freed eagerly via
-``cache.unpersist_rdds`` instead of waiting on the async ContextCleaner,
-so peak storage is 2 label frames regardless of round count.  The FINAL
-label frame's blocks stay alive deliberately: a localCheckpointed frame
-has no lineage to recompute from, so the returned DataFrame depends on
-them until the caller consumes it.
+Block lifetime: each round checkpoints through ``cache.checkpoint``,
+superseding the previous round, so peak storage is 2 label frames
+regardless of round count.  The FINAL label frame's blocks stay alive
+deliberately: the returned DataFrame depends on them until the caller
+consumes it.
 """
 
 from __future__ import annotations
@@ -38,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import persistent_rdd_ids, unpersist_rdds
+from ..cache import checkpoint
 
 
 def connected_components(
@@ -56,7 +54,6 @@ def connected_components(
     (pointer-jumping makes that ~log2(longest chain), so 25 covers any
     realistic graph).
     """
-    spark = pairs.sparkSession
     # the src/dst union reads `pairs` TWICE — persist it so an expensive
     # upstream (e.g. the blocked-linkage candidate plan feeding
     # linkage_entity_clusters) evaluates once; released in the finally
@@ -68,14 +65,11 @@ def connected_components(
         .distinct()
         .persist()
     )
-    before = persistent_rdd_ids(spark)
-    labels = (
+    labels = cp = checkpoint(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint()
     )
-    labels_ids = persistent_rdd_ids(spark) - before
     try:
         for _ in range(max_iters):
             # 1) neighbor-min: min(component) over {self} ∪ neighbors
@@ -96,26 +90,19 @@ def connected_components(
             lookup = stepped.select(
                 F.col("node").alias("__ln"), F.col("component").alias("__lc")
             )
-            before = persistent_rdd_ids(spark)
-            jumped = (
-                stepped.join(lookup, stepped.component == F.col("__ln"), "left")
-                .select(
+            cp = checkpoint(
+                stepped.join(lookup, stepped.component == F.col("__ln"), "left").select(
                     "node",
                     F.coalesce(F.col("__lc"), F.col("component")).alias("component"),
                     (
                         F.coalesce(F.col("__lc"), F.col("component"))
                         != F.col("__old")
                     ).alias("__chg"),
-                )
-                .localCheckpoint()  # eager: materializes AND truncates lineage
+                ),
+                supersedes=cp,
             )
-            new_ids = persistent_rdd_ids(spark) - before
-            changed = jumped.filter(F.col("__chg")).limit(1).count()
-            # the superseded round's blocks are dead once `jumped` is
-            # materialized — free them now, don't wait for JVM GC
-            unpersist_rdds(spark, labels_ids)
-            labels_ids = new_ids
-            labels = jumped.select("node", "component")
+            changed = cp.filter(F.col("__chg")).limit(1).count()
+            labels = cp.select("node", "component")
             if changed == 0:
                 return labels
         raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")

@@ -5,8 +5,8 @@ Fourth member of the iterative-graph family (connected components,
 PageRank, triangle census) — same hard-won loop discipline as
 ``operators/pagerank.py``: per-round eager ``localCheckpoint`` to
 truncate the join-on-derived-self lineage, invariant frames persisted
-once, superseded rounds' blocks freed immediately (peak storage = 2
-label frames regardless of iteration count).
+once, each round checkpointed through ``cache.checkpoint`` superseding
+the last (peak storage = 2 label frames regardless of iteration count).
 
 Unlike classic LPA (random tie-breaks, asynchronous updates), every
 round here is fully deterministic: node v adopts the most frequent
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cache import persistent_rdd_ids, unpersist_rdds
+from ..cache import checkpoint
 
 
 def label_propagation(
@@ -40,38 +40,27 @@ def label_propagation(
     """Communities after ``iters`` synchronous min-tie-break LPA rounds
     from the identity labeling.  ``edges`` is an undirected edge list
     (each pair once, either orientation).  Returns (node, community)."""
-    spark = edges.sparkSession
     sym = (
         edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
         .union(edges.select(F.col(v).alias("u"), F.col(u).alias("v")))
         .persist()
     )
-    before = persistent_rdd_ids(spark)
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
+    labels = checkpoint(
+        sym.select(F.col("u").alias("node")).distinct().withColumn("lbl", F.col("node"))
     )
-    label_ids = persistent_rdd_ids(spark) - before
 
     top1 = Window.partitionBy("node").orderBy(F.desc("__c"), F.asc("lbl"))
     for _ in range(iters):
-        before = persistent_rdd_ids(spark)
         neigh = sym.join(
             labels.withColumnRenamed("node", "v"), "v"
         ).select(F.col("u").alias("node"), "lbl")
-        new_labels = (
+        labels = checkpoint(
             neigh.groupBy("node", "lbl")
             .agg(F.count("*").alias("__c"))
             .withColumn("__rn", F.row_number().over(top1))
             .filter(F.col("__rn") == 1)
-            .select("node", "lbl")
-            .localCheckpoint()  # eager: materializes AND truncates lineage
+            .select("node", "lbl"),
+            supersedes=labels,
         )
-        new_ids = persistent_rdd_ids(spark) - before
-        unpersist_rdds(spark, label_ids)
-        label_ids = new_ids
-        labels = new_labels
     sym.unpersist()
     return labels.select("node", F.col("lbl").alias("community"))

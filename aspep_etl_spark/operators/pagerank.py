@@ -8,9 +8,8 @@ discipline those two earned the hard way:
 - per-iteration ``localCheckpoint(eager=True)`` truncates the
   join-on-derived-self lineage (a bare persist leaves the logical plan
   growing superlinearly per round),
-- the superseded round's blocks are freed as soon as the next round
-  materializes, so peak storage is 2 rank frames at any iteration count
-  (see PERF.md, round-3 block-lifetime findings),
+- each round checkpoints through ``cache.checkpoint``, superseding the
+  last, so peak storage is 2 rank frames at any iteration count,
 - every aggregation boundary is ROUNDED (`round_dp`), which is what
   makes a floating-point fixpoint reproducible in a second engine: the
   DuckDB oracle unrolls the same iterations as CTEs and must land on
@@ -35,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import persistent_rdd_ids, unpersist_rdds
+from ..cache import checkpoint
 
 
 def pagerank(
@@ -48,7 +47,6 @@ def pagerank(
 ) -> DataFrame:
     """Ranks after ``iters`` synchronous PageRank iterations from the
     uniform distribution.  Returns (node, rank)."""
-    spark = edges.sparkSession
     # The edge relation (often itself a join, e.g. orders x lineitem in
     # the contract query) and the derived node/degree frames are read by
     # EVERY iteration — persist them once or each round re-executes the
@@ -71,22 +69,13 @@ def pagerank(
         for f in (deg, nodes, e):
             f.unpersist()
         return nodes.withColumn("rank", F.lit(0.0))
-    # Materialize deg NOW (nodes/e already materialized by the count):
-    # a persisted Dataset's RDD only registers with the context on its
-    # first job, and the per-iteration id-diff below would otherwise
-    # sweep the invariants' cache blocks along with iteration 1's dead
-    # checkpoint — silently re-deriving deg/nodes/e every later round.
-    deg.count()
 
-    before = persistent_rdd_ids(spark)
-    ranks = nodes.withColumn(
-        "rank", F.round(F.lit(1.0) / F.lit(float(n_nodes)), round_dp)
-    ).localCheckpoint()
-    rank_ids = persistent_rdd_ids(spark) - before
+    ranks = checkpoint(
+        nodes.withColumn("rank", F.round(F.lit(1.0) / F.lit(float(n_nodes)), round_dp))
+    )
 
     teleport = F.lit((1.0 - damping)) / F.lit(float(n_nodes))
     for _ in range(iters):
-        before = persistent_rdd_ids(spark)
         contribs = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
             .join(deg, "src")
@@ -96,23 +85,16 @@ def pagerank(
             )
         )
         agg = contribs.groupBy("node").agg(F.sum("contrib").alias("__s"))
-        new_ranks = (
-            nodes.join(agg, "node", "left")
-            .select(
+        ranks = checkpoint(
+            nodes.join(agg, "node", "left").select(
                 "node",
                 F.round(
                     teleport + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0)),
                     round_dp,
                 ).alias("rank"),
-            )
-            .localCheckpoint()  # eager: materializes AND truncates lineage
+            ),
+            supersedes=ranks,
         )
-        new_ids = persistent_rdd_ids(spark) - before
-        # the superseded round's blocks are dead once new_ranks exists —
-        # free them now instead of waiting on the async ContextCleaner
-        unpersist_rdds(spark, rank_ids)
-        rank_ids = new_ids
-        ranks = new_ranks
     for f in (deg, nodes, e):
         f.unpersist()
     return ranks
@@ -134,7 +116,6 @@ def personalized_pagerank(
     localCheckpoints, invariant persists, per-round block frees, rounded
     fixpoint → unrolled-CTE oracle); the only deltas are the seed-
     restricted init (1/|S| on seeds, 0 elsewhere) and teleport term."""
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
     s = seeds.select("node").distinct()
     nodes = (
@@ -151,24 +132,22 @@ def personalized_pagerank(
         for f in (deg, nodes, e):
             f.unpersist()
         return nodes.select("node").withColumn("rank", F.lit(0.0))
-    deg.count()  # materialize before the per-iteration id-diff (see pagerank)
 
     inv_s = 1.0 / float(n_seeds)
     teleport = F.when(
         F.col("__seed") == 1, F.lit(1.0 - damping) * F.lit(inv_s)
     ).otherwise(F.lit(0.0))
-    before = persistent_rdd_ids(spark)
-    ranks = nodes.select(
-        "node",
-        F.round(
-            F.when(F.col("__seed") == 1, F.lit(inv_s)).otherwise(F.lit(0.0)),
-            round_dp,
-        ).alias("rank"),
-    ).localCheckpoint()
-    rank_ids = persistent_rdd_ids(spark) - before
+    ranks = checkpoint(
+        nodes.select(
+            "node",
+            F.round(
+                F.when(F.col("__seed") == 1, F.lit(inv_s)).otherwise(F.lit(0.0)),
+                round_dp,
+            ).alias("rank"),
+        )
+    )
 
     for _ in range(iters):
-        before = persistent_rdd_ids(spark)
         contribs = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
             .join(deg, "src")
@@ -178,22 +157,16 @@ def personalized_pagerank(
             )
         )
         agg = contribs.groupBy("node").agg(F.sum("contrib").alias("__s"))
-        new_ranks = (
-            nodes.join(agg, "node", "left")
-            .select(
+        ranks = checkpoint(
+            nodes.join(agg, "node", "left").select(
                 "node",
                 F.round(
-                    teleport
-                    + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0)),
+                    teleport + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0)),
                     round_dp,
                 ).alias("rank"),
-            )
-            .localCheckpoint()
+            ),
+            supersedes=ranks,
         )
-        new_ids = persistent_rdd_ids(spark) - before
-        unpersist_rdds(spark, rank_ids)
-        rank_ids = new_ids
-        ranks = new_ranks
     for f in (deg, nodes, e):
         f.unpersist()
     return ranks

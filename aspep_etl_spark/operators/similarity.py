@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import checkpoint
 from .candidates import attach, dedup_pairs
 
 
@@ -117,6 +118,8 @@ def ivf_topk(
     from .clustering import _assign, _sqdist_expr, lloyd_kmeans, seeded_id_init
 
     init = seeded_id_init(corpus, id_col, vec_col, n_centroids)
+    if not init:  # empty corpus: no centroids to probe, nothing to rank
+        return brute_force_topk(corpus, queries, k, id_col, vec_col)
     _, centroids = lloyd_kmeans(
         corpus.select(id_col, vec_col), id_col, vec_col, init,
         iters=iters, round_dp=round_dp,
@@ -656,14 +659,13 @@ def mmr_topk(
     # Each greedy step references the previous selection THREE times
     # (exclusion filter, max-sim join, union) — left lazy, the plan tree
     # grows 3^k copies of the corpus-scale pool stage (measured: the sf1
-    # tier run wedged for 40+ min).  localCheckpoint per step materializes
-    # the ≤ k·n_queries-row selection eagerly, the same per-round
-    # discipline as the other iterative operators.
-    selected = (
+    # tier run wedged for 40+ min).  A checkpoint per step materializes
+    # the ≤ k·n_queries-row selection eagerly and supersedes the last,
+    # the same per-round discipline as the other iterative operators.
+    selected = checkpoint(
         rel.withColumn("__rn", F.row_number().over(w_rel))
         .filter(F.col("__rn") == 1)
         .select("query_id", "neighbor_id", "rel", F.lit(1).alias("mmr_rank"))
-        .localCheckpoint()
     )
     w_score = Window.partitionBy("query_id").orderBy(
         F.desc("mmr"), F.asc("neighbor_id")
@@ -709,11 +711,14 @@ def mmr_topk(
             .filter(F.col("__rn") == 1)
             .select("query_id", "neighbor_id", "rel", F.lit(t).alias("mmr_rank"))
         )
-        selected = selected.unionByName(pick).localCheckpoint()
-    out = selected.select(
-        "query_id", "neighbor_id", F.col("rel").alias("relevance"),
-        F.col("mmr_rank").cast("long").alias("mmr_rank"),
-    ).localCheckpoint()
+        selected = checkpoint(selected.unionByName(pick), supersedes=selected)
+    out = checkpoint(
+        selected.select(
+            "query_id", "neighbor_id", F.col("rel").alias("relevance"),
+            F.col("mmr_rank").cast("long").alias("mmr_rank"),
+        ),
+        supersedes=selected,
+    )
     # safe to release only AFTER the eager checkpoint above materialized
     # the result — an unpersist before the caller's action would force
     # full pool recomputes at execution time

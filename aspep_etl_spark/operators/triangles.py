@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import checkpoint
+
 
 def cooccurrence_knn_edges(
     pairs_src: DataFrame,
@@ -143,17 +145,14 @@ def local_clustering(edges: DataFrame) -> DataFrame:
     )
     # the oriented edge list is read by the wedge self-join AND both
     # closing branches — an eager fence stops the kNN-construction
-    # lineage (window + joins) being recomputed four times; its blocks
-    # are freed below once the result is materialized
-    from ..cache import persistent_rdd_ids, unpersist_rdds
-
-    spark_ = edges.sparkSession
-    before = persistent_rdd_ids(spark_)
-    oriented = e.select(
-        F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-    ).localCheckpoint()
-    fence_ids = persistent_rdd_ids(spark_) - before
+    # lineage (window + joins) being recomputed four times; the result's
+    # checkpoint supersedes it
+    oriented = checkpoint(
+        e.select(
+            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("t"),
+        )
+    )
     wedges = (
         oriented.alias("e1")
         .join(oriented.alias("e2"), "s")
@@ -176,15 +175,16 @@ def local_clustering(edges: DataFrame) -> DataFrame:
     tcount = corners.groupBy("n").agg(F.count("*").alias("t"))
     joined = deg.join(tcount, "n", "left")
     t = F.coalesce(F.col("t"), F.lit(0)).cast("long")
-    res = joined.select(
-        F.col("n").alias("node"),
-        F.col("d").cast("long").alias("degree"),
-        t.alias("n_triangles"),
-        F.when(
-            F.col("d") >= 2,
-            (F.lit(2) * t).cast("double")
-            / (F.col("d") * (F.col("d") - 1)).cast("double"),
-        ).alias("lcc"),
-    ).localCheckpoint()
-    unpersist_rdds(spark_, fence_ids)
-    return res
+    return checkpoint(
+        joined.select(
+            F.col("n").alias("node"),
+            F.col("d").cast("long").alias("degree"),
+            t.alias("n_triangles"),
+            F.when(
+                F.col("d") >= 2,
+                (F.lit(2) * t).cast("double")
+                / (F.col("d") * (F.col("d") - 1)).cast("double"),
+            ).alias("lcc"),
+        ),
+        supersedes=oriented,
+    )

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..cache import checkpoint
 from ..operators.text import WORD_RE
 from ..sources.registry import load_table as _t
 from .xxh64_sql import PRELUDE as _XXH_PRELUDE
@@ -2280,8 +2281,6 @@ def graph_bfs_distance(spark, sf_dir):
     two-shuffles-per-round shape as PageRank; all-integer, so the
     unrolled-CTE oracle is exact.  Unreached nodes are absent (no
     sentinel infinities shuffled)."""
-    from ..cache import persistent_rdd_ids, unpersist_rdds
-
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     supplier = _t(spark, sf_dir, "supplier")
@@ -2299,23 +2298,16 @@ def graph_bfs_distance(spark, sf_dir):
     seeds = supplier.filter(F.col("s_nationkey") == 0).select(
         (F.col("s_suppkey") * 2 + 1).alias("node")
     )
-    dist = seeds.withColumn("dist", F.lit(0).cast("long")).localCheckpoint()
-    spark_ = edges.sparkSession
-    ids = set()
+    dist = checkpoint(seeds.withColumn("dist", F.lit(0).cast("long")))
     for _ in range(3):
-        before = persistent_rdd_ids(spark_)
-        relaxed = (
+        dist = checkpoint(
             edges.join(dist.withColumnRenamed("node", "u"), "u")
             .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
             .unionByName(dist)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
+            .agg(F.min("dist").alias("dist")),
+            supersedes=dist,
         )
-        new_ids = persistent_rdd_ids(spark_) - before
-        unpersist_rdds(spark_, ids)
-        ids = new_ids
-        dist = relaxed
     edges.unpersist()
     return dist
 
@@ -2980,11 +2972,9 @@ def graph_weighted_sssp(spark, sf_dir):
     (the weighted counterpart of `graph_bfs_distance`; node key =
     2·custkey / 2·suppkey+1, seeds = suppliers of nation 0).  Three
     synchronous relaxation rounds, each ONE edge join + ONE min-agg on
-    the node key (two shuffles/round, lineage bounded by localCheckpoint
-    with the measured per-round block frees).  All-integer arithmetic →
-    the unrolled-CTE DuckDB twin is hash-exact."""
-    from ..cache import persistent_rdd_ids, unpersist_rdds
-
+    the node key (two shuffles/round, lineage bounded by
+    ``cache.checkpoint``, each round superseding the last).  All-integer
+    arithmetic → the unrolled-CTE DuckDB twin is hash-exact."""
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     supplier = _t(spark, sf_dir, "supplier")
@@ -3005,23 +2995,16 @@ def graph_weighted_sssp(spark, sf_dir):
     seeds = supplier.filter(F.col("s_nationkey") == 0).select(
         (F.col("s_suppkey") * 2 + 1).alias("node")
     )
-    dist = seeds.withColumn("dist", F.lit(0).cast("long")).localCheckpoint()
-    spark_ = edges.sparkSession
-    ids = set()
+    dist = checkpoint(seeds.withColumn("dist", F.lit(0).cast("long")))
     for _ in range(3):
-        before = persistent_rdd_ids(spark_)
-        relaxed = (
+        dist = checkpoint(
             edges.join(dist.withColumnRenamed("node", "u"), "u")
             .select(F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
             .unionByName(dist)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
+            .agg(F.min("dist").alias("dist")),
+            supersedes=dist,
         )
-        new_ids = persistent_rdd_ids(spark_) - before
-        unpersist_rdds(spark_, ids)
-        ids = new_ids
-        dist = relaxed
     edges.unpersist()
     return dist
 

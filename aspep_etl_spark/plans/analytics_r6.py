@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..cache import checkpoint
 from ..sources.registry import load_table as _t
 
 R6_QUERIES: dict = {}
@@ -60,11 +61,9 @@ def graph_kcore(spark, sf_dir):
     2·custkey / 2·suppkey+1, k=8).  Each round is one count-agg on the
     node key plus two semi-join-shaped hash joins back onto the edge
     set — integer-only, so the unrolled-CTE DuckDB twin is hash-exact.
-    Lineage is bounded by per-round ``localCheckpoint`` with the same
-    measured block frees as PageRank/SSSP; at 100 TB the edge set is the
-    only large relation and every round shuffles it on one key."""
-    from ..cache import persistent_rdd_ids, unpersist_rdds
-
+    Lineage is bounded by per-round ``cache.checkpoint`` (each round
+    supersedes the last, as in PageRank/SSSP); at 100 TB the edge set is
+    the only large relation and every round shuffles it on one key."""
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     ends = (
@@ -75,34 +74,25 @@ def graph_kcore(spark, sf_dir):
         )
         .distinct()
     )
-    edges = ends.union(
-        ends.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
-    spark_ = edges.sparkSession
-    ids: set = set()
-    cur = edges
+    cur = checkpoint(
+        ends.union(ends.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
     for _ in range(_KCORE_ROUNDS):
-        before = persistent_rdd_ids(spark_)
         keep = (
             cur.groupBy("u")
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= _KCORE_K)
             .select("u")
         )
-        nxt = (
+        cur = checkpoint(
             cur.join(keep, "u")
             .join(keep.withColumnRenamed("u", "v"), "v")
-            .select("u", "v")
-            .localCheckpoint()
+            .select("u", "v"),
+            supersedes=cur,
         )
-        new_ids = persistent_rdd_ids(spark_) - before
-        unpersist_rdds(spark_, ids)
-        ids = new_ids
-        cur = nxt
-    out = cur.groupBy(F.col("u").alias("node")).agg(
+    return cur.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("long").alias("degree")
     )
-    return out
 
 
 _KCORE_ROUND_SQL = """

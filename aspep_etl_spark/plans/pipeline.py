@@ -32,7 +32,7 @@ from ..functions.scalar import (
 from ..operators.filters import filter_significant, filter_year_range
 from ..operators.recode import broadcast_dim_join, recode_values
 from ..operators.stats import append_cohort_stats
-from ..operators.windows import cohort_ranks, signed_delta_ranks, yoy_deltas
+from ..operators.windows import ranks_wide, yoy_deltas_wide
 
 
 def normalize_fact(raw: DataFrame, census_dim: DataFrame | None = None) -> DataFrame:
@@ -101,22 +101,20 @@ def derive_stats(fact: DataFrame, median_of: str = "exact") -> DataFrame:
     )
 
 
-def derive_extended_stats(
-    stats_df: DataFrame,
-    persist_between_stages: bool = True,
-    wide_kernel_threshold: int = 24,
-    reference_exact: bool = True,
-) -> DataFrame:
+def derive_extended_stats(stats_df: DataFrame) -> DataFrame:
     """YoY deltas + cohort and directional ranks + significance filter
     (reference assets.py:387-491).
 
     Plan shape: the delta stage shuffles on (state_code, gov_function); the
     rank stage shuffles on (year, gov_function) — two shuffles regardless of
     column count.  With ~9 base metrics this fans out to ~150 derived
-    columns; above ``wide_kernel_threshold`` derived columns per family the
-    stage switches from stacked JVM window expressions to the Arrow-batched
-    ``applyInPandas`` kernels (Catalyst plan/codegen time grows with every
-    stacked window; the kernel plan is O(1) in column count — see PERF.md).
+    columns, computed by the Arrow-batched pandas kernels
+    (``yoy_deltas_wide`` / ``ranks_wide``): stacked JVM window expressions
+    grow Catalyst plan/codegen time with every column, the kernel plan is
+    O(1) in column count (see PERF.md).  The deltas pin legacy-pandas
+    ``pct_change`` semantics (``reference_exact``: ffill-padded ratio, ±inf
+    on a zero base feeding the pos/neg ranks — see operators/windows.py),
+    which only the pandas kernels express.
     """
     base_cols = [c for c in schema.BASE_METRIC_COLS if c in stats_df.columns]
     extra_numeric = [
@@ -125,42 +123,14 @@ def derive_extended_stats(
         if c not in base_cols
     ]
     metric_cols = base_cols + extra_numeric
-    use_wide = len(metric_cols) * 4 > wide_kernel_threshold
-
-    # reference_exact pins legacy-pandas pct_change semantics (ffill-padded
-    # ratio, ±inf on zero base feeding the pos/neg ranks — see
-    # operators/windows.py) — only the pandas kernels express those, so it
-    # forces the wide path; the JVM expression path keeps the engine's own
-    # contract (zero base → null), which the W1 oracle query pins.
-    use_wide = use_wide or reference_exact
-    cohort_keys = ["state_code", "gov_function"]
-    if use_wide:
-        from ..operators.windows import yoy_deltas_wide
-
-        df = yoy_deltas_wide(
-            stats_df, cohort_keys, ["year"], metric_cols,
-            reference_exact=reference_exact,
-        )
-    else:
-        df = yoy_deltas(stats_df, cohort_keys, ["year"], metric_cols)
-        if persist_between_stages:
-            df = df.localCheckpoint(eager=False)
-
-    delta_cols = [
-        c for c in df.columns if c.endswith(schema.DELTA_SUFFIXES)
-    ]
-    rank_keys = ["year", "gov_function"]
+    df = yoy_deltas_wide(
+        stats_df, ["state_code", "gov_function"], ["year"], metric_cols,
+        reference_exact=True,
+    )
+    delta_cols = [c for c in df.columns if c.endswith(schema.DELTA_SUFFIXES)]
     # Cohorts intentionally include US / US-median / US-mean rows — the
     # reference ranks before any filtering (assets.py:457-474).
-    if use_wide:
-        from ..operators.windows import ranks_wide
-
-        df = ranks_wide(df, rank_keys, metric_cols, delta_cols)
-    else:
-        df = cohort_ranks(df, rank_keys, metric_cols)
-        if persist_between_stages:
-            df = df.localCheckpoint(eager=False)
-        df = signed_delta_ranks(df, rank_keys, delta_cols)
+    df = ranks_wide(df, ["year", "gov_function"], metric_cols, delta_cols)
 
     # Parity note: the reference's significance filter scans *every* numeric
     # column — including `year` and `index` (pandas select_dtypes,

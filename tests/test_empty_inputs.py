@@ -125,3 +125,17 @@ def test_round4_operators_on_empty(spark):
     # empty edge relation: no nodes, empty ranks, no division blow-up
     edges = spark.createDataFrame([], "src string, dst string")
     assert pagerank(edges, iters=2).count() == 0
+
+
+def test_ivf_topk_on_empty_corpus(spark):
+    """No corpus rows means no centroids to probe: the empty top-k frame,
+    not an analysis error on an empty centroid array."""
+    from aspep_etl_spark.operators.similarity import ivf_topk
+
+    schema = "vec_id long, embedding array<float>"
+    empty = spark.createDataFrame([], schema)
+    queries = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])], schema)
+    for q in (empty, queries):
+        out = ivf_topk(empty, q)
+        assert out.columns == ["query_id", "neighbor_id", "cosine", "knn_rank"]
+        assert out.count() == 0
