@@ -28,7 +28,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB twin for each SQL-expressible query (rows-only ops omitted)."""
+    """DuckDB twin for every ``queries()`` entry, under the same name."""
     from aspep_etl_spark.plans.contract import ORACLE_SQL
 
     return dict(ORACLE_SQL)

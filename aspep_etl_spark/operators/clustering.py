@@ -52,6 +52,14 @@ def _sqdist_expr(vec: str, centroid: list[float], dp: int) -> F.Column:
     )
 
 
+def centroid_array(structs: list[F.Column], element: str) -> F.Column:
+    """``array(*structs)``, one struct per centroid.  An empty input trains
+    no centroids, and a bare ``array()`` is ``array<void>``, whose fields
+    cannot be extracted: then the result is an empty ``array<element>``, so
+    every caller degrades to an empty (or unassigned) result."""
+    return F.array(*structs) if structs else F.array().cast(f"array<{element}>")
+
+
 def _assign(v: DataFrame, centroids: list[tuple[int, list[float]]], dp: int) -> DataFrame:
     """Add `cluster`: argmin of rounded sq-distance, ties → lowest cluster
     id, as ``array_min`` over a (distance, cluster) struct array — struct
@@ -62,14 +70,15 @@ def _assign(v: DataFrame, centroids: list[tuple[int, list[float]]], dp: int) -> 
     Deliberately NOT a folded ``when(cand < best, ...)`` chain: each fold
     level embeds the prior tree twice (condition + otherwise), so the
     expression grows O(2^k) — measured 17 s of codegen at k=8, dim=64
-    where this form takes ~2 s."""
-    cands = F.array(
-        *[
+    where this form takes ~2 s.  No centroids leave ``cluster`` null."""
+    cands = centroid_array(
+        [
             F.struct(
                 _sqdist_expr("vec", c, dp).alias("d"), F.lit(cl).alias("cl")
             )
             for cl, c in centroids
-        ]
+        ],
+        "struct<d:double,cl:int>",
     )
     return v.withColumn("cluster", F.array_min(cands)["cl"])
 

@@ -115,11 +115,9 @@ def ivf_topk(
     (`ann_ivf_topk`) unrolls the identical quantizer and probes the same
     buckets, so the result is hash-exact, not just "close".
     """
-    from .clustering import _assign, _sqdist_expr, lloyd_kmeans, seeded_id_init
+    from .clustering import _assign, _sqdist_expr, centroid_array, lloyd_kmeans, seeded_id_init
 
     init = seeded_id_init(corpus, id_col, vec_col, n_centroids)
-    if not init:  # empty corpus: no centroids to probe, nothing to rank
-        return brute_force_topk(corpus, queries, k, id_col, vec_col)
     _, centroids = lloyd_kmeans(
         corpus.select(id_col, vec_col), id_col, vec_col, init,
         iters=iters, round_dp=round_dp,
@@ -146,14 +144,15 @@ def ivf_topk(
     # Each query row fans out to its n_probe buckets in the same map-only
     # pass that computes its norm; each corpus row lives in exactly one
     # bucket, so (query, neighbor) pairs stay unique.
-    cands = F.array(
-        *[
+    cands = centroid_array(
+        [
             F.struct(
                 _sqdist_expr("vec", cv, round_dp).alias("d"),
                 F.lit(int(cl)).alias("cl"),
             )
             for cl, cv in centroids
-        ]
+        ],
+        "struct<d:double,cl:int>",
     )
     q = _vecd(queries).select(
         F.col(id_col).alias("query_id"),
@@ -506,7 +505,7 @@ def pq_adc_topk(
     EMITTED rows are reproducible bit-for-bit.
     Output: (query_id, neighbor_id, cosine, knn_rank).
     """
-    from .clustering import _sqdist_expr, lloyd_kmeans, seeded_id_init
+    from .clustering import _sqdist_expr, centroid_array, lloyd_kmeans, seeded_id_init
 
     sub_dim = dim // n_sub
 
@@ -563,14 +562,15 @@ def pq_adc_topk(
             q_halves.select(
                 "query_id",
                 F.explode(
-                    F.array(
-                        *[
+                    centroid_array(
+                        [
                             F.struct(
                                 F.lit(cl).alias(f"code{s}"),
                                 _sqdist_expr(f"h{s}", c, round_dp).alias(f"d{s}"),
                             )
                             for cl, c in cents
-                        ]
+                        ],
+                        f"struct<code{s}:int,d{s}:double>",
                     )
                 ).alias("e"),
             ).select("query_id", f"e.code{s}", f"e.d{s}")

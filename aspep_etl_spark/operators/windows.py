@@ -79,10 +79,10 @@ def yoy_deltas_wide(
     metric_cols: list[str],
     lags: tuple[int, ...] = (1, 4),
     lag_labels: dict[int, str] | None = None,
-    reference_exact: bool = False,
     chunk_rows: int | None = None,
 ) -> DataFrame:
-    """Wide-fan-out twin of ``yoy_deltas`` as an Arrow-batched kernel.
+    """Wide-fan-out twin of ``yoy_deltas`` as an Arrow-batched kernel, with
+    legacy-pandas ``pct_change`` semantics for the ``_pct`` columns.
 
     Same single shuffle on the cohort keys, but above a few dozen derived
     columns Catalyst plan/codegen time dominates the stacked-window
@@ -94,25 +94,23 @@ def yoy_deltas_wide(
     ``chunk_rows`` (default ``WIDE_CHUNK_ROWS``) and flushes each chunk
     through pandas ``groupby().shift()`` — vectorized across all cohorts
     in the chunk at once.  A ``max(lags)``-row keyed carry (raw values for
-    the shift, forward-filled values for the legacy ``pct_change`` mode)
-    is prepended to the next chunk, so a cohort that straddles a chunk —
-    or a single cohort larger than executor memory — streams instead of
-    OOMing.  Chunk boundaries are invisible to the semantics: the carry
+    the shift, forward-filled values for ``pct_change``) is prepended to
+    the next chunk, so a cohort that straddles a chunk — or a single
+    cohort larger than executor memory — streams instead of OOMing.  Chunk boundaries are invisible to the semantics: the carry
     rows reproduce exactly the lag window and ffill state the split
     removed.  (A per-group ``applyInPandas`` costs ~10 ms of pandas
     overhead per cohort — ruinous with thousands of small cohorts.)
-    Semantics identical to ``yoy_deltas`` (pinned by the parity suite and
-    a chunked-vs-unchunked equality test).
+    Chunk-size invariance is pinned by the wide-kernel tests.
 
-    ``reference_exact=True`` reproduces legacy-pandas ``pct_change``
-    instead (reference assets.py:443-444): the series is forward-filled
-    BEFORE the ratio (default ``fill_method="pad"`` — both numerator and
-    shifted denominator are padded across NaN gaps) and a zero base yields
-    ±inf (0→0 yields NaN), which then participates in the reference's
-    pos/neg delta ranks (±inf takes rank 1 on its side).  ``_abs`` columns
-    are plain ``diff`` — never padded — in both modes.  JSON publish maps
-    inf→null at the boundary (sinks/publish.py), matching the reference's
-    artifact after its own inf-replace.
+    ``_pct`` reproduces legacy-pandas ``pct_change`` (reference
+    assets.py:443-444): the series is forward-filled BEFORE the ratio
+    (default ``fill_method="pad"`` — both numerator and shifted
+    denominator are padded across NaN gaps) and a zero base yields ±inf
+    (0→0 yields NaN), which then participates in the reference's pos/neg
+    delta ranks (±inf takes rank 1 on its side).  ``_abs`` columns are
+    plain ``diff`` — never padded — exactly as in ``yoy_deltas``.  JSON
+    publish maps inf→null at the boundary (sinks/publish.py), matching the
+    reference's artifact after its own inf-replace.
     """
     import numpy as np
     import pandas as pd
@@ -143,42 +141,28 @@ def yoy_deltas_wide(
             k: g[metric_cols].shift(k).astype(float).iloc[ctx:].reset_index(drop=True)
             for k in lags
         }
-        filled_full = fshift = None
-        if reference_exact:
-            kf = pdf[keys + metric_cols]
-            if ctx:
-                kf = pd.concat([tail_fill, kf], ignore_index=True)
-            gf = kf.groupby(keys, sort=False, dropna=False)
-            filled_full = gf[metric_cols].ffill().astype(float)
-            fg = filled_full.groupby(
-                [kf[k] for k in keys], sort=False, dropna=False
-            )
-            fshift = {
-                k: fg.shift(k).iloc[ctx:].reset_index(drop=True) for k in lags
-            }
-            filled = filled_full.iloc[ctx:].reset_index(drop=True)
+        kf = pdf[keys + metric_cols]
+        if ctx:
+            kf = pd.concat([tail_fill, kf], ignore_index=True)
+        gf = kf.groupby(keys, sort=False, dropna=False)
+        filled_full = gf[metric_cols].ffill().astype(float)
+        fg = filled_full.groupby([kf[k] for k in keys], sort=False, dropna=False)
+        fshift = {k: fg.shift(k).iloc[ctx:].reset_index(drop=True) for k in lags}
+        filled = filled_full.iloc[ctx:].reset_index(drop=True)
         add = {}
         for c in metric_cols:
             for k in lags:
                 lbl = lag_labels[k]
                 prev = shifted[k][c]
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    if reference_exact:
-                        # legacy pct_change: padded num AND denom, ±inf kept
-                        pct = filled[c] / fshift[k][c] - 1
-                    else:
-                        pct = base_all[c] / prev - 1
-                        pct[(prev == 0) | np.isinf(pct)] = np.nan  # zero base → null
-                add[f"{c}_{lbl}_pct"] = pct
+                    # legacy pct_change: padded num AND denom, ±inf kept
+                    add[f"{c}_{lbl}_pct"] = filled[c] / fshift[k][c] - 1
                 add[f"{c}_{lbl}_abs"] = base_all[c] - prev
         out = pd.concat([pdf, pd.DataFrame(add)], axis=1)[out_names]
         new_tail_raw = kr.iloc[-max_lag:].reset_index(drop=True)
-        if reference_exact:
-            new_tail_fill = kr.iloc[-max_lag:][keys].reset_index(drop=True).join(
-                filled_full.iloc[-max_lag:].reset_index(drop=True)
-            )
-        else:
-            new_tail_fill = None
+        new_tail_fill = kr.iloc[-max_lag:][keys].reset_index(drop=True).join(
+            filled_full.iloc[-max_lag:].reset_index(drop=True)
+        )
         return out, new_tail_raw, new_tail_fill
 
     def kernel(batches):

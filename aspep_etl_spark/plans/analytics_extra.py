@@ -241,21 +241,6 @@ GROUP BY d.event_type
 """
 
 
-ANALYTICS_QUERIES = {
-    "events_value_trend": events_value_trend,
-    "events_markov_transitions": events_markov_transitions,
-    "docs_token_entropy": docs_token_entropy,
-    "events_value_mad": events_value_mad,
-}
-
-ANALYTICS_ORACLE_SQL = {
-    "events_value_trend": _TREND_SQL,
-    "events_markov_transitions": _MARKOV_SQL,
-    "docs_token_entropy": _ENTROPY_SQL,
-    "events_value_mad": _MAD_SQL,
-}
-
-
 def graph_pagerank(spark, sf_dir):
     """PageRank over the (symmetrized) customer–supplier trade graph:
     edges are distinct (customer, supplier) pairs linked through orders ×
@@ -337,9 +322,6 @@ SELECT node, rank FROM {prev} ORDER BY rank DESC, node LIMIT {top}"""
 
 _PAGERANK_SQL = _pagerank_sql(iters=3, dp=9, top=100)
 
-ANALYTICS_QUERIES["graph_pagerank"] = graph_pagerank
-ANALYTICS_ORACLE_SQL["graph_pagerank"] = _PAGERANK_SQL
-
 
 def events_cms_heavy_hitters(spark, sf_dir):
     """Heavy-hitter screen via a Count-Min sketch (depth 4 × width 64):
@@ -390,9 +372,6 @@ SELECT user_id, exact_count, cms_est, (cms_est - exact_count)::BIGINT AS overest
 FROM est ORDER BY cms_est DESC, user_id LIMIT 50
 """
 
-ANALYTICS_QUERIES["events_cms_heavy_hitters"] = events_cms_heavy_hitters
-ANALYTICS_ORACLE_SQL["events_cms_heavy_hitters"] = _CMS_SQL
-
 
 def events_kmv_distinct(spark, sf_dir):
     """Distinct-user estimation per event type via a K-minimum-values
@@ -436,9 +415,6 @@ SELECT s.event_type, x.n_events, x.exact_distinct,
        END AS kmv_est
 FROM sk s JOIN exact x USING (event_type)
 """
-
-ANALYTICS_QUERIES["events_kmv_distinct"] = events_kmv_distinct
-ANALYTICS_ORACLE_SQL["events_kmv_distinct"] = _KMV_SQL
 
 
 def events_retention_cohorts(spark, sf_dir):
@@ -501,9 +477,6 @@ SELECT m.cohort_day, m.week_offset, m.n_active,
 FROM mat m JOIN base b USING (cohort_day)
 """
 
-ANALYTICS_QUERIES["events_retention_cohorts"] = events_retention_cohorts
-ANALYTICS_ORACLE_SQL["events_retention_cohorts"] = _RETENTION_SQL
-
 
 def events_user_ewma(spark, sf_dir):
     """Per-user exponentially weighted moving average of event values
@@ -539,9 +512,6 @@ SELECT user_id, len(vals)::BIGINT AS n_events,
              (acc, x) -> 0.2::DOUBLE * x + 0.8::DOUBLE * acc), 6) AS ewma_value
 FROM g
 """
-
-ANALYTICS_QUERIES["events_user_ewma"] = events_user_ewma
-ANALYTICS_ORACLE_SQL["events_user_ewma"] = _EWMA_SQL
 
 
 def events_attribution_linear(spark, sf_dir):
@@ -603,9 +573,6 @@ SELECT channel, count(*)::BIGINT AS n_touches,
 FROM weighted GROUP BY channel
 """
 
-ANALYTICS_QUERIES["events_attribution_linear"] = events_attribution_linear
-ANALYTICS_ORACLE_SQL["events_attribution_linear"] = _ATTRIB_LINEAR_SQL
-
 
 def streaming_cms_heavy_hitters(spark, sf_dir):
     """Streaming sketch maintenance, oracle-gated: run the foreachBatch
@@ -660,9 +627,6 @@ GROUP BY p.user_id
 ORDER BY cms_est DESC, user_id LIMIT 20
 """
 
-ANALYTICS_QUERIES["streaming_cms_heavy_hitters"] = streaming_cms_heavy_hitters
-ANALYTICS_ORACLE_SQL["streaming_cms_heavy_hitters"] = _STREAM_CMS_SQL
-
 
 def events_activity_streaks(spark, sf_dir):
     """Gaps-and-islands: per-user consecutive-day activity streaks via
@@ -703,9 +667,6 @@ SELECT user_id, sum(len)::BIGINT AS n_active_days,
        count(*)::BIGINT AS n_streaks, max(len)::BIGINT AS longest_streak
 FROM streaks GROUP BY user_id
 """
-
-ANALYTICS_QUERIES["events_activity_streaks"] = events_activity_streaks
-ANALYTICS_ORACLE_SQL["events_activity_streaks"] = _STREAKS_SQL
 
 
 def customer_rfm_segments(spark, sf_dir):
@@ -758,9 +719,6 @@ SELECT o_custkey, frequency::BIGINT AS frequency, monetary,
 FROM per
 """
 
-ANALYTICS_QUERIES["customer_rfm_segments"] = customer_rfm_segments
-ANALYTICS_ORACLE_SQL["customer_rfm_segments"] = _RFM_SQL
-
 
 def customer_rfm_segments_scaled(spark, sf_dir):
     """Fact-scale twin of ``customer_rfm_segments``: identical RFM
@@ -797,11 +755,6 @@ def customer_rfm_segments_scaled(spark, sf_dir):
         "m_score",
         F.concat("r_score", "f_score", "m_score").alias("segment"),
     )
-
-
-ANALYTICS_QUERIES["customer_rfm_segments_scaled"] = customer_rfm_segments_scaled
-# bit-identical to the exact NTILE form — same oracle
-ANALYTICS_ORACLE_SQL["customer_rfm_segments_scaled"] = _RFM_SQL
 
 
 def events_daily_resample(spark, sf_dir):
@@ -861,9 +814,6 @@ SELECT g.user_id, g.day::VARCHAR AS day,
 FROM grid g LEFT JOIN daily d ON g.user_id = d.user_id AND g.day = d.day
 """
 
-ANALYTICS_QUERIES["events_daily_resample"] = events_daily_resample
-ANALYTICS_ORACLE_SQL["events_daily_resample"] = _RESAMPLE_SQL
-
 
 def users_radius_join(spark, sf_dir):
     """Geospatial radius join: deterministic per-user coordinates
@@ -903,9 +853,6 @@ WHERE 2.0 * 6371.0 * asin(sqrt(
           * sin(radians(b.lon - a.lon) / 2) * sin(radians(b.lon - a.lon) / 2)
       )) <= 25.0
 """
-
-ANALYTICS_QUERIES["users_radius_join"] = users_radius_join
-ANALYTICS_ORACLE_SQL["users_radius_join"] = _RADIUS_SQL
 
 
 def events_session_paths(spark, sf_dir):
@@ -961,9 +908,6 @@ SELECT path, count(*)::BIGINT AS n_sessions,
 FROM per_session GROUP BY path
 ORDER BY n_sessions DESC, path LIMIT 20
 """
-
-ANALYTICS_QUERIES["events_session_paths"] = events_session_paths
-ANALYTICS_ORACLE_SQL["events_session_paths"] = _SESSION_PATHS_SQL
 
 
 def orders_scd2_join(spark, sf_dir):
@@ -1044,9 +988,6 @@ FROM orders o JOIN dim d
 GROUP BY 1, 2
 """
 
-ANALYTICS_QUERIES["orders_scd2_join"] = orders_scd2_join
-ANALYTICS_ORACLE_SQL["orders_scd2_join"] = _SCD2_SQL
-
 
 def events_rolling_distinct_users(spark, sf_dir):
     """7-day rolling DISTINCT user count per event type.  Rolling
@@ -1087,9 +1028,6 @@ FROM grid g JOIN daily d
  AND d.day <= g.day AND d.day >= g.day - INTERVAL 6 DAY
 GROUP BY 1, 2
 """
-
-ANALYTICS_QUERIES["events_rolling_distinct_users"] = events_rolling_distinct_users
-ANALYTICS_ORACLE_SQL["events_rolling_distinct_users"] = _ROLLING_DISTINCT_SQL
 
 
 def events_rolling_distinct_users_kmv(spark, sf_dir):
@@ -1163,13 +1101,6 @@ SELECT event_type, day::VARCHAR AS day,
 FROM merged
 """
 
-ANALYTICS_QUERIES["events_rolling_distinct_users_kmv"] = (
-    events_rolling_distinct_users_kmv
-)
-ANALYTICS_ORACLE_SQL["events_rolling_distinct_users_kmv"] = (
-    _ROLLING_DISTINCT_KMV_SQL
-)
-
 
 def events_chi_square(spark, sf_dir):
     """Chi-square independence test between event type and acquisition
@@ -1230,10 +1161,6 @@ JOIN row_m USING (event_type)
 JOIN col_m USING (channel)
 CROSS JOIN tot
 """
-
-ANALYTICS_QUERIES["events_chi_square"] = events_chi_square
-ANALYTICS_ORACLE_SQL["events_chi_square"] = _CHI_SQUARE_SQL
-
 
 
 def events_gap_survival(spark, sf_dir):
@@ -1346,9 +1273,6 @@ FROM packed, UNNEST(
   ))) AS t(r)
 """
 
-ANALYTICS_QUERIES["events_gap_survival"] = events_gap_survival
-ANALYTICS_ORACLE_SQL["events_gap_survival"] = _SURVIVAL_SQL
-
 
 def orders_benford_digits(spark, sf_dir):
     """Benford's-law first-digit audit of order totals — the forensic
@@ -1405,9 +1329,6 @@ SELECT digit, n::BIGINT AS n,
 FROM obs, tot
 """
 
-ANALYTICS_QUERIES["orders_benford_digits"] = orders_benford_digits
-ANALYTICS_ORACLE_SQL["orders_benford_digits"] = _BENFORD_SQL
-
 
 def customer_abc_analysis(spark, sf_dir):
     """Pareto / ABC classification of customers by revenue: cumulative
@@ -1460,9 +1381,6 @@ SELECT CASE WHEN cum_share <= 0.80 THEN 'A'
        round(sum(revenue), 2) AS class_revenue
 FROM ranked GROUP BY 1
 """
-
-ANALYTICS_QUERIES["customer_abc_analysis"] = customer_abc_analysis
-ANALYTICS_ORACLE_SQL["customer_abc_analysis"] = _ABC_SQL
 
 
 def customer_abc_analysis_scaled(spark, sf_dir):
@@ -1525,9 +1443,6 @@ SELECT CASE WHEN cum::DECIMAL(20,2) * 5 <= t::DECIMAL(20,2) * 4 THEN 'A'
 FROM ranked, tot GROUP BY 1
 """
 
-ANALYTICS_QUERIES["customer_abc_analysis_scaled"] = customer_abc_analysis_scaled
-ANALYTICS_ORACLE_SQL["customer_abc_analysis_scaled"] = _ABC_SCALED_SQL
-
 
 def events_dow_seasonality(spark, sf_dir):
     """Day-of-week seasonality index per event type: mean value by
@@ -1566,9 +1481,6 @@ SELECT p.event_type, p.dow, p.n_events::BIGINT AS n_events,
        round(p.a, 6) AS avg_value, round(p.a / o.o, 6) AS seasonality_index
 FROM per p JOIN overall o USING (event_type)
 """
-
-ANALYTICS_QUERIES["events_dow_seasonality"] = events_dow_seasonality
-ANALYTICS_ORACLE_SQL["events_dow_seasonality"] = _DOW_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -1654,9 +1566,6 @@ SELECT step, n::BIGINT AS n_users,
 FROM counts
 """
 
-ANALYTICS_QUERIES["events_funnel_conversion"] = events_funnel_conversion
-ANALYTICS_ORACLE_SQL["events_funnel_conversion"] = _FUNNEL_SQL
-
 
 def events_error_bursts(spark, sf_dir):
     """Sequence detection (MATCH_RECOGNIZE-shaped): runs of ≥3 'error'
@@ -1697,9 +1606,6 @@ FROM flagged WHERE span <= 21600000000
 GROUP BY user_id
 """
 
-ANALYTICS_QUERIES["events_error_bursts"] = events_error_bursts
-ANALYTICS_ORACLE_SQL["events_error_bursts"] = _ERROR_BURSTS_SQL
-
 
 def docs_weighted_sample(spark, sf_dir):
     """Deterministic weighted sampling without replacement (the
@@ -1737,9 +1643,6 @@ WITH keyed AS (
 SELECT doc_id, lang, n_chars, draw_key
 FROM keyed ORDER BY draw_key DESC, doc_id LIMIT 500
 """
-
-ANALYTICS_QUERIES["docs_weighted_sample"] = docs_weighted_sample
-ANALYTICS_ORACLE_SQL["docs_weighted_sample"] = _WEIGHTED_SAMPLE_SQL
 
 
 def graph_triangles(spark, sf_dir):
@@ -1806,9 +1709,6 @@ SELECT (SELECT count(*) FROM deg)::BIGINT AS n_nodes,
        round(3.0::DOUBLE * n_triangles / wedge_cnt, 6) AS clustering_coefficient
 FROM tri, wd
 """
-
-ANALYTICS_QUERIES["graph_triangles"] = graph_triangles
-ANALYTICS_ORACLE_SQL["graph_triangles"] = _TRIANGLES_SQL
 
 
 def events_kmv_type_overlap(spark, sf_dir):
@@ -1884,9 +1784,6 @@ SELECT type_a, type_b, round(jacc, 4) AS jaccard_est,
                      END), 1) AS overlap_users_est
 FROM j
 """
-
-ANALYTICS_QUERIES["events_kmv_type_overlap"] = events_kmv_type_overlap
-ANALYTICS_ORACLE_SQL["events_kmv_type_overlap"] = _KMV_OVERLAP_SQL
 
 
 def docs_bm25_search(spark, sf_dir):
@@ -1990,9 +1887,6 @@ SELECT doc_id, n_terms_matched, bm25
 FROM per_doc ORDER BY bm25 DESC, doc_id LIMIT 20
 """
 
-ANALYTICS_QUERIES["docs_bm25_search"] = docs_bm25_search
-ANALYTICS_ORACLE_SQL["docs_bm25_search"] = _BM25_SQL
-
 
 def dedup_prefix_filter(spark, sf_dir):
     """Prefix-filtered trigram-Jaccard near-dup pairs at t = 0.5
@@ -2032,9 +1926,6 @@ JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
 WHERE round(n_common / (sa.n + sb.n - n_common), 4) >= 0.5
 """
-
-ANALYTICS_QUERIES["dedup_prefix_filter"] = dedup_prefix_filter
-ANALYTICS_ORACLE_SQL["dedup_prefix_filter"] = _PREFIX_FILTER_SQL
 
 
 def graph_label_propagation(spark, sf_dir):
@@ -2097,9 +1988,6 @@ WITH ps AS MATERIALIZED (
 SELECT node, lbl AS community FROM r4
 """
 )
-
-ANALYTICS_QUERIES["graph_label_propagation"] = graph_label_propagation
-ANALYTICS_ORACLE_SQL["graph_label_propagation"] = _LPA_SQL
 
 
 def events_incident_overlap(spark, sf_dir):
@@ -2183,9 +2071,6 @@ SELECT user_id, s_start AS session_start_us,
 FROM ov GROUP BY 1, 2
 """
 
-ANALYTICS_QUERIES["events_incident_overlap"] = events_incident_overlap
-ANALYTICS_ORACLE_SQL["events_incident_overlap"] = _INCIDENT_OVERLAP_SQL
-
 
 def basket_association_rules(spark, sf_dir):
     """Market-basket association rules ([EXT]) at brand grain: each
@@ -2266,9 +2151,6 @@ JOIN isup sa ON sa.item = antecedent
 JOIN isup sc ON sc.item = consequent
 """
 
-ANALYTICS_QUERIES["basket_association_rules"] = basket_association_rules
-ANALYTICS_ORACLE_SQL["basket_association_rules"] = _ASSOC_SQL
-
 
 def graph_bfs_distance(spark, sf_dir):
     """Multi-source BFS hop distance ([EXT], fifth graph operator):
@@ -2338,9 +2220,6 @@ SELECT node, dist FROM d3
 """
 )
 
-ANALYTICS_QUERIES["graph_bfs_distance"] = graph_bfs_distance
-ANALYTICS_ORACLE_SQL["graph_bfs_distance"] = _BFS_SQL
-
 
 def events_user_growth(spark, sf_dir):
     """Daily audience growth curve: new users (first-touch) per day and
@@ -2371,9 +2250,6 @@ SELECT d AS day, new_users,
          AS cumulative_users
 FROM daily
 """
-
-ANALYTICS_QUERIES["events_user_growth"] = events_user_growth
-ANALYTICS_ORACLE_SQL["events_user_growth"] = _USER_GROWTH_SQL
 
 
 def dedup_sorted_neighborhood(spark, sf_dir):
@@ -2423,9 +2299,6 @@ SELECT least(ia, ib) AS id_a, greatest(ia, ib) AS id_b,
 FROM scored
 WHERE round(nc / (na + nb - nc), 4) >= 0.05
 """
-
-ANALYTICS_QUERIES["dedup_sorted_neighborhood"] = dedup_sorted_neighborhood
-ANALYTICS_ORACLE_SQL["dedup_sorted_neighborhood"] = _SNM_SQL
 
 
 def orders_pareto_frontier(spark, sf_dir):
@@ -2478,9 +2351,6 @@ WITH pts AS (
 SELECT price, date_us, n_orders, min_orderkey
 FROM s WHERE dmax IS NULL OR dmax < date_us
 """
-
-ANALYTICS_QUERIES["orders_pareto_frontier"] = orders_pareto_frontier
-ANALYTICS_ORACLE_SQL["orders_pareto_frontier"] = _PARETO_SQL
 
 
 def events_cusum_changepoints(spark, sf_dir):
@@ -2558,9 +2428,6 @@ SELECT day, cnt::BIGINT AS cnt,
 FROM m
 """
 
-ANALYTICS_QUERIES["events_cusum_changepoints"] = events_cusum_changepoints
-ANALYTICS_ORACLE_SQL["events_cusum_changepoints"] = _CUSUM_SQL
-
 
 def events_pattern_match(spark, sf_dir):
     """Sequence-pattern mining over per-user event streams ([EXT], the
@@ -2612,9 +2479,6 @@ SELECT user_id, n_events,
 FROM seq
 WHERE len(regexp_extract_all(s, 'v+c+p')) > 0
 """
-
-ANALYTICS_QUERIES["events_pattern_match"] = events_pattern_match
-ANALYTICS_ORACLE_SQL["events_pattern_match"] = _PATTERN_SQL
 
 
 def graph_personalized_pagerank(spark, sf_dir):
@@ -2692,10 +2556,6 @@ def _ppr_sql(iters: int = 3, dp: int = 9, top: int = 100) -> str:
 SELECT node, rank FROM {prev} ORDER BY rank DESC, node LIMIT {top}"""
     )
     return "".join(parts)
-
-
-ANALYTICS_QUERIES["graph_personalized_pagerank"] = graph_personalized_pagerank
-ANALYTICS_ORACLE_SQL["graph_personalized_pagerank"] = _ppr_sql()
 
 
 def docs_classifier_auc(spark, sf_dir):
@@ -2783,9 +2643,6 @@ SELECT n_docs::BIGINT AS n_docs, np::BIGINT AS n_pos, nn::BIGINT AS n_neg,
 FROM tot, s2
 """
 
-ANALYTICS_QUERIES["docs_classifier_auc"] = docs_classifier_auc
-ANALYTICS_ORACLE_SQL["docs_classifier_auc"] = _AUC_SQL
-
 
 def events_seasonal_decompose(spark, sf_dir):
     """Additive seasonal decomposition of daily event volume ([EXT],
@@ -2850,9 +2707,6 @@ SELECT day, cnt::BIGINT AS cnt, round(trend, 4) AS trend,
        round(det - seasonal, 4) AS residual
 FROM d JOIN seas USING (dow)
 """
-
-ANALYTICS_QUERIES["events_seasonal_decompose"] = events_seasonal_decompose
-ANALYTICS_ORACLE_SQL["events_seasonal_decompose"] = _SEASONAL_SQL
 
 
 def embedding_pq_codes(spark, sf_dir):
@@ -2960,10 +2814,6 @@ FROM f0 JOIN f1 USING (vec_id) GROUP BY 1, 2"""
     )
 
 
-ANALYTICS_QUERIES["embedding_pq_codes"] = embedding_pq_codes
-ANALYTICS_ORACLE_SQL["embedding_pq_codes"] = _pq_sql()
-
-
 def graph_weighted_sssp(spark, sf_dir):
     """Weighted single-source shortest paths ([EXT]): Bellman-Ford over
     the customer–supplier trade graph with INTEGER edge weights
@@ -3037,9 +2887,6 @@ SELECT node, dist FROM d3
 """
 )
 
-ANALYTICS_QUERIES["graph_weighted_sssp"] = graph_weighted_sssp
-ANALYTICS_ORACLE_SQL["graph_weighted_sssp"] = _SSSP_SQL
-
 
 def graph_hits(spark, sf_dir):
     """HITS hubs & authorities ([EXT], seventh graph operator): two
@@ -3103,9 +2950,6 @@ SELECT u AS node, 'hub' AS kind, h AS score FROM h2
 UNION ALL
 SELECT v AS node, 'auth' AS kind, a AS score FROM a2
 """
-
-ANALYTICS_QUERIES["graph_hits"] = graph_hits
-ANALYTICS_ORACLE_SQL["graph_hits"] = _HITS_SQL
 
 
 def events_value_winsorized(spark, sf_dir, approx: bool = False):
@@ -3177,9 +3021,6 @@ SELECT e.event_type,
 FROM events e JOIN cuts c USING (event_type)
 GROUP BY e.event_type
 """
-
-ANALYTICS_QUERIES["events_value_winsorized"] = events_value_winsorized
-ANALYTICS_ORACLE_SQL["events_value_winsorized"] = _WINSORIZED_SQL
 
 
 def ann_pq_adc_topk(spark, sf_dir):
@@ -3287,10 +3128,6 @@ FROM r WHERE knn_rank <= {topk}"""
     return "".join(parts)
 
 
-ANALYTICS_QUERIES["ann_pq_adc_topk"] = ann_pq_adc_topk
-ANALYTICS_ORACLE_SQL["ann_pq_adc_topk"] = _pq_adc_sql()
-
-
 def ann_mmr_topk(spark, sf_dir):
     """Maximal-marginal-relevance diversified retrieval ([EXT], the
     re-ranking stage of a retrieval stack): greedy λ·relevance −
@@ -3370,5 +3207,56 @@ FROM selu{k}"""
     return "".join(parts)
 
 
-ANALYTICS_QUERIES["ann_mmr_topk"] = ann_mmr_topk
-ANALYTICS_ORACLE_SQL["ann_mmr_topk"] = _mmr_sql()
+QUERIES = {
+    "events_value_trend": (events_value_trend, _TREND_SQL),
+    "events_markov_transitions": (events_markov_transitions, _MARKOV_SQL),
+    "docs_token_entropy": (docs_token_entropy, _ENTROPY_SQL),
+    "events_value_mad": (events_value_mad, _MAD_SQL),
+    "graph_pagerank": (graph_pagerank, _PAGERANK_SQL),
+    "events_cms_heavy_hitters": (events_cms_heavy_hitters, _CMS_SQL),
+    "events_kmv_distinct": (events_kmv_distinct, _KMV_SQL),
+    "events_retention_cohorts": (events_retention_cohorts, _RETENTION_SQL),
+    "events_user_ewma": (events_user_ewma, _EWMA_SQL),
+    "events_attribution_linear": (events_attribution_linear, _ATTRIB_LINEAR_SQL),
+    "streaming_cms_heavy_hitters": (streaming_cms_heavy_hitters, _STREAM_CMS_SQL),
+    "events_activity_streaks": (events_activity_streaks, _STREAKS_SQL),
+    "customer_rfm_segments": (customer_rfm_segments, _RFM_SQL),
+    "customer_rfm_segments_scaled": (customer_rfm_segments_scaled, _RFM_SQL),
+    "events_daily_resample": (events_daily_resample, _RESAMPLE_SQL),
+    "users_radius_join": (users_radius_join, _RADIUS_SQL),
+    "events_session_paths": (events_session_paths, _SESSION_PATHS_SQL),
+    "orders_scd2_join": (orders_scd2_join, _SCD2_SQL),
+    "events_rolling_distinct_users": (events_rolling_distinct_users, _ROLLING_DISTINCT_SQL),
+    "events_rolling_distinct_users_kmv": (events_rolling_distinct_users_kmv, _ROLLING_DISTINCT_KMV_SQL),
+    "events_chi_square": (events_chi_square, _CHI_SQUARE_SQL),
+    "events_gap_survival": (events_gap_survival, _SURVIVAL_SQL),
+    "orders_benford_digits": (orders_benford_digits, _BENFORD_SQL),
+    "customer_abc_analysis": (customer_abc_analysis, _ABC_SQL),
+    "customer_abc_analysis_scaled": (customer_abc_analysis_scaled, _ABC_SCALED_SQL),
+    "events_dow_seasonality": (events_dow_seasonality, _DOW_SQL),
+    "events_funnel_conversion": (events_funnel_conversion, _FUNNEL_SQL),
+    "events_error_bursts": (events_error_bursts, _ERROR_BURSTS_SQL),
+    "docs_weighted_sample": (docs_weighted_sample, _WEIGHTED_SAMPLE_SQL),
+    "graph_triangles": (graph_triangles, _TRIANGLES_SQL),
+    "events_kmv_type_overlap": (events_kmv_type_overlap, _KMV_OVERLAP_SQL),
+    "docs_bm25_search": (docs_bm25_search, _BM25_SQL),
+    "dedup_prefix_filter": (dedup_prefix_filter, _PREFIX_FILTER_SQL),
+    "graph_label_propagation": (graph_label_propagation, _LPA_SQL),
+    "events_incident_overlap": (events_incident_overlap, _INCIDENT_OVERLAP_SQL),
+    "basket_association_rules": (basket_association_rules, _ASSOC_SQL),
+    "graph_bfs_distance": (graph_bfs_distance, _BFS_SQL),
+    "events_user_growth": (events_user_growth, _USER_GROWTH_SQL),
+    "dedup_sorted_neighborhood": (dedup_sorted_neighborhood, _SNM_SQL),
+    "orders_pareto_frontier": (orders_pareto_frontier, _PARETO_SQL),
+    "events_cusum_changepoints": (events_cusum_changepoints, _CUSUM_SQL),
+    "events_pattern_match": (events_pattern_match, _PATTERN_SQL),
+    "graph_personalized_pagerank": (graph_personalized_pagerank, _ppr_sql()),
+    "docs_classifier_auc": (docs_classifier_auc, _AUC_SQL),
+    "events_seasonal_decompose": (events_seasonal_decompose, _SEASONAL_SQL),
+    "embedding_pq_codes": (embedding_pq_codes, _pq_sql()),
+    "graph_weighted_sssp": (graph_weighted_sssp, _SSSP_SQL),
+    "graph_hits": (graph_hits, _HITS_SQL),
+    "events_value_winsorized": (events_value_winsorized, _WINSORIZED_SQL),
+    "ann_pq_adc_topk": (ann_pq_adc_topk, _pq_adc_sql()),
+    "ann_mmr_topk": (ann_mmr_topk, _mmr_sql()),
+}

@@ -34,8 +34,6 @@ from pyspark.sql import functions as F
 
 from ..sources.registry import load_table as _t
 
-R10_QUERIES: dict = {}
-R10_ORACLE_SQL: dict = {}
 
 #: delta selectors: ~1/13 of orders and ~1/17 of customers form the delta
 #: batches — both sides change, so all three delta terms are non-empty.
@@ -110,9 +108,6 @@ FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY 1, 2
 """
 
-R10_QUERIES["mv_join_incremental"] = mv_join_incremental
-R10_ORACLE_SQL["mv_join_incremental"] = _MVJ_SQL
-
 
 #: deletion selector for the retraction query: ~1/19 of orders cancel.
 _MVJ_DEL_MOD = 19
@@ -183,9 +178,6 @@ FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 WHERE o.o_orderkey % 19 <> 0
 GROUP BY 1, 2
 """
-
-R10_QUERIES["mv_join_retraction"] = mv_join_retraction
-R10_ORACLE_SQL["mv_join_retraction"] = _MVJ_RETRACT_SQL
 
 
 #: dim-update selector: ~1/23 of customers change segment (SCD-1 update).
@@ -270,5 +262,9 @@ FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY 1, 2
 """
 
-R10_QUERIES["mv_join_dim_update"] = mv_join_dim_update
-R10_ORACLE_SQL["mv_join_dim_update"] = _MVJ_UPDATE_SQL
+
+QUERIES = {
+    "mv_join_incremental": (mv_join_incremental, _MVJ_SQL),
+    "mv_join_retraction": (mv_join_retraction, _MVJ_RETRACT_SQL),
+    "mv_join_dim_update": (mv_join_dim_update, _MVJ_UPDATE_SQL),
+}

@@ -42,9 +42,6 @@ from pyspark.sql import functions as F
 from ..cache import checkpoint
 from ..sources.registry import load_table as _t
 
-R6_QUERIES: dict = {}
-R6_ORACLE_SQL: dict = {}
-
 
 # --------------------------------------------------------------------------
 # graph_kcore
@@ -118,9 +115,6 @@ WITH ends AS (
 SELECT u AS node, count(*)::BIGINT AS degree FROM e{_KCORE_ROUNDS} GROUP BY u
 """
 )
-
-R6_QUERIES["graph_kcore"] = graph_kcore
-R6_ORACLE_SQL["graph_kcore"] = _KCORE_SQL
 
 
 # --------------------------------------------------------------------------
@@ -206,9 +200,6 @@ JOIN sizes su ON pairs.u = su.c
 JOIN sizes sv ON pairs.v = sv.c
 """
 
-R6_QUERIES["graph_common_neighbors"] = graph_common_neighbors
-R6_ORACLE_SQL["graph_common_neighbors"] = _CN_SQL
-
 
 # --------------------------------------------------------------------------
 # events_value_acf
@@ -288,9 +279,6 @@ SELECT event_type, lag_k, n AS n_pairs,
 FROM m
 """
 
-R6_QUERIES["events_value_acf"] = events_value_acf
-R6_ORACLE_SQL["events_value_acf"] = _ACF_SQL
-
 
 # --------------------------------------------------------------------------
 # events_holt_forecast
@@ -369,9 +357,6 @@ SELECT event_type, n_days,
        round(st[1] + 7.0::DOUBLE * st[2], 6) AS forecast_7d
 FROM folded
 """
-
-R6_QUERIES["events_holt_forecast"] = events_holt_forecast
-R6_ORACLE_SQL["events_holt_forecast"] = _HOLT_SQL
 
 
 # --------------------------------------------------------------------------
@@ -457,9 +442,6 @@ SELECT n1, n2, n_bins,
          / (n1 * n2)::DOUBLE AS d_stat
 FROM tot
 """
-
-R6_QUERIES["events_ks_binned"] = events_ks_binned
-R6_ORACLE_SQL["events_ks_binned"] = _KS_SQL
 
 
 # --------------------------------------------------------------------------
@@ -571,9 +553,6 @@ ORDER BY score DESC, n_occurrences DESC, phrase
 LIMIT {_RAKE_TOP_K}
 """
 
-R6_QUERIES["docs_rake_keywords"] = docs_rake_keywords
-R6_ORACLE_SQL["docs_rake_keywords"] = _RAKE_SQL
-
 
 # --------------------------------------------------------------------------
 # docs_hybrid_rrf
@@ -645,10 +624,6 @@ SELECT coalesce(lex.doc_id, dense.doc_id) AS doc_id, r_lex, r_dense,
          AS rrf_score
 FROM lex FULL OUTER JOIN dense ON lex.doc_id = dense.doc_id
 """
-
-
-R6_QUERIES["docs_hybrid_rrf"] = docs_hybrid_rrf
-R6_ORACLE_SQL["docs_hybrid_rrf"] = _rrf_sql()
 
 
 # --------------------------------------------------------------------------
@@ -727,9 +702,6 @@ SELECT deg.n AS node, deg.d AS degree,
        END AS lcc
 FROM deg LEFT JOIN tcount ON deg.n = tcount.n
 """
-
-R6_QUERIES["graph_local_clustering"] = graph_local_clustering
-R6_ORACLE_SQL["graph_local_clustering"] = _LCC_SQL
 
 
 # --------------------------------------------------------------------------
@@ -818,5 +790,15 @@ SELECT doc_id, chunk_id, count(*)::BIGINT AS chunk_len,
 FROM chunked GROUP BY 1, 2
 """
 
-R6_QUERIES["docs_cdc_chunks"] = docs_cdc_chunks
-R6_ORACLE_SQL["docs_cdc_chunks"] = _CDC_SQL
+
+QUERIES = {
+    "graph_kcore": (graph_kcore, _KCORE_SQL),
+    "graph_common_neighbors": (graph_common_neighbors, _CN_SQL),
+    "events_value_acf": (events_value_acf, _ACF_SQL),
+    "events_holt_forecast": (events_holt_forecast, _HOLT_SQL),
+    "events_ks_binned": (events_ks_binned, _KS_SQL),
+    "docs_rake_keywords": (docs_rake_keywords, _RAKE_SQL),
+    "docs_hybrid_rrf": (docs_hybrid_rrf, _rrf_sql()),
+    "graph_local_clustering": (graph_local_clustering, _LCC_SQL),
+    "docs_cdc_chunks": (docs_cdc_chunks, _CDC_SQL),
+}

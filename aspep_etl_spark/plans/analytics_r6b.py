@@ -64,8 +64,6 @@ from ..sources.registry import load_table as _t
 from .xxh64_sql import PRELUDE as _XXH_PRELUDE
 from .xxh64_sql import classifier_wts_ctes as _cls_wts
 
-R6B_QUERIES: dict = {}
-R6B_ORACLE_SQL: dict = {}
 
 _WORD_RE = "[a-z0-9]+"
 
@@ -169,9 +167,6 @@ SELECT w1, w2, c12, c1, c2,
        (c12 * n_docs)::DOUBLE / (c1 * c2)::DOUBLE AS lift
 FROM pairs, nd
 """
-
-R6B_QUERIES["docs_pmi_pairs"] = docs_pmi_pairs
-R6B_ORACLE_SQL["docs_pmi_pairs"] = _PMI_SQL
 
 
 # --------------------------------------------------------------------------
@@ -307,9 +302,6 @@ FROM terms
 GROUP BY doc_id, lang, cls, log_prior
 """
 
-R6B_QUERIES["docs_nb_classify"] = docs_nb_classify
-R6B_ORACLE_SQL["docs_nb_classify"] = _NB_SQL
-
 
 # --------------------------------------------------------------------------
 # classifier_pr_thresholds
@@ -400,9 +392,6 @@ SELECT t, tp, fp, fn,
             THEN (2 * tp)::DOUBLE / (2 * tp + fp + fn)::DOUBLE END AS f1
 FROM agg
 """
-
-R6B_QUERIES["classifier_pr_thresholds"] = classifier_pr_thresholds
-R6B_ORACLE_SQL["classifier_pr_thresholds"] = _PR_SQL
 
 
 # --------------------------------------------------------------------------
@@ -496,9 +485,6 @@ SELECT event_type, n_days,
 FROM s
 """
 
-R6B_QUERIES["events_theilsen_trend"] = events_theilsen_trend
-R6B_ORACLE_SQL["events_theilsen_trend"] = _THEILSEN_SQL
-
 
 # --------------------------------------------------------------------------
 # files_compaction_plan
@@ -560,9 +546,6 @@ SELECT source, bin_id, count(*)::BIGINT AS n_files,
        sum(file_bytes)::BIGINT AS bin_bytes, sum(n_docs)::BIGINT AS n_docs
 FROM planned GROUP BY 1, 2
 """
-
-R6B_QUERIES["files_compaction_plan"] = files_compaction_plan
-R6B_ORACLE_SQL["files_compaction_plan"] = _COMPACT_SQL
 
 
 # --------------------------------------------------------------------------
@@ -678,10 +661,6 @@ FROM zones GROUP BY 1, 2
 """
 
 
-R6B_QUERIES["layout_zonemap_skipping"] = layout_zonemap_skipping
-R6B_ORACLE_SQL["layout_zonemap_skipping"] = _zonemap_oracle()
-
-
 # --------------------------------------------------------------------------
 # graph_resource_allocation
 # --------------------------------------------------------------------------
@@ -755,9 +734,6 @@ SELECT u, v, n_common,
        s::DOUBLE / {_RA_LCM}::DOUBLE AS ra_index
 FROM pairs
 """
-
-R6B_QUERIES["graph_resource_allocation"] = graph_resource_allocation
-R6B_ORACLE_SQL["graph_resource_allocation"] = _RA_SQL
 
 
 # --------------------------------------------------------------------------
@@ -842,9 +818,6 @@ SELECT bin, bin::DOUBLE / {_CAL_BINS}.0 AS bin_lo, n, n_pos,
            - n_pos::DOUBLE / n::DOUBLE) AS abs_gap
 FROM agg
 """
-
-R6B_QUERIES["classifier_calibration_bins"] = classifier_calibration_bins
-R6B_ORACLE_SQL["classifier_calibration_bins"] = _CAL_SQL
 
 
 # --------------------------------------------------------------------------
@@ -940,9 +913,6 @@ SELECT change_type, count(*)::BIGINT AS n_keys,
 FROM typed GROUP BY change_type
 """
 
-R6B_QUERIES["orders_snapshot_diff"] = orders_snapshot_diff
-R6B_ORACLE_SQL["orders_snapshot_diff"] = _SNAP_SQL
-
 
 # --------------------------------------------------------------------------
 # events_quantile_sketch
@@ -1009,9 +979,6 @@ SELECT event_type, len(arr)::BIGINT AS n_sample,
 FROM g
 """
 
-R6B_QUERIES["events_quantile_sketch"] = events_quantile_sketch
-R6B_ORACLE_SQL["events_quantile_sketch"] = _QS_SQL
-
 
 # --------------------------------------------------------------------------
 # docs_chunk_dedup  (composes docs_cdc_chunks)
@@ -1043,11 +1010,11 @@ def docs_chunk_dedup(spark, sf_dir):
 
 
 def _chunk_dedup_oracle() -> str:
-    from .analytics_r6 import R6_ORACLE_SQL as _r6sql
+    from .analytics_r6 import _CDC_SQL
 
     return f"""
 WITH chunks AS (
-  SELECT * FROM ({_r6sql["docs_cdc_chunks"]}) s
+  SELECT * FROM ({_CDC_SQL}) s
 )
 SELECT chunk_hash, count(DISTINCT doc_id)::BIGINT AS n_docs,
        count(*)::BIGINT AS n_occurrences,
@@ -1055,10 +1022,6 @@ SELECT chunk_hash, count(DISTINCT doc_id)::BIGINT AS n_docs,
 FROM chunks WHERE chunk_len >= {_CHUNK_MIN_LEN}
 GROUP BY chunk_hash HAVING count(DISTINCT doc_id) >= 2
 """
-
-
-R6B_QUERIES["docs_chunk_dedup"] = docs_chunk_dedup
-R6B_ORACLE_SQL["docs_chunk_dedup"] = _chunk_dedup_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -1177,9 +1140,6 @@ SELECT ta AS tokens_a, tb AS tokens_b, v AS n_vocab,
        round(kl[1], 6) AS kl_ab, round(kl[2], 6) AS kl_ba
 FROM folded
 """
-
-R6B_QUERIES["docs_source_kl_drift"] = docs_source_kl_drift
-R6B_ORACLE_SQL["docs_source_kl_drift"] = _KL_SQL
 
 
 # --------------------------------------------------------------------------
@@ -1313,9 +1273,6 @@ SELECT ta AS tokens_a, tb AS tokens_b, v AS n_vocab,
 FROM folded
 """
 
-R6B_QUERIES["docs_source_kl_drift_capped"] = docs_source_kl_drift_capped
-R6B_ORACLE_SQL["docs_source_kl_drift_capped"] = _KL_CAPPED_SQL
-
 
 # --------------------------------------------------------------------------
 # events_mv_incremental
@@ -1382,5 +1339,20 @@ SELECT ts::DATE::VARCHAR AS day, event_type,
 FROM events GROUP BY 1, 2
 """
 
-R6B_QUERIES["events_mv_incremental"] = events_mv_incremental
-R6B_ORACLE_SQL["events_mv_incremental"] = _MV_SQL
+
+QUERIES = {
+    "docs_pmi_pairs": (docs_pmi_pairs, _PMI_SQL),
+    "docs_nb_classify": (docs_nb_classify, _NB_SQL),
+    "classifier_pr_thresholds": (classifier_pr_thresholds, _PR_SQL),
+    "events_theilsen_trend": (events_theilsen_trend, _THEILSEN_SQL),
+    "files_compaction_plan": (files_compaction_plan, _COMPACT_SQL),
+    "layout_zonemap_skipping": (layout_zonemap_skipping, _zonemap_oracle()),
+    "graph_resource_allocation": (graph_resource_allocation, _RA_SQL),
+    "classifier_calibration_bins": (classifier_calibration_bins, _CAL_SQL),
+    "orders_snapshot_diff": (orders_snapshot_diff, _SNAP_SQL),
+    "events_quantile_sketch": (events_quantile_sketch, _QS_SQL),
+    "docs_chunk_dedup": (docs_chunk_dedup, _chunk_dedup_oracle()),
+    "docs_source_kl_drift": (docs_source_kl_drift, _KL_SQL),
+    "docs_source_kl_drift_capped": (docs_source_kl_drift_capped, _KL_CAPPED_SQL),
+    "events_mv_incremental": (events_mv_incremental, _MV_SQL),
+}

@@ -71,8 +71,6 @@ from .lloyd_sql import lloyd_assign_prefix
 from .xxh64_sql import PRELUDE as _XXH_PRELUDE
 from .xxh64_sql import classifier_wts_ctes as _cls_wts
 
-R7_QUERIES: dict = {}
-R7_ORACLE_SQL: dict = {}
 
 _WORD_RE = "[a-z0-9]+"
 
@@ -211,9 +209,6 @@ FROM tok JOIN model USING (b)
 GROUP BY doc_id, lang
 """
 
-R7_QUERIES["docs_dsir_weights"] = docs_dsir_weights
-R7_ORACLE_SQL["docs_dsir_weights"] = _DSIR_SQL
-
 
 # --------------------------------------------------------------------------
 # dedup_semantic
@@ -288,9 +283,6 @@ SELECT af.vec_id, af.cl AS cluster, d.vec_id IS NULL AS kept
 FROM af LEFT JOIN dropped d ON af.vec_id = d.vec_id
 """
 )
-
-R7_QUERIES["dedup_semantic"] = dedup_semantic
-R7_ORACLE_SQL["dedup_semantic"] = _SEM_SQL
 
 
 # --------------------------------------------------------------------------
@@ -389,9 +381,6 @@ SELECT p.event_type, p.n_events,
 FROM pt p JOIN ci c USING (event_type)
 """
 
-R7_QUERIES["events_bootstrap_ci"] = events_bootstrap_ci
-R7_ORACLE_SQL["events_bootstrap_ci"] = _BOOT_SQL
-
 
 # --------------------------------------------------------------------------
 # events_mannwhitney
@@ -476,9 +465,6 @@ SELECT n1, n2, u2x::DOUBLE / 2 AS u1,
        (u2x - n1 * n2)::DOUBLE / (n1 * n2)::DOUBLE AS rank_biserial
 FROM s
 """
-
-R7_QUERIES["events_mannwhitney"] = events_mannwhitney
-R7_ORACLE_SQL["events_mannwhitney"] = _MW_SQL
 
 
 # --------------------------------------------------------------------------
@@ -607,9 +593,6 @@ FROM per p LEFT JOIN internal i USING (community), m
 """
 )
 
-R7_QUERIES["graph_modularity"] = graph_modularity
-R7_ORACLE_SQL["graph_modularity"] = _MOD_SQL
-
 
 # --------------------------------------------------------------------------
 # streaming_stream_join
@@ -637,9 +620,6 @@ FROM events c JOIN events p
  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
 WHERE c.event_type = 'click' AND p.event_type = 'purchase'
 """
-
-R7_QUERIES["streaming_stream_join"] = streaming_stream_join
-R7_ORACLE_SQL["streaming_stream_join"] = _STREAM_JOIN_SQL
 
 
 # --------------------------------------------------------------------------
@@ -710,9 +690,6 @@ SELECT n_docs, n_pos,
        se2::DOUBLE / (n_docs * 1000000000000)::DOUBLE AS brier
 FROM agg
 """
-
-R7_QUERIES["classifier_brier_score"] = classifier_brier_score
-R7_ORACLE_SQL["classifier_brier_score"] = _BRIER_SQL
 
 
 # --------------------------------------------------------------------------
@@ -850,9 +827,6 @@ FROM best b JOIN stay s USING (node)
 """
 )
 
-R7_QUERIES["graph_louvain_step"] = graph_louvain_step
-R7_ORACLE_SQL["graph_louvain_step"] = _LOUVAIN_SQL
-
 
 # --------------------------------------------------------------------------
 # streaming_rate_limit
@@ -893,9 +867,6 @@ WITH t AS (
 SELECT user_id, slot_s, event_id, slot_rank::BIGINT AS slot_rank
 FROM ranked WHERE slot_rank <= 3
 """
-
-R7_QUERIES["streaming_rate_limit"] = streaming_rate_limit
-R7_ORACLE_SQL["streaming_rate_limit"] = _RATE_LIMIT_SQL
 
 
 # --------------------------------------------------------------------------
@@ -992,5 +963,16 @@ SELECT exact_join_size, agms_estimate,
 FROM exact, est
 """
 
-R7_QUERIES["events_agms_join_size"] = events_agms_join_size
-R7_ORACLE_SQL["events_agms_join_size"] = _AGMS_SQL
+
+QUERIES = {
+    "docs_dsir_weights": (docs_dsir_weights, _DSIR_SQL),
+    "dedup_semantic": (dedup_semantic, _SEM_SQL),
+    "events_bootstrap_ci": (events_bootstrap_ci, _BOOT_SQL),
+    "events_mannwhitney": (events_mannwhitney, _MW_SQL),
+    "graph_modularity": (graph_modularity, _MOD_SQL),
+    "streaming_stream_join": (streaming_stream_join, _STREAM_JOIN_SQL),
+    "classifier_brier_score": (classifier_brier_score, _BRIER_SQL),
+    "graph_louvain_step": (graph_louvain_step, _LOUVAIN_SQL),
+    "streaming_rate_limit": (streaming_rate_limit, _RATE_LIMIT_SQL),
+    "events_agms_join_size": (events_agms_join_size, _AGMS_SQL),
+}

@@ -52,8 +52,6 @@ from pyspark.sql import functions as F
 
 from ..sources.registry import fan_for_compute, load_table as _t
 
-R8_QUERIES: dict = {}
-R8_ORACLE_SQL: dict = {}
 
 _LR_WORD_RE = "[a-z0-9]+"
 
@@ -128,10 +126,6 @@ WITH h AS (
 SELECT e.event_type, x.n_events, x.exact_distinct, e.hll_est
 FROM est e JOIN exact x USING (event_type)
 """
-
-
-R8_QUERIES["events_hll_distinct"] = events_hll_distinct
-R8_ORACLE_SQL["events_hll_distinct"] = _hll_sql()
 
 
 # --------------------------------------------------------------------------
@@ -233,10 +227,6 @@ SELECT w.week, n.n_days, x.exact_distinct, w.hll_est_week, n.sum_daily_est
 FROM week_est w JOIN naive n USING (week) JOIN exact x USING (week)
 
 """
-
-
-R8_QUERIES["events_hll_daily_rollup"] = events_hll_daily_rollup
-R8_ORACLE_SQL["events_hll_daily_rollup"] = _hll_rollup_sql()
 
 
 # --------------------------------------------------------------------------
@@ -449,9 +439,6 @@ SELECT a_key, b_key, name_dist::BIGINT AS name_dist,
 FROM scored WHERE score >= 6.0
 """
 
-R8_QUERIES["customer_record_linkage"] = customer_record_linkage
-R8_ORACLE_SQL["customer_record_linkage"] = _RL_SQL
-
 
 # --------------------------------------------------------------------------
 # layout_bucketed_join
@@ -572,9 +559,6 @@ SELECT c.c_mktsegment,
 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY c.c_mktsegment
 """
-
-R8_QUERIES["layout_bucketed_join"] = layout_bucketed_join
-R8_ORACLE_SQL["layout_bucketed_join"] = _BUCKETED_SQL
 
 
 # --------------------------------------------------------------------------
@@ -803,9 +787,6 @@ WITH tok AS MATERIALIZED (
 
 _LR_SQL = _lr_sql()
 
-R8_QUERIES["docs_logreg_train"] = docs_logreg_train
-R8_ORACLE_SQL["docs_logreg_train"] = _LR_SQL
-
 
 # --------------------------------------------------------------------------
 # streaming_dedup
@@ -828,5 +809,12 @@ SELECT event_id, user_id, event_type,
 FROM events
 """
 
-R8_QUERIES["streaming_dedup"] = streaming_dedup
-R8_ORACLE_SQL["streaming_dedup"] = _STREAM_DEDUP_SQL
+
+QUERIES = {
+    "events_hll_distinct": (events_hll_distinct, _hll_sql()),
+    "events_hll_daily_rollup": (events_hll_daily_rollup, _hll_rollup_sql()),
+    "customer_record_linkage": (customer_record_linkage, _RL_SQL),
+    "layout_bucketed_join": (layout_bucketed_join, _BUCKETED_SQL),
+    "docs_logreg_train": (docs_logreg_train, _LR_SQL),
+    "streaming_dedup": (streaming_dedup, _STREAM_DEDUP_SQL),
+}

@@ -60,9 +60,6 @@ from .oracle_util import SPARK_ROUND4_MACRO
 from .xxh64_sql import PRELUDE as _XXH_PRELUDE
 from .xxh64_sql import classifier_wts_ctes as _cls_wts
 
-R9_QUERIES: dict = {}
-R9_ORACLE_SQL: dict = {}
-
 
 # --------------------------------------------------------------------------
 # items_cooccurrence_topk
@@ -171,9 +168,6 @@ SELECT item, neighbor, sup_ab, spark_round4(cos) AS cosine, rnk::BIGINT AS rnk
 FROM ranked WHERE rnk <= {_CF_TOPK}
 """
 
-R9_QUERIES["items_cooccurrence_topk"] = items_cooccurrence_topk
-R9_ORACLE_SQL["items_cooccurrence_topk"] = _CF_SQL
-
 
 # --------------------------------------------------------------------------
 # docs_blocklist_phrases
@@ -252,9 +246,6 @@ SELECT doc_id, any_value(lang) AS lang,
 FROM bg JOIN bl USING (bg)
 GROUP BY doc_id
 """
-
-R9_QUERIES["docs_blocklist_phrases"] = docs_blocklist_phrases
-R9_ORACLE_SQL["docs_blocklist_phrases"] = _BL_SQL
 
 
 # --------------------------------------------------------------------------
@@ -358,9 +349,6 @@ SELECT a.event_type AS type_a, b.event_type AS type_b,
 FROM m a JOIN m b ON a.event_type < b.event_type
 """
 
-R9_QUERIES["events_welch_ttest"] = events_welch_ttest
-R9_ORACLE_SQL["events_welch_ttest"] = _WELCH_SQL
-
 
 # --------------------------------------------------------------------------
 # layout_range_partition
@@ -456,9 +444,6 @@ SELECT bucket, n_rows, min_key, max_key,
              / (sum(n_rows) OVER ())::DOUBLE, 4) AS balance
 FROM per
 """
-
-R9_QUERIES["layout_range_partition"] = layout_range_partition
-R9_ORACLE_SQL["layout_range_partition"] = _RP_SQL
 
 
 # --------------------------------------------------------------------------
@@ -588,9 +573,6 @@ FROM base, thr
 WHERE NOT is_cal
 GROUP BY n_cal, k, thr6
 """
-
-R9_QUERIES["classifier_conformal"] = classifier_conformal
-R9_ORACLE_SQL["classifier_conformal"] = _CONF_SQL
 
 
 # --------------------------------------------------------------------------
@@ -723,9 +705,6 @@ SELECT variant, n_users,
 FROM pv, g
 """
 
-R9_QUERIES["events_cuped_adjustment"] = events_cuped_adjustment
-R9_ORACLE_SQL["events_cuped_adjustment"] = _CUPED_SQL
-
 
 # --------------------------------------------------------------------------
 # user_rate_shrinkage
@@ -840,9 +819,6 @@ SELECT user_id, n, k,
          AS shrunk_rate
 FROM top, g
 """
-
-R9_QUERIES["user_rate_shrinkage"] = user_rate_shrinkage
-R9_ORACLE_SQL["user_rate_shrinkage"] = _EB_SQL
 
 
 # --------------------------------------------------------------------------
@@ -1074,9 +1050,6 @@ SELECT fold, count(*)::BIGINT AS n_docs,
 FROM pred WHERE r = 1
 GROUP BY fold
 """
-
-R9_QUERIES["docs_nb_crossval"] = docs_nb_crossval
-R9_ORACLE_SQL["docs_nb_crossval"] = _NBCV_SQL
 
 
 # --------------------------------------------------------------------------
@@ -1401,9 +1374,6 @@ FROM pred WHERE r = 1
 GROUP BY fold
 """
 
-R9_QUERIES["docs_nb_crossval_capped"] = docs_nb_crossval_capped
-R9_ORACLE_SQL["docs_nb_crossval_capped"] = _NBCV_CAPPED_SQL
-
 
 # --------------------------------------------------------------------------
 # customer_k_anonymity
@@ -1471,9 +1441,6 @@ SELECT cls_size, count(*)::BIGINT AS n_classes,
 FROM classes
 GROUP BY cls_size
 """
-
-R9_QUERIES["customer_k_anonymity"] = customer_k_anonymity
-R9_ORACLE_SQL["customer_k_anonymity"] = _KANON_SQL
 
 
 # --------------------------------------------------------------------------
@@ -1589,9 +1556,6 @@ SELECT bucket, src_rows, dst_rows, src_sum, dst_sum,
        (src_rows = dst_rows AND src_sum = dst_sum)::INT::BIGINT AS is_match
 FROM a FULL JOIN b USING (bucket)
 """
-
-R9_QUERIES["lineitem_reconciliation"] = lineitem_reconciliation
-R9_ORACLE_SQL["lineitem_reconciliation"] = _RECON_SQL
 
 
 # --------------------------------------------------------------------------
@@ -1715,10 +1679,6 @@ SELECT CAST(floor(ratio * 10) AS BIGINT) AS ratio_band,
 FROM pairs
 GROUP BY 1
 """
-
-
-R9_QUERIES["embedding_jl_audit"] = embedding_jl_audit
-R9_ORACLE_SQL["embedding_jl_audit"] = _jl_sql()
 
 
 # --------------------------------------------------------------------------
@@ -1846,9 +1806,6 @@ SELECT day, arm AS chosen_arm,
 FROM picked WHERE r = 1
 """
 
-R9_QUERIES["events_ucb1_replay"] = events_ucb1_replay
-R9_ORACLE_SQL["events_ucb1_replay"] = _UCB_SQL
-
 
 # --------------------------------------------------------------------------
 # events_ips_offpolicy
@@ -1960,9 +1917,6 @@ SELECT count(*)::BIGINT AS n_days,
 FROM terms
 """
 
-R9_QUERIES["events_ips_offpolicy"] = events_ips_offpolicy
-R9_ORACLE_SQL["events_ips_offpolicy"] = _IPS_SQL
-
 
 # --------------------------------------------------------------------------
 # media_phash_dedup
@@ -2027,10 +1981,6 @@ SELECT phash_hi, phash_lo, count(*)::BIGINT AS n_assets,
 FROM hashed
 GROUP BY 1, 2
 """
-
-
-R9_QUERIES["media_phash_dedup"] = media_phash_dedup
-R9_ORACLE_SQL["media_phash_dedup"] = _phash_sql()
 
 
 # --------------------------------------------------------------------------
@@ -2117,9 +2067,6 @@ SELECT series, n_train, n_test,
 FROM agg
 """
 
-R9_QUERIES["events_forecast_backtest"] = events_forecast_backtest
-R9_ORACLE_SQL["events_forecast_backtest"] = _FB_SQL
-
 
 # --------------------------------------------------------------------------
 # linkage_entity_clusters
@@ -2193,10 +2140,6 @@ FROM cc GROUP BY component
 """
 
 
-R9_QUERIES["linkage_entity_clusters"] = linkage_entity_clusters
-R9_ORACLE_SQL["linkage_entity_clusters"] = _linkage_cc_sql()
-
-
 # --------------------------------------------------------------------------
 # layout_hash_partition
 # --------------------------------------------------------------------------
@@ -2267,9 +2210,6 @@ SELECT count(*)::BIGINT AS n_buckets_used,
              - sum(o)::DOUBLE, 4) AS chi2
 FROM per
 """
-
-R9_QUERIES["layout_hash_partition"] = layout_hash_partition
-R9_ORACLE_SQL["layout_hash_partition"] = _HP_SQL
 
 
 # --------------------------------------------------------------------------
@@ -2391,9 +2331,6 @@ SELECT component, count(*)::BIGINT AS n_members,
 FROM cc GROUP BY component
 """
 
-R9_QUERIES["components_incremental"] = components_incremental
-R9_ORACLE_SQL["components_incremental"] = _CCD_SQL
-
 
 # --------------------------------------------------------------------------
 # streaming_mv_maintenance
@@ -2437,11 +2374,6 @@ SELECT ts::DATE::VARCHAR AS day, event_type,
        sum(round(value * 100)::BIGINT)::BIGINT AS cents_sum
 FROM events GROUP BY 1, 2
 """
-
-R9_QUERIES["streaming_mv_maintenance"] = streaming_mv_maintenance
-R9_ORACLE_SQL["streaming_mv_maintenance"] = _MV_FLAT_SQL
-R9_QUERIES["streaming_mv_many_batches"] = streaming_mv_many_batches
-R9_ORACLE_SQL["streaming_mv_many_batches"] = _MV_FLAT_SQL
 
 
 # --------------------------------------------------------------------------
@@ -2522,8 +2454,7 @@ SELECT 'orders.o_custkey->customer',
         WHERE o_custkey NOT IN (SELECT c_custkey FROM customer))::BIGINT
 """
 
-R9_QUERIES["referential_integrity_audit"] = referential_integrity_audit
-R9_ORACLE_SQL["referential_integrity_audit"] = (
+_RI_RATE_SQL = (
     "SELECT fk_edge, n_rows, n_orphans, "
     "round(n_orphans::DOUBLE / n_rows::DOUBLE, 6) AS orphan_rate FROM ("
     + _RI_SQL
@@ -2665,5 +2596,29 @@ SELECT count(*)::BIGINT AS n_bins,
 FROM terms
 """
 
-R9_QUERIES["events_value_psi"] = events_value_psi
-R9_ORACLE_SQL["events_value_psi"] = _PSI_SQL
+
+QUERIES = {
+    "items_cooccurrence_topk": (items_cooccurrence_topk, _CF_SQL),
+    "docs_blocklist_phrases": (docs_blocklist_phrases, _BL_SQL),
+    "events_welch_ttest": (events_welch_ttest, _WELCH_SQL),
+    "layout_range_partition": (layout_range_partition, _RP_SQL),
+    "classifier_conformal": (classifier_conformal, _CONF_SQL),
+    "events_cuped_adjustment": (events_cuped_adjustment, _CUPED_SQL),
+    "user_rate_shrinkage": (user_rate_shrinkage, _EB_SQL),
+    "docs_nb_crossval": (docs_nb_crossval, _NBCV_SQL),
+    "docs_nb_crossval_capped": (docs_nb_crossval_capped, _NBCV_CAPPED_SQL),
+    "customer_k_anonymity": (customer_k_anonymity, _KANON_SQL),
+    "lineitem_reconciliation": (lineitem_reconciliation, _RECON_SQL),
+    "embedding_jl_audit": (embedding_jl_audit, _jl_sql()),
+    "events_ucb1_replay": (events_ucb1_replay, _UCB_SQL),
+    "events_ips_offpolicy": (events_ips_offpolicy, _IPS_SQL),
+    "media_phash_dedup": (media_phash_dedup, _phash_sql()),
+    "events_forecast_backtest": (events_forecast_backtest, _FB_SQL),
+    "linkage_entity_clusters": (linkage_entity_clusters, _linkage_cc_sql()),
+    "layout_hash_partition": (layout_hash_partition, _HP_SQL),
+    "components_incremental": (components_incremental, _CCD_SQL),
+    "streaming_mv_maintenance": (streaming_mv_maintenance, _MV_FLAT_SQL),
+    "streaming_mv_many_batches": (streaming_mv_many_batches, _MV_FLAT_SQL),
+    "referential_integrity_audit": (referential_integrity_audit, _RI_RATE_SQL),
+    "events_value_psi": (events_value_psi, _PSI_SQL),
+}

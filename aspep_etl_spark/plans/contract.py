@@ -1,12 +1,14 @@
 """Driver-contract queries: every SURVEY.md §2 operator exercised on the
 driver's TPC-H-ish testdata, each with a DuckDB oracle twin.
 
-Each entry in ``SPARK_QUERIES`` is ``name -> fn(spark, sf_dir) -> DataFrame``
-built from the engine's own operator library (this is what proves the
-operators, not ad-hoc SQL).  ``ORACLE_SQL`` holds the ANSI-SQL twin DuckDB
-runs over the same parquet (driver registers tables as views).  Ops whose
-semantics SQL can't express (LSH, streaming, KMeans-IVF, binary plumbing)
-have no oracle → the driver records a rows-only check.
+This module and every plans module that contributes queries declare one
+``QUERIES = {name: (builder, oracle_sql)}`` dict.  ``builder(spark, sf_dir)
+-> DataFrame`` is built from the engine's own operator library (this is what
+proves the operators, not ad-hoc SQL); ``oracle_sql`` is the ANSI-SQL twin
+DuckDB runs over the same parquet (the driver registers tables as views).
+``merge_queries`` merges them once, in a fixed module order, into
+``SPARK_QUERIES`` (name -> builder) and ``ORACLE_SQL`` (name -> oracle); a
+name registered by two modules raises ``ValueError``.
 
 Engine-parity notes baked into every oracle:
 - every aggregate/computed column aliased identically on both sides;
@@ -22,6 +24,8 @@ Engine-parity notes baked into every oracle:
 """
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -2233,209 +2237,114 @@ from .lloyd_sql import lloyd_profile_sql as _lloyd_sql  # noqa: E402
 _EMB_CLUSTERS_SQL = _lloyd_sql(k=4, iters=3, dp=6)
 
 
-SPARK_QUERIES = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_top_orders": q3_top_orders,
-    "q5_region_revenue": q5_region_revenue,
-    "flagship_ratio_rank": flagship_ratio_rank,
-    "p5_date_range_filter": p5_date_range_filter,
-    "p8_significance_filter": p8_significance_filter,
-    "f5_numeric_cleanse": f5_numeric_cleanse,
-    "f7_safe_ratio": f7_safe_ratio,
-    "j1_broadcast_dim_join": j1_broadcast_dim_join,
-    "j2_recode_passthrough": j2_recode_passthrough,
-    "a1_grouped_median": a1_grouped_median,
-    "a1_grouped_median_approx": a1_grouped_median_approx,
-    "a1_grouped_median_sketch": a1_grouped_median_sketch,
-    "a3_stats_union_back": a3_stats_union_back,
-    "w1_lag_deltas": w1_lag_deltas,
-    "w3_rank_null_parity": w3_rank_null_parity,
-    "w4_signed_ranks": w4_signed_ranks,
-    "u1_union_by_name": u1_union_by_name,
-    "o1_topk_sort": o1_topk_sort,
-    "p6_anti_filter": p6_anti_filter,
-    "p9_point_lookup": p9_point_lookup,
-    "f1_slugify": f1_slugify,
-    "f3_dim_normalize": f3_dim_normalize,
-    "q6_revenue_delta": q6_revenue_delta,
-    "agg_rollup": agg_rollup,
-    "j4_semi_anti_join": j4_semi_anti_join,
-    "agg_count_distinct": agg_count_distinct,
-    "events_json_props": events_json_props,
-    "docs_quality_filter": docs_quality_filter,
-    "vocab_topk": vocab_topk,
-    "dedup_sweep": dedup_sweep,
-    "q2_min_cost_supplier": q2_min_cost_supplier,
-    "q14_promo_share": q14_promo_share,
-    "q18_large_orders": q18_large_orders,
-    "agg_cube": agg_cube,
-    "events_asof_join": events_asof_join,
-    "events_attribution": events_attribution,
-    "events_asof_forward": events_asof_forward,
-    "events_funnel": events_funnel,
-    "q4_order_priority": q4_order_priority,
-    "q12_priority_buckets": q12_priority_buckets,
-    "tfidf_topk": tfidf_topk,
-    "docs_chunking": docs_chunking,
-    "embedding_norm_stats": embedding_norm_stats,
-    "embedding_clusters": embedding_clusters_q,
-    "dedup_exact": dedup_exact_q,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard_q,
-    "dedup_ngram_jaccard_capped": dedup_ngram_jaccard_capped_q,
-    "text_quality": text_quality_q,
-    "text_langid": text_langid_q,
-    "text_fingerprint": text_fingerprint_q,
-    "ann_cosine_topk": ann_cosine_topk_q,
-    "dedup_embedding_cosine": dedup_embedding_cosine_q,
-    "events_hourly_rollup": events_hourly_rollup_q,
-    "events_latest_per_user": events_latest_per_user_q,
-    "events_sessionize": events_sessionize_q,
-    "multimodal_features": multimodal_features_q,
-    "ann_ivf_topk": ann_ivf_topk_q,
-    "ann_ndcg_eval": ann_ndcg_eval_q,
-    "ann_srp_lsh_topk": ann_srp_lsh_topk_q,
-    # oracled via the XXH64-in-SQL prelude (plans/xxh64_sql.py)
-    "dedup_minhash_lsh": dedup_minhash_lsh_q,
-    "dedup_simhash": dedup_simhash_q,
-    "docs_substring_dedup": docs_substring_dedup_q,
-    # streaming machinery with a full oracle: availableNow final state ==
-    # the batch aggregate (complete-mode tumbling rollup; same promotion
-    # rationale as streaming_cms_heavy_hitters)
-    "streaming_hourly_rollup": streaming_hourly_rollup_q,
-    # streaming stateful kernel, oracle-promoted for the single-batch
-    # emission (see streaming_sessionize_q docstring)
-    "streaming_sessionize": streaming_sessionize_q,
-    # full-chain DuckDB replay (plans/pipeline_oracle.py) — the integer-
-    # quantized fact makes the whole 130-column fan-out hash-exact
-    "aspep_extended_pipeline": aspep_extended_pipeline,
-}
+from .pipeline_oracle import ASPEP_PIPELINE_SQL as _ASPEP_PIPELINE_SQL  # noqa: E402
+from .xxh64_sql import minhash_lsh_oracle as _minhash_lsh_oracle  # noqa: E402
+from .xxh64_sql import simhash_oracle as _simhash_oracle  # noqa: E402
 
-from .pipeline_oracle import ASPEP_PIPELINE_SQL as _ASPEP_PIPELINE_SQL
-from .xxh64_sql import minhash_lsh_oracle as _minhash_lsh_oracle
-from .xxh64_sql import simhash_oracle as _simhash_oracle
-
+# DuckDB has no xxhash64, so the hash-seeded near-dup oracles carry a CREATE
+# MACRO prelude implementing XXH64 in SQL (macro-vs-twin exactness pinned in
+# tests/test_hash_twins.py).  _ASPEP_PIPELINE_SQL is a generated 130-column
+# replay of the full ASPEP chain, exact through the fact's integer quantization.
 _XXH_MINHASH_SQL = _minhash_lsh_oracle(num_perm=64, bands=16, threshold=0.2)
 _XXH_SIMHASH_SQL = _simhash_oracle()
 
-ORACLE_SQL = {
-    "q1_pricing_summary": _Q1_SQL,
-    "q3_top_orders": _Q3_SQL,
-    "q5_region_revenue": _Q5_SQL,
-    "flagship_ratio_rank": _FLAGSHIP_SQL,
-    "p5_date_range_filter": _P5_SQL,
-    "p8_significance_filter": _P8_SQL,
-    "f5_numeric_cleanse": _F5_SQL,
-    "f7_safe_ratio": _F7_SQL,
-    "j1_broadcast_dim_join": _J1_SQL,
-    "j2_recode_passthrough": _J2_SQL,
-    "a1_grouped_median": _A1_SQL,
-    "a1_grouped_median_approx": _A1_APPROX_SQL,
-    "a1_grouped_median_sketch": _A1_SKETCH_SQL,
-    "a3_stats_union_back": _A3_SQL,
-    "w1_lag_deltas": _W1_SQL,
-    "w3_rank_null_parity": _W3_SQL,
-    "w4_signed_ranks": _W4_SQL,
-    "u1_union_by_name": _U1_SQL,
-    "o1_topk_sort": _O1_SQL,
-    "p6_anti_filter": _P6_SQL,
-    "p9_point_lookup": _P9_SQL,
-    "f1_slugify": _F1_SQL,
-    "f3_dim_normalize": _F3_SQL,
-    "q6_revenue_delta": _Q6_SQL,
-    "agg_rollup": _ROLLUP_SQL,
-    "j4_semi_anti_join": _J4_SQL,
-    "agg_count_distinct": _COUNT_DISTINCT_SQL,
-    "events_json_props": _EVENTS_JSON_SQL,
-    "docs_quality_filter": _DOCS_QUALITY_SQL,
-    "vocab_topk": _VOCAB_SQL,
-    "dedup_sweep": _DEDUP_SWEEP_SQL,
-    "q2_min_cost_supplier": _Q2_SQL,
-    "q14_promo_share": _Q14_SQL,
-    "q18_large_orders": _Q18_SQL,
-    "agg_cube": _CUBE_SQL,
-    "events_asof_join": _ASOF_SQL,
-    "events_attribution": _ATTRIBUTION_SQL,
-    "events_asof_forward": _ASOF_FWD_SQL,
-    "events_funnel": _FUNNEL_SQL,
-    "q4_order_priority": _Q4_SQL,
-    "q12_priority_buckets": _Q12_SQL,
-    "tfidf_topk": _TFIDF_SQL,
-    "docs_chunking": _DOCS_CHUNK_SQL,
-    "embedding_norm_stats": _EMB_NORM_SQL,
-    "dedup_exact": _DEDUP_EXACT_SQL,
-    "dedup_ngram_jaccard": _NGRAM_JACCARD_SQL,
-    "dedup_ngram_jaccard_capped": _NGRAM_JACCARD_CAPPED_SQL,
-    "text_quality": _TEXT_QUALITY_SQL,
-    "text_langid": _TEXT_LANGID_SQL,
-    "text_fingerprint": _TEXT_FINGERPRINT_SQL,
-    "ann_cosine_topk": _ANN_SQL,
-    "dedup_embedding_cosine": _EMB_NEARDUP_SQL,
-    "events_hourly_rollup": _EVENTS_ROLLUP_SQL,
-    # the streamed rollup's availableNow final state equals the batch
-    # aggregate (equality-pinned in tests/test_streaming.py), so the
-    # batch SQL IS its oracle — the query still runs the real
-    # readStream/writeStream machinery
-    "streaming_hourly_rollup": _EVENTS_ROLLUP_SQL,
-    "streaming_sessionize": _STREAMING_SESSIONIZE_SQL,
-    "events_latest_per_user": _EVENTS_LATEST_SQL,
-    "events_sessionize": _EVENTS_SESSION_SQL,
-    "embedding_clusters": _EMB_CLUSTERS_SQL,
-    "multimodal_features": _MULTIMODAL_SQL,
-    "ann_ivf_topk": _ANN_IVF_SQL,
-    "ann_ndcg_eval": _ANN_NDCG_SQL,
-    "ann_srp_lsh_topk": _ANN_SRP_SQL,
-    # hash-seeded near-dup estimators: DuckDB has no xxhash64, so these
-    # oracles carry a CREATE MACRO prelude implementing XXH64 in SQL
-    # (plans/xxh64_sql.py; macro-vs-twin exactness pinned in
-    # tests/test_hash_twins.py)
-    "dedup_minhash_lsh": _XXH_MINHASH_SQL,
-    "dedup_simhash": _XXH_SIMHASH_SQL,
-    "docs_substring_dedup": _SUBSTRING_DEDUP_SQL,
-    # generated 130-column replay of the full ASPEP chain — exactness comes
-    # from the fact build's integer quantization, not rounding macros
-    "aspep_extended_pipeline": _ASPEP_PIPELINE_SQL,
+
+QUERIES = {
+    "q1_pricing_summary": (q1_pricing_summary, _Q1_SQL),
+    "q3_top_orders": (q3_top_orders, _Q3_SQL),
+    "q5_region_revenue": (q5_region_revenue, _Q5_SQL),
+    "flagship_ratio_rank": (flagship_ratio_rank, _FLAGSHIP_SQL),
+    "p5_date_range_filter": (p5_date_range_filter, _P5_SQL),
+    "p8_significance_filter": (p8_significance_filter, _P8_SQL),
+    "f5_numeric_cleanse": (f5_numeric_cleanse, _F5_SQL),
+    "f7_safe_ratio": (f7_safe_ratio, _F7_SQL),
+    "j1_broadcast_dim_join": (j1_broadcast_dim_join, _J1_SQL),
+    "j2_recode_passthrough": (j2_recode_passthrough, _J2_SQL),
+    "a1_grouped_median": (a1_grouped_median, _A1_SQL),
+    "a1_grouped_median_approx": (a1_grouped_median_approx, _A1_APPROX_SQL),
+    "a1_grouped_median_sketch": (a1_grouped_median_sketch, _A1_SKETCH_SQL),
+    "a3_stats_union_back": (a3_stats_union_back, _A3_SQL),
+    "w1_lag_deltas": (w1_lag_deltas, _W1_SQL),
+    "w3_rank_null_parity": (w3_rank_null_parity, _W3_SQL),
+    "w4_signed_ranks": (w4_signed_ranks, _W4_SQL),
+    "u1_union_by_name": (u1_union_by_name, _U1_SQL),
+    "o1_topk_sort": (o1_topk_sort, _O1_SQL),
+    "p6_anti_filter": (p6_anti_filter, _P6_SQL),
+    "p9_point_lookup": (p9_point_lookup, _P9_SQL),
+    "f1_slugify": (f1_slugify, _F1_SQL),
+    "f3_dim_normalize": (f3_dim_normalize, _F3_SQL),
+    "q6_revenue_delta": (q6_revenue_delta, _Q6_SQL),
+    "agg_rollup": (agg_rollup, _ROLLUP_SQL),
+    "j4_semi_anti_join": (j4_semi_anti_join, _J4_SQL),
+    "agg_count_distinct": (agg_count_distinct, _COUNT_DISTINCT_SQL),
+    "events_json_props": (events_json_props, _EVENTS_JSON_SQL),
+    "docs_quality_filter": (docs_quality_filter, _DOCS_QUALITY_SQL),
+    "vocab_topk": (vocab_topk, _VOCAB_SQL),
+    "dedup_sweep": (dedup_sweep, _DEDUP_SWEEP_SQL),
+    "q2_min_cost_supplier": (q2_min_cost_supplier, _Q2_SQL),
+    "q14_promo_share": (q14_promo_share, _Q14_SQL),
+    "q18_large_orders": (q18_large_orders, _Q18_SQL),
+    "agg_cube": (agg_cube, _CUBE_SQL),
+    "events_asof_join": (events_asof_join, _ASOF_SQL),
+    "events_attribution": (events_attribution, _ATTRIBUTION_SQL),
+    "events_asof_forward": (events_asof_forward, _ASOF_FWD_SQL),
+    "events_funnel": (events_funnel, _FUNNEL_SQL),
+    "q4_order_priority": (q4_order_priority, _Q4_SQL),
+    "q12_priority_buckets": (q12_priority_buckets, _Q12_SQL),
+    "tfidf_topk": (tfidf_topk, _TFIDF_SQL),
+    "docs_chunking": (docs_chunking, _DOCS_CHUNK_SQL),
+    "embedding_norm_stats": (embedding_norm_stats, _EMB_NORM_SQL),
+    "embedding_clusters": (embedding_clusters_q, _EMB_CLUSTERS_SQL),
+    "dedup_exact": (dedup_exact_q, _DEDUP_EXACT_SQL),
+    "dedup_ngram_jaccard": (dedup_ngram_jaccard_q, _NGRAM_JACCARD_SQL),
+    "dedup_ngram_jaccard_capped": (dedup_ngram_jaccard_capped_q, _NGRAM_JACCARD_CAPPED_SQL),
+    "text_quality": (text_quality_q, _TEXT_QUALITY_SQL),
+    "text_langid": (text_langid_q, _TEXT_LANGID_SQL),
+    "text_fingerprint": (text_fingerprint_q, _TEXT_FINGERPRINT_SQL),
+    "ann_cosine_topk": (ann_cosine_topk_q, _ANN_SQL),
+    "dedup_embedding_cosine": (dedup_embedding_cosine_q, _EMB_NEARDUP_SQL),
+    "events_hourly_rollup": (events_hourly_rollup_q, _EVENTS_ROLLUP_SQL),
+    "events_latest_per_user": (events_latest_per_user_q, _EVENTS_LATEST_SQL),
+    "events_sessionize": (events_sessionize_q, _EVENTS_SESSION_SQL),
+    "multimodal_features": (multimodal_features_q, _MULTIMODAL_SQL),
+    "ann_ivf_topk": (ann_ivf_topk_q, _ANN_IVF_SQL),
+    "ann_ndcg_eval": (ann_ndcg_eval_q, _ANN_NDCG_SQL),
+    "ann_srp_lsh_topk": (ann_srp_lsh_topk_q, _ANN_SRP_SQL),
+    "dedup_minhash_lsh": (dedup_minhash_lsh_q, _XXH_MINHASH_SQL),
+    "dedup_simhash": (dedup_simhash_q, _XXH_SIMHASH_SQL),
+    "docs_substring_dedup": (docs_substring_dedup_q, _SUBSTRING_DEDUP_SQL),
+    # availableNow final state == the batch aggregate (tests/test_streaming.py)
+    "streaming_hourly_rollup": (streaming_hourly_rollup_q, _EVENTS_ROLLUP_SQL),
+    "streaming_sessionize": (streaming_sessionize_q, _STREAMING_SESSIONIZE_SQL),
+    "aspep_extended_pipeline": (aspep_extended_pipeline, _ASPEP_PIPELINE_SQL),
 }
 
-from .analytics_extra import ANALYTICS_ORACLE_SQL, ANALYTICS_QUERIES  # noqa: E402
-from .analytics_r6 import R6_ORACLE_SQL, R6_QUERIES  # noqa: E402
-from .analytics_r6b import R6B_ORACLE_SQL, R6B_QUERIES  # noqa: E402
-from .analytics_r7 import R7_ORACLE_SQL, R7_QUERIES  # noqa: E402
-from .analytics_r8 import R8_ORACLE_SQL, R8_QUERIES  # noqa: E402
-from .analytics_r9 import R9_ORACLE_SQL, R9_QUERIES  # noqa: E402
-from .analytics_r10 import R10_ORACLE_SQL, R10_QUERIES  # noqa: E402
-from .curation import CURATION_ORACLE_SQL, CURATION_QUERIES  # noqa: E402
-from .ingest_funnel import INGEST_ORACLE_SQL, INGEST_QUERIES  # noqa: E402
-from .llm_extra import LLM_ORACLE_SQL, LLM_QUERIES  # noqa: E402
-from .llm_scale import SCALE_ORACLE_SQL, SCALE_QUERIES  # noqa: E402
-from .relational_extra import REL_ORACLE_SQL, REL_QUERIES  # noqa: E402
-from .tokenizer import TOKENIZER_ORACLE_SQL, TOKENIZER_QUERIES  # noqa: E402
-from .tpch_extra import EXTRA_ORACLE_SQL, EXTRA_QUERIES  # noqa: E402
 
-SPARK_QUERIES.update(EXTRA_QUERIES)
-SPARK_QUERIES.update(LLM_QUERIES)
-SPARK_QUERIES.update(REL_QUERIES)
-SPARK_QUERIES.update(CURATION_QUERIES)
-SPARK_QUERIES.update(SCALE_QUERIES)
-SPARK_QUERIES.update(ANALYTICS_QUERIES)
-SPARK_QUERIES.update(R6_QUERIES)
-SPARK_QUERIES.update(R6B_QUERIES)
-SPARK_QUERIES.update(R7_QUERIES)
-SPARK_QUERIES.update(R8_QUERIES)
-SPARK_QUERIES.update(R9_QUERIES)
-SPARK_QUERIES.update(R10_QUERIES)
-SPARK_QUERIES.update(INGEST_QUERIES)
-SPARK_QUERIES.update(TOKENIZER_QUERIES)
-ORACLE_SQL.update(EXTRA_ORACLE_SQL)
-ORACLE_SQL.update(LLM_ORACLE_SQL)
-ORACLE_SQL.update(REL_ORACLE_SQL)
-ORACLE_SQL.update(CURATION_ORACLE_SQL)
-ORACLE_SQL.update(SCALE_ORACLE_SQL)
-ORACLE_SQL.update(ANALYTICS_ORACLE_SQL)
-ORACLE_SQL.update(R6_ORACLE_SQL)
-ORACLE_SQL.update(R6B_ORACLE_SQL)
-ORACLE_SQL.update(R7_ORACLE_SQL)
-ORACLE_SQL.update(R8_ORACLE_SQL)
-ORACLE_SQL.update(R9_ORACLE_SQL)
-ORACLE_SQL.update(R10_ORACLE_SQL)
-ORACLE_SQL.update(INGEST_ORACLE_SQL)
-ORACLE_SQL.update(TOKENIZER_ORACLE_SQL)
+def merge_queries(modules) -> dict:
+    """Merge each module's ``QUERIES`` (``name -> (builder, oracle_sql)``)
+    in module order.  A name registered twice raises ``ValueError`` naming
+    both modules, instead of the later entry silently replacing the first."""
+    merged, owner = {}, {}
+    for module in modules:
+        for name, entry in module.QUERIES.items():
+            if name in owner:
+                raise ValueError(
+                    f"query {name!r} is registered by both {owner[name]} and {module.__name__}"
+                )
+            merged[name], owner[name] = entry, module.__name__
+    return merged
+
+
+from . import (  # noqa: E402
+    analytics_extra, analytics_r6, analytics_r6b, analytics_r7, analytics_r8, analytics_r9,
+    analytics_r10, curation, ingest_funnel, llm_extra, llm_scale, relational_extra, tokenizer,
+    tpch_extra,
+)
+
+_REGISTRY = merge_queries((
+    sys.modules[__name__], tpch_extra, llm_extra, relational_extra, curation, llm_scale,
+    analytics_extra, analytics_r6, analytics_r6b, analytics_r7, analytics_r8, analytics_r9,
+    analytics_r10, ingest_funnel, tokenizer,
+))
+SPARK_QUERIES = {name: builder for name, (builder, _) in _REGISTRY.items()}
+ORACLE_SQL = {name: sql for name, (_, sql) in _REGISTRY.items()}

@@ -217,5 +217,5 @@ UNION ALL SELECT '4_quality', count(*)::BIGINT FROM s4
 UNION ALL SELECT '5_' || split, count(*)::BIGINT FROM cur GROUP BY split
 """
 
-CURATION_QUERIES = {"llm_curation_funnel": llm_curation_funnel}
-CURATION_ORACLE_SQL = {"llm_curation_funnel": _CURATION_FUNNEL_SQL}
+
+QUERIES = {"llm_curation_funnel": (llm_curation_funnel, _CURATION_FUNNEL_SQL)}

@@ -231,5 +231,5 @@ UNION ALL SELECT '5_classifier', count(*)::BIGINT FROM s5
 UNION ALL SELECT '6_' || split, count(*)::BIGINT FROM admitted GROUP BY split
 """
 
-INGEST_QUERIES = {"llm_ingest_funnel": llm_ingest_funnel}
-INGEST_ORACLE_SQL = {"llm_ingest_funnel": _INGEST_FUNNEL_SQL}
+
+QUERIES = {"llm_ingest_funnel": (llm_ingest_funnel, _INGEST_FUNNEL_SQL)}

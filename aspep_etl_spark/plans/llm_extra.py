@@ -596,72 +596,6 @@ WHERE neg_rank <= 5
 """
 
 
-def docs_weighted_sample(spark, sf_dir):
-    """Importance sampling with DATA-DEPENDENT rates: each (source, lang)
-    domain samples at min(1, 4·mix_weight) — up-sampling small
-    high-quality domains per the temperature-0.5 mixing table — while the
-    row-level selection stays a pure md5-hash function, so the sample is
-    deterministic and engine-reproducible even though the rates come from
-    the data.  The per-domain threshold is formatted as an 8-hex string
-    in-plan (format_string/printf) and broadcast onto the corpus scan."""
-    docs = _t(spark, sf_dir, "documents")
-    from ..operators.text import token_count
-
-    per = docs.groupBy("source", "lang").agg(
-        F.sum(token_count(F.col("text"))).alias("n_tokens")
-    )
-    tot = per.agg(F.sum(F.sqrt(F.col("n_tokens"))).alias("__tw"))
-    # explicit floor on BOTH engines: Spark cast(long) truncates but
-    # DuckDB CAST AS BIGINT rounds — without floor the thresholds
-    # silently differ by one hex unit half the time
-    scaled = F.floor(
-        F.sqrt(F.col("n_tokens")) / F.col("__tw") * 4.0 * F.lit(4294967296.0)
-    ).cast("long")
-    rates = per.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "lang",
-        # saturated domains (rate >= 1) use the 'g' sentinel — it sorts
-        # after every hex digest, so "keep all" really keeps the 1-in-2^32
-        # row whose prefix is 'ffffffff' (same trick as sampling._hex_threshold)
-        F.when(scaled >= F.lit(4294967296), F.lit("g"))
-        .otherwise(F.format_string("%08x", scaled))
-        .alias("__thr"),
-    )
-    return (
-        docs.join(F.broadcast(rates), ["source", "lang"])
-        .filter(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit("wsample"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            )
-            < F.col("__thr")
-        )
-        .select("doc_id", "source", "lang")
-    )
-
-
-_WEIGHTED_SAMPLE_SQL = """
-WITH per AS (
-  SELECT source, lang,
-         sum(len(regexp_extract_all(lower(text), '[a-z0-9]+')))::BIGINT AS n_tokens
-  FROM documents GROUP BY source, lang
-), tot AS (
-  SELECT sum(sqrt(n_tokens)) AS tw FROM per
-), rates AS (
-  SELECT source, lang,
-         CASE WHEN CAST(floor(sqrt(n_tokens) / tw * 4.0 * 4294967296.0) AS BIGINT) >= 4294967296
-              THEN 'g'
-              ELSE printf('%08x', CAST(floor(sqrt(n_tokens) / tw * 4.0 * 4294967296.0) AS BIGINT))
-         END AS thr
-  FROM per, tot
-)
-SELECT d.doc_id, d.source, d.lang
-FROM documents d JOIN rates r ON d.source = r.source AND d.lang = r.lang
-WHERE substr(md5('wsample' || '|' || d.doc_id::VARCHAR), 1, 8) < r.thr
-"""
-
-
 def docs_ngram_novelty(spark, sf_dir):
     """Cross-corpus novelty score per document ([EXT]): the fraction of a
     doc's distinct word-5-gram shingles that appear in NO other document
@@ -715,32 +649,16 @@ GROUP BY doc_id
 """
 
 
-LLM_QUERIES = {
-    "docs_ngram_novelty": docs_ngram_novelty,
-    "docs_repetition": docs_repetition,
-    "pii_scan": pii_scan,
-    "docs_decontaminate": docs_decontaminate,
-    "docs_unigram_logprob": docs_unigram_logprob,
-    "embedding_top_component": embedding_top_component,
-    "docs_pack_sequences": docs_pack_sequences,
-    "ann_negative_samples": ann_negative_samples,
-    "ann_negative_samples_scaled": ann_negative_samples_scaled,
-    "docs_weighted_sample": docs_weighted_sample,
-    "dedup_clusters": dedup_clusters,
-    "embedding_quantization": embedding_quantization,
-}
-
-LLM_ORACLE_SQL = {
-    "docs_ngram_novelty": _NGRAM_NOVELTY_SQL,
-    "docs_repetition": _DOCS_REPETITION_SQL,
-    "pii_scan": _PII_SCAN_SQL,
-    "docs_decontaminate": _DECONTAMINATE_SQL,
-    "docs_unigram_logprob": _UNIGRAM_SQL,
-    "embedding_top_component": _TOP_COMPONENT_SQL,
-    "docs_pack_sequences": _PACK_SQL,
-    "ann_negative_samples": _NEG_SAMPLES_SQL,
-    "ann_negative_samples_scaled": _NEG_SAMPLES_SCALED_SQL,
-    "docs_weighted_sample": _WEIGHTED_SAMPLE_SQL,
-    "dedup_clusters": _DEDUP_CLUSTERS_SQL,
-    "embedding_quantization": _EMB_QUANT_SQL,
+QUERIES = {
+    "docs_ngram_novelty": (docs_ngram_novelty, _NGRAM_NOVELTY_SQL),
+    "docs_repetition": (docs_repetition, _DOCS_REPETITION_SQL),
+    "pii_scan": (pii_scan, _PII_SCAN_SQL),
+    "docs_decontaminate": (docs_decontaminate, _DECONTAMINATE_SQL),
+    "docs_unigram_logprob": (docs_unigram_logprob, _UNIGRAM_SQL),
+    "embedding_top_component": (embedding_top_component, _TOP_COMPONENT_SQL),
+    "docs_pack_sequences": (docs_pack_sequences, _PACK_SQL),
+    "ann_negative_samples": (ann_negative_samples, _NEG_SAMPLES_SQL),
+    "ann_negative_samples_scaled": (ann_negative_samples_scaled, _NEG_SAMPLES_SCALED_SQL),
+    "dedup_clusters": (dedup_clusters, _DEDUP_CLUSTERS_SQL),
+    "embedding_quantization": (embedding_quantization, _EMB_QUANT_SQL),
 }

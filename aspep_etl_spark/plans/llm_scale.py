@@ -295,21 +295,6 @@ FROM ranked GROUP BY new_id
 """
 
 
-SCALE_QUERIES = {
-    "docs_classifier_score": docs_classifier_score,
-    "docs_bloom_decontaminate": docs_bloom_decontaminate,
-    "docs_bigram_logprob": docs_bigram_logprob,
-    "dedup_incremental": dedup_incremental,
-}
-
-SCALE_ORACLE_SQL = {
-    "docs_classifier_score": _CLASSIFIER_SQL,
-    "docs_bloom_decontaminate": _BLOOM_SQL,
-    "docs_bigram_logprob": _BIGRAM_SQL,
-    "dedup_incremental": _INCREMENTAL_SQL,
-}
-
-
 def docs_grouped_split(spark, sf_dir):
     """Group-leakage-safe train/val/test split: the split is hashed from
     the SOURCE (the group key), not the row, so every document of a
@@ -339,5 +324,11 @@ FROM (SELECT source, substr(md5('gsplit' || '|' || source), 1, 8) AS h
 GROUP BY 1, 2
 """
 
-SCALE_QUERIES["docs_grouped_split"] = docs_grouped_split
-SCALE_ORACLE_SQL["docs_grouped_split"] = _GROUPED_SPLIT_SQL
+
+QUERIES = {
+    "docs_classifier_score": (docs_classifier_score, _CLASSIFIER_SQL),
+    "docs_bloom_decontaminate": (docs_bloom_decontaminate, _BLOOM_SQL),
+    "docs_bigram_logprob": (docs_bigram_logprob, _BIGRAM_SQL),
+    "dedup_incremental": (dedup_incremental, _INCREMENTAL_SQL),
+    "docs_grouped_split": (docs_grouped_split, _GROUPED_SPLIT_SQL),
+}

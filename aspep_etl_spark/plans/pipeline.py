@@ -111,10 +111,10 @@ def derive_extended_stats(stats_df: DataFrame) -> DataFrame:
     columns, computed by the Arrow-batched pandas kernels
     (``yoy_deltas_wide`` / ``ranks_wide``): stacked JVM window expressions
     grow Catalyst plan/codegen time with every column, the kernel plan is
-    O(1) in column count (see PERF.md).  The deltas pin legacy-pandas
-    ``pct_change`` semantics (``reference_exact``: ffill-padded ratio, ±inf
-    on a zero base feeding the pos/neg ranks — see operators/windows.py),
-    which only the pandas kernels express.
+    O(1) in column count (see PERF.md).  ``yoy_deltas_wide`` pins
+    legacy-pandas ``pct_change`` semantics (ffill-padded ratio, ±inf on a
+    zero base feeding the pos/neg ranks — see operators/windows.py), which
+    only the pandas kernels express.
     """
     base_cols = [c for c in schema.BASE_METRIC_COLS if c in stats_df.columns]
     extra_numeric = [
@@ -123,10 +123,7 @@ def derive_extended_stats(stats_df: DataFrame) -> DataFrame:
         if c not in base_cols
     ]
     metric_cols = base_cols + extra_numeric
-    df = yoy_deltas_wide(
-        stats_df, ["state_code", "gov_function"], ["year"], metric_cols,
-        reference_exact=True,
-    )
+    df = yoy_deltas_wide(stats_df, ["state_code", "gov_function"], ["year"], metric_cols)
     delta_cols = [c for c in df.columns if c.endswith(schema.DELTA_SUFFIXES)]
     # Cohorts intentionally include US / US-median / US-mean rows — the
     # reference ranks before any filtering (assets.py:457-474).

@@ -931,65 +931,32 @@ FROM events e JOIN s ON e.event_type = s.event_type
 """
 
 
-REL_QUERIES = {
-    "sample_stratified": sample_stratified,
-    "docs_split": docs_split,
-    "events_pivot": events_pivot,
-    "lineitem_unpivot": lineitem_unpivot,
-    "events_interval_join": events_interval_join,
-    "events_rolling_hour": events_rolling_hour,
-    "events_value_percentiles": events_value_percentiles,
-    "orders_price_deciles": orders_price_deciles,
-    "orders_price_deciles_scaled": orders_price_deciles_scaled,
-    "dedup_levenshtein": dedup_levenshtein,
-    "orders_upsert_merge": orders_upsert_merge,
-    "events_debounce": events_debounce,
-    "events_hopping_window": events_hopping_window,
-    "docs_domain_mix": docs_domain_mix,
-    "user_event_type_sets": user_event_type_sets,
-    "events_value_distribution": events_value_distribution,
-    "user_modal_event": user_modal_event,
-    "dq_audit": dq_audit,
-    "events_session_window": events_session_window,
-    "events_grouping_sets": events_grouping_sets,
-    "orders_profile": orders_profile,
-    "events_value_histogram": events_value_histogram,
-    "orders_zorder_key": orders_zorder_key,
-    "lineitem_salted_agg": lineitem_salted_agg,
-    "docs_fixed_k_sample": docs_fixed_k_sample,
-    "events_anomaly_flags": events_anomaly_flags,
-    # oracle-promoted: deterministic debounced key set (see docstring)
-    "streaming_debounce": streaming_debounce_q,
-}
-
-REL_ORACLE_SQL = {
-    "sample_stratified": _SAMPLE_SQL,
-    "docs_split": _SPLIT_SQL,
-    "events_pivot": _PIVOT_SQL,
-    "lineitem_unpivot": _UNPIVOT_SQL,
-    "events_interval_join": _INTERVAL_SQL,
-    "events_rolling_hour": _ROLLING_SQL,
-    "events_value_percentiles": _PERCENTILES_SQL,
-    "orders_price_deciles": _DECILES_SQL,
-    # the scaled twin computes the identical result (exact global rank +
-    # integer NTILE math) — it reuses the exact form's oracle verbatim
-    "orders_price_deciles_scaled": _DECILES_SQL,
-    "dedup_levenshtein": _LEVENSHTEIN_SQL,
-    "orders_upsert_merge": _UPSERT_SQL,
-    "events_debounce": _DEBOUNCE_SQL,
-    "events_hopping_window": _HOPPING_SQL,
-    "docs_domain_mix": _DOMAIN_MIX_SQL,
-    "user_event_type_sets": _TYPE_SETS_SQL,
-    "events_value_distribution": _DISTRIBUTION_SQL,
-    "user_modal_event": _MODAL_SQL,
-    "dq_audit": _DQ_SQL,
-    "events_session_window": _SESSION_WINDOW_SQL,
-    "events_grouping_sets": _GROUPING_SETS_SQL,
-    "orders_profile": _PROFILE_SQL,
-    "events_value_histogram": _HISTOGRAM_SQL,
-    "orders_zorder_key": _zorder_oracle(),
-    "lineitem_salted_agg": _SALTED_AGG_SQL,
-    "docs_fixed_k_sample": _FIXED_K_SQL,
-    "events_anomaly_flags": _ANOMALY_SQL,
-    "streaming_debounce": _STREAMING_DEBOUNCE_SQL,
+QUERIES = {
+    "sample_stratified": (sample_stratified, _SAMPLE_SQL),
+    "docs_split": (docs_split, _SPLIT_SQL),
+    "events_pivot": (events_pivot, _PIVOT_SQL),
+    "lineitem_unpivot": (lineitem_unpivot, _UNPIVOT_SQL),
+    "events_interval_join": (events_interval_join, _INTERVAL_SQL),
+    "events_rolling_hour": (events_rolling_hour, _ROLLING_SQL),
+    "events_value_percentiles": (events_value_percentiles, _PERCENTILES_SQL),
+    "orders_price_deciles": (orders_price_deciles, _DECILES_SQL),
+    "orders_price_deciles_scaled": (orders_price_deciles_scaled, _DECILES_SQL),
+    "dedup_levenshtein": (dedup_levenshtein, _LEVENSHTEIN_SQL),
+    "orders_upsert_merge": (orders_upsert_merge, _UPSERT_SQL),
+    "events_debounce": (events_debounce, _DEBOUNCE_SQL),
+    "events_hopping_window": (events_hopping_window, _HOPPING_SQL),
+    "docs_domain_mix": (docs_domain_mix, _DOMAIN_MIX_SQL),
+    "user_event_type_sets": (user_event_type_sets, _TYPE_SETS_SQL),
+    "events_value_distribution": (events_value_distribution, _DISTRIBUTION_SQL),
+    "user_modal_event": (user_modal_event, _MODAL_SQL),
+    "dq_audit": (dq_audit, _DQ_SQL),
+    "events_session_window": (events_session_window, _SESSION_WINDOW_SQL),
+    "events_grouping_sets": (events_grouping_sets, _GROUPING_SETS_SQL),
+    "orders_profile": (orders_profile, _PROFILE_SQL),
+    "events_value_histogram": (events_value_histogram, _HISTOGRAM_SQL),
+    "orders_zorder_key": (orders_zorder_key, _zorder_oracle()),
+    "lineitem_salted_agg": (lineitem_salted_agg, _SALTED_AGG_SQL),
+    "docs_fixed_k_sample": (docs_fixed_k_sample, _FIXED_K_SQL),
+    "events_anomaly_flags": (events_anomaly_flags, _ANOMALY_SQL),
+    "streaming_debounce": (streaming_debounce_q, _STREAMING_DEBOUNCE_SQL),
 }

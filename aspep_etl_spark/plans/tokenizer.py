@@ -203,14 +203,8 @@ FROM agg
 )
 
 
-TOKENIZER_QUERIES = {
-    "docs_bpe_merges": docs_bpe_merges,
-    "docs_bpe_subword_counts": docs_bpe_subword_counts,
-    "docs_bpe_fertility": docs_bpe_fertility,
-}
-
-TOKENIZER_ORACLE_SQL = {
-    "docs_bpe_merges": _BPE_MERGES_SQL,
-    "docs_bpe_subword_counts": _BPE_SUBWORDS_SQL,
-    "docs_bpe_fertility": _BPE_FERTILITY_SQL,
+QUERIES = {
+    "docs_bpe_merges": (docs_bpe_merges, _BPE_MERGES_SQL),
+    "docs_bpe_subword_counts": (docs_bpe_subword_counts, _BPE_SUBWORDS_SQL),
+    "docs_bpe_fertility": (docs_bpe_fertility, _BPE_FERTILITY_SQL),
 }

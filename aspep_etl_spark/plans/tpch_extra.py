@@ -570,34 +570,18 @@ GROUP BY c_nationkey
 """
 
 
-EXTRA_QUERIES = {
-    "q7_volume_shipping": q7_volume_shipping,
-    "q8_market_share": q8_market_share,
-    "q9_product_profit": q9_product_profit,
-    "q10_returned_items": q10_returned_items,
-    "q11_value_concentration": q11_value_concentration,
-    "q13_order_distribution": q13_order_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q16_part_supplier_variety": q16_part_supplier_variety,
-    "q17_small_quantity": q17_small_quantity,
-    "q19_discounted_revenue": q19_discounted_revenue,
-    "q20_excess_suppliers": q20_excess_suppliers,
-    "q21_waiting_supplier": q21_waiting_supplier,
-    "q22_sales_opportunity": q22_sales_opportunity,
-}
-
-EXTRA_ORACLE_SQL = {
-    "q7_volume_shipping": _Q7_SQL,
-    "q8_market_share": _Q8_SQL,
-    "q9_product_profit": _Q9_SQL,
-    "q10_returned_items": _Q10_SQL,
-    "q11_value_concentration": _Q11_SQL,
-    "q13_order_distribution": _Q13_SQL,
-    "q15_top_supplier": _Q15_SQL,
-    "q16_part_supplier_variety": _Q16_SQL,
-    "q17_small_quantity": _Q17_SQL,
-    "q19_discounted_revenue": _Q19_SQL,
-    "q20_excess_suppliers": _Q20_SQL,
-    "q21_waiting_supplier": _Q21_SQL,
-    "q22_sales_opportunity": _Q22_SQL,
+QUERIES = {
+    "q7_volume_shipping": (q7_volume_shipping, _Q7_SQL),
+    "q8_market_share": (q8_market_share, _Q8_SQL),
+    "q9_product_profit": (q9_product_profit, _Q9_SQL),
+    "q10_returned_items": (q10_returned_items, _Q10_SQL),
+    "q11_value_concentration": (q11_value_concentration, _Q11_SQL),
+    "q13_order_distribution": (q13_order_distribution, _Q13_SQL),
+    "q15_top_supplier": (q15_top_supplier, _Q15_SQL),
+    "q16_part_supplier_variety": (q16_part_supplier_variety, _Q16_SQL),
+    "q17_small_quantity": (q17_small_quantity, _Q17_SQL),
+    "q19_discounted_revenue": (q19_discounted_revenue, _Q19_SQL),
+    "q20_excess_suppliers": (q20_excess_suppliers, _Q20_SQL),
+    "q21_waiting_supplier": (q21_waiting_supplier, _Q21_SQL),
+    "q22_sales_opportunity": (q22_sales_opportunity, _Q22_SQL),
 }

@@ -126,23 +126,30 @@ def _to_canonical(pdf: pd.DataFrame, year: int) -> pd.DataFrame:
     return out
 
 
-def grids_from_raw_dir(raw_dir: str) -> tuple[dict[int, pd.DataFrame], list[dict]]:
-    """Parse every ``aspep_{year}.xls[x]`` workbook in a directory into
-    canonical frames (driver-side; parse failures quarantined)."""
+def parse_workbook_files(files) -> tuple[dict[int, pd.DataFrame], list[dict]]:
+    """Parse ``(year, path)`` workbook files into canonical frames
+    (driver-side).  A file that fails to read or parse is quarantined with
+    its year, path and reason, not fatal (reference assets.py:317-320)."""
     grids: dict[int, pd.DataFrame] = {}
     bad: list[dict] = []
-    for fname in sorted(os.listdir(raw_dir)):
-        m = re.match(r"aspep_(\d{4})\.(xlsx?|XLSX?)$", fname)
-        if not m:
-            continue
-        year = int(m.group(1))
-        path = os.path.join(raw_dir, fname)
+    for year, path in files:
+        year = int(year)
         try:
             with open(path, "rb") as f:
                 grids[year] = parse_workbook_bytes(f.read(), path, year)
         except Exception as exc:  # noqa: BLE001 — quarantine
             bad.append({"year": year, "file": path, "reason": str(exc)})
     return grids, bad
+
+
+def grids_from_raw_dir(raw_dir: str) -> tuple[dict[int, pd.DataFrame], list[dict]]:
+    """Parse every ``aspep_{year}.xls[x]`` workbook in a directory into
+    canonical frames (``parse_workbook_files``)."""
+    names = sorted(os.listdir(raw_dir))
+    matches = [re.match(r"aspep_(\d{4})\.(xlsx?|XLSX?)$", n) for n in names]
+    return parse_workbook_files(
+        (m.group(1), os.path.join(raw_dir, m.string)) for m in matches if m
+    )
 
 
 def _read_grid(raw: bytes, filename: str, year: int) -> list[list]:

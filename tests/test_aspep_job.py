@@ -103,3 +103,27 @@ def test_job_releases_stats_cache(spark, tmp_path, monkeypatch):
     assert len(calls) == 2
     assert calls[1], "derived_stats should have filled the stats cache"
     assert cache.persistent_rdd_ids(spark) - before == set()
+
+
+def test_corrupt_download_is_quarantined_not_fatal(spark, tmp_path):
+    """One corrupt workbook is quarantined with its year and file; the
+    job still publishes the other years (reference assets.py:317-320)."""
+    from .xlsx_fixture import aspep_2024_xlsx_bytes
+
+    books = {2022: b"not a workbook", 2024: aspep_2024_xlsx_bytes()}
+
+    def landing_page(url):
+        year = next((y for y in books if str(y) in url), None)
+        link = f"https://example.test/aspep_{year}.xlsx"
+        return None if year is None else f"<a href='{link}'>State Government Employment</a>"
+
+    def fetch_bytes(url):
+        return next(raw for year, raw in books.items() if f"aspep_{year}" in url)
+
+    result = run_aspep_job(
+        spark, JobPaths(str(tmp_path)), fetch=landing_page, fetch_bytes=fetch_bytes
+    )
+    [bad] = result["bad_files"]
+    assert bad["year"] == 2022 and bad["file"].endswith("aspep_2022.xlsx")
+    combined = read_json_artifact(spark, result["artifacts"]["combined_data"])
+    assert {r["year"] for r in combined.select("year").distinct().collect()} == {2024}

@@ -139,3 +139,24 @@ def test_ivf_topk_on_empty_corpus(spark):
         out = ivf_topk(empty, q)
         assert out.columns == ["query_id", "neighbor_id", "cosine", "knn_rank"]
         assert out.count() == 0
+
+
+def test_kmeans_and_pq_adc_on_empty_corpus(spark):
+    """An empty corpus trains no centroids (and an initial table empties
+    after one update): assignment and PQ-ADC return their empty output
+    schema, not an analysis error on an empty centroid array."""
+    from aspep_etl_spark.operators.clustering import lloyd_kmeans_assign, seeded_id_init
+    from aspep_etl_spark.operators.similarity import pq_adc_topk
+
+    schema = "vec_id long, embedding array<float>"
+    empty = spark.createDataFrame([], schema)
+    for init in (seeded_id_init(empty, "vec_id", "embedding", 4), [(0, [1.0, 0.0])]):
+        out = lloyd_kmeans_assign(empty, "vec_id", "embedding", init, iters=2)
+        assert out.schema.simpleString() == "struct<vec_id:bigint,cluster:int>"
+        assert out.count() == 0
+
+    queries = spark.createDataFrame([(1, [1.0] * 64), (2, [0.5] * 64)], schema)
+    for q in (empty, queries):
+        out = pq_adc_topk(empty, q, k=5)
+        assert out.columns == ["query_id", "neighbor_id", "cosine", "knn_rank"]
+        assert out.count() == 0
