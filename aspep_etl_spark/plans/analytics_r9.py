@@ -2359,8 +2359,11 @@ def streaming_mv_many_batches(spark, sf_dir):
     count (not input size) drives the read-amplification term, and the
     MV-grain store is what bounds it.  Same flat-recompute oracle —
     the maintained store is split-count invariant (pinned for the
-    3-split shape in tests/test_streaming_mv.py; this entry IS the
-    30-split pin, enforced every correctness sweep)."""
+    3-split shape by
+    ``tests/test_r9.py::test_streaming_mv_equals_batch_recompute`` and
+    for fewer rows than splits by
+    ``test_streaming_mv_tiny_input_fewer_rows_than_splits``; this entry
+    IS the 30-split pin, enforced every correctness sweep)."""
     from ..streaming.mv import run_streaming_mv_maintenance
 
     return run_streaming_mv_maintenance(

@@ -27,12 +27,11 @@ from __future__ import annotations
 
 import sys
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import cleanse_numeric, safe_ratio
 from ..operators.dedup import (
-    embedding_near_dup_pairs,
     embedding_near_dup_pairs_bucketed,
     exact_dedup,
     jaccard_pairs,
@@ -43,11 +42,11 @@ from ..operators.dedup import (
 )
 from ..operators.filters import filter_significant
 from ..operators.multimodal import documents_as_media, extract_media_features
-from ..operators.recode import broadcast_dim_join, recode_values
+from ..operators.recode import recode_values
 from ..operators.setops import union_by_name
 from ..operators.similarity import brute_force_topk, ivf_topk, srp_lsh_topk, srp_planes
-from ..operators.stats import append_cohort_stats, grouped_stats
-from ..operators.text import analyze_documents, fingerprint, langid_scores, quality_metrics
+from ..operators.stats import append_cohort_stats
+from ..operators.text import fingerprint, langid_scores, quality_metrics
 from ..operators.windows import cohort_ranks, signed_delta_ranks, yoy_deltas
 from ..streaming.events import hourly_rollup_batch, run_streaming_rollup
 

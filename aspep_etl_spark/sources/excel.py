@@ -244,8 +244,6 @@ def ingest_binary_workbooks(
     100k workbooks it is the only shape that works — scan parallelism,
     task retry, and quarantine-by-row all come from Spark.
     """
-    from pyspark.sql import functions as F
-
     from ..plans.pipeline import normalize_fact
 
     binf = spark.read.format("binaryFile").load(path_glob)

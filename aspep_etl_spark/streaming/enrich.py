@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.setops import upsert_latest
+from .events import events_stream
+from .store import merge_stream_into_store
 
 
 def enrich_with_dim(
@@ -62,51 +64,20 @@ def run_stream_upsert(
     tiebreak_cols: list[str] | None = None,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Apply a parquet-directory CDC feed to a keyed parquet store via
-    ``foreachBatch`` + ``upsert_latest``, bounded with
-    ``Trigger.AvailableNow`` (the catch-up/backfill production pattern —
-    a live feed would run the same query without the trigger).
+    """Apply a parquet CDC feed to a keyed parquet store: each micro-batch
+    is merged latest-wins by ``upsert_latest`` through
+    ``store.merge_stream_into_store``.  At lake scale swap the merge for
+    ``MERGE INTO`` on a real table format — the streaming plumbing
+    (checkpoint, trigger, batch handoff) is unchanged."""
 
-    Each batch: read current store (empty-safe), latest-wins merge, write
-    back atomically-enough for a single writer (overwrite).  At lake
-    scale swap the inner body for ``MERGE INTO`` on a real table format —
-    the streaming plumbing (checkpoint, trigger, batch handoff) is
-    unchanged.
-    """
-    import os
+    def merge(base: DataFrame | None, batch: DataFrame) -> DataFrame:
+        base = batch.limit(0) if base is None else base
+        return upsert_latest(base, batch, keys, order_col, tiebreak_cols)
 
-    static = spark.read.parquet(updates_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        # AvailableNow honors read limits since Spark 3.3 — this splits the
-        # backfill into several micro-batches, exercising repeated merges.
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(updates_path)
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if os.path.isdir(store_path) and any(
-            f.endswith(".parquet") for f in os.listdir(store_path)
-        ):
-            base = s.read.parquet(store_path)
-        else:
-            base = s.createDataFrame([], batch.schema)
-        merged = upsert_latest(base, batch, keys, order_col, tiebreak_cols)
-        # Write to a scratch dir first, THEN swap directories: overwriting
-        # the path a lazy plan is still reading from is a data race, and
-        # collecting the store through the driver would not survive scale.
-        import shutil
-
-        tmp = f"{store_path}__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(store_path):
-            shutil.rmtree(store_path)
-        os.replace(tmp, store_path)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    merge_stream_into_store(
+        events_stream(spark, updates_path, max_files_per_trigger),
+        store_path,
+        checkpoint_dir,
+        merge,
+        skip_replayed=False,
     )
-    q.awaitTermination()

@@ -10,39 +10,49 @@ variant runs the identical logical plan through the streaming engine with
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def events_stream(spark: SparkSession, events_path: str) -> DataFrame:
-    """The ONE events file-stream reader: static-schema ``readStream``
-    (file streams need an explicit schema), single-file paths handled via
-    a parent-dir glob, and the driver parquet's ``ts`` wrinkle normalized
-    to a plain TIMESTAMP — TIMESTAMP(NANOS) rebuilt with INTEGER division
-    (nanos epochs exceed 2^53) and TIMESTAMP_NTZ cast (watermarks refuse
-    NTZ; see sources/registry.py).  Every streaming runner in this package
-    goes through here; the recipe is subtle enough that hand-copies
-    drifted."""
-    import os
-
-    from pyspark.sql import types as T
-
-    # UTC pin: keeps the NTZ cast and window/watermark epoch alignment
-    # host-zone-independent (see sources/registry.py).
+def read_feed(spark: SparkSession, path: str) -> DataFrame:
+    """Static read of a parquet feed under the session pins every feed
+    needs: ``nanosAsLong`` so the driver parquet's TIMESTAMP(NANOS) ``ts``
+    reads at all, and UTC so the NTZ cast and window/watermark/``to_date``
+    epoch alignment are host-zone-independent (see sources/registry.py)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(events_path)
+    return spark.read.parquet(path)
+
+
+def events_stream(
+    spark: SparkSession, events_path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """The ONE parquet file-stream reader: static-schema ``readStream``
+    (file streams need an explicit schema), single-file paths handled via
+    a parent-dir glob, an optional ``maxFilesPerTrigger`` read limit
+    (availableNow honors it, splitting a backfill into several
+    micro-batches), and — when the feed has a ``ts`` — the driver
+    parquet's ``ts`` wrinkle normalized to a plain TIMESTAMP:
+    TIMESTAMP(NANOS) rebuilt with INTEGER division (nanos epochs exceed
+    2^53) and TIMESTAMP_NTZ cast (watermarks refuse NTZ; see
+    sources/registry.py).  Every streaming runner in this package goes
+    through here; the recipe is subtle enough that hand-copies drifted."""
+    from pyspark.sql import types as T
+
+    static = read_feed(spark, events_path)
+    reader = spark.readStream.schema(static.schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if os.path.isfile(events_path):
-        base, fname = os.path.dirname(events_path), os.path.basename(events_path)
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("pathGlobFilter", fname)
-            .parquet(base)
-        )
+        reader = reader.option("pathGlobFilter", os.path.basename(events_path))
+        stream = reader.parquet(os.path.dirname(events_path))
     else:
-        stream = spark.readStream.schema(static.schema).parquet(events_path)
+        stream = reader.parquet(events_path)
+    if "ts" not in static.columns:
+        return stream
     ts_type = static.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

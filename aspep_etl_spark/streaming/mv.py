@@ -14,25 +14,22 @@ Two properties the batch variant cannot demonstrate:
   arrival order is irrelevant — which is also why the oracle can be the
   one flat GROUP BY).
 - **Replay idempotence**: sum-merges are NOT naturally idempotent under
-  checkpoint-recovery redelivery (unlike latest-wins CDC), so each
-  applied batch leaves a ``_applied_<id>`` marker next to the store and
-  redelivered batch ids are skipped — the same dedup-ledger pattern a
-  transactional sink (Delta ``txnAppId``/``txnVersion``) provides
-  natively at lake scale.
+  checkpoint-recovery redelivery (unlike latest-wins CDC); the store
+  runner (``store.merge_stream_into_store``) skips redelivered batch ids.
 
-Store writes go through the staging-then-swap rename used by
-``enrich.run_stream_upsert`` (overwriting a path a lazy plan still
-reads is a data race).  No reference counterpart (batch-only pipeline).
+No reference counterpart (batch-only pipeline).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .events import events_stream, read_feed
+from .store import merge_stream_into_store
 
 MV_KEYS = ["day", "event_type"]
 
@@ -75,6 +72,13 @@ def mv_merge(base: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
+def mv_store_merge(base: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """The MV store's per-batch merge: the micro-batch's delta rollup,
+    merged into the stored state (or the first state)."""
+    delta = mv_delta_agg(batch)
+    return delta if base is None else mv_merge(base, delta)
+
+
 def run_streaming_mv_maintenance(
     spark: SparkSession, events_path: str, n_splits: int = 3
 ) -> DataFrame:
@@ -83,21 +87,15 @@ def run_streaming_mv_maintenance(
 
     The one input file is re-sharded into ``n_splits`` files so
     ``maxFilesPerTrigger=1`` yields that many real micro-batches; each
-    ``foreachBatch`` call aggregates its delta, merges into the parquet
-    store (staging + atomic swap), and records the batch id for replay
-    idempotence.  Work dirs are fresh ``mkdtemp``s per call (the final
-    returned frame still reads the store, so they must outlive the
-    call — test-scale debris, a real deployment points at durable
-    paths)."""
+    one's delta is merged into the parquet store by
+    ``store.merge_stream_into_store``. Work dirs are fresh ``mkdtemp``s
+    per call (the final returned frame still reads the store, so they
+    must outlive the call — test-scale debris, a real deployment points
+    at durable paths)."""
     work = tempfile.mkdtemp(prefix="mv_stream_")
     shards = os.path.join(work, "shards")
     store = os.path.join(work, "store")
     ckpt = os.path.join(work, "ckpt")
-    # same session pins as streaming/events.events_stream: UTC keeps
-    # to_date host-zone-independent; nanosAsLong handles the driver
-    # parquet's TIMESTAMP(NANOS) ts
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # re-shard in ONE pass: an explicit numbered repartition on event_id
     # writes ~n_splits part files from a single scan (the per-residue
     # filter loop scanned the input n_splits times — at 30 splits that
@@ -110,7 +108,7 @@ def run_streaming_mv_maintenance(
     # probe's batch count; round-robin fills every partition whenever
     # rows ≥ n_splits, and the assert pins the batch count mechanically
     # (MV correctness is split-invariant either way)
-    raw = spark.read.parquet(events_path)
+    raw = read_feed(spark, events_path)
     n_rows = raw.count()
     if n_rows < n_splits:
         # Fewer rows than splits: RoundRobinPartitioning starts each
@@ -150,58 +148,7 @@ def run_streaming_mv_maintenance(
             f"probe's micro-batch count would silently shrink"
         )
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(shards).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(shards)
-    )
-    from pyspark.sql import types as T
-
-    if isinstance(stream.schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        # Replay-idempotence marker lives INSIDE the store dir and is
-        # written into the staging dir BEFORE the swap, so marker and
-        # store commit in one atomic os.replace — the Delta-Lake
-        # txnAppId/txnVersion pattern on plain parquet.  (Spark's
-        # parquet reader ignores underscore-prefixed files, so the
-        # marker rides along invisibly.)  foreachBatch redelivers only
-        # the last uncommitted batch on checkpoint recovery, so only
-        # the newest marker needs to survive the swap.
-        s = batch.sparkSession
-        old = store + "__old"
-        if not os.path.isdir(store) and os.path.isdir(old):
-            # crash landed between the two renames below: roll back to
-            # the pre-batch store; foreachBatch redelivery re-applies
-            # the interrupted batch on top of it
-            os.replace(old, store)
-        if os.path.exists(os.path.join(store, f"_applied_{batch_id}")):
-            return  # checkpoint-recovery redelivery
-        delta = mv_delta_agg(batch)
-        if os.path.isdir(store) and any(
-            f.endswith(".parquet") for f in os.listdir(store)
-        ):
-            base = s.read.parquet(store)
-            merged = mv_merge(base, delta)
-        else:
-            merged = delta
-        tmp = store + "__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        open(os.path.join(tmp, f"_applied_{batch_id}"), "w").close()
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(store):
-            os.replace(store, old)  # atomic; never rmtree the live store
-        os.replace(tmp, store)
-        shutil.rmtree(old, ignore_errors=True)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    merge_stream_into_store(events_stream(spark, shards, 1), store, ckpt, mv_store_merge)
     return spark.read.parquet(store).select(
         F.col("day").cast("string").alias("day"),
         "event_type",

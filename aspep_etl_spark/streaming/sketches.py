@@ -17,11 +17,11 @@ pattern as the other availableNow-vs-batch twins in this package.)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from ..operators.sketch import cms_build
+from .events import events_stream
+from .store import merge_stream_into_store
 
 
 def run_streaming_cms(
@@ -34,77 +34,26 @@ def run_streaming_cms(
     width: int = 256,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Maintain a CMS parquet store over a parquet event feed with
-    ``Trigger.AvailableNow`` (catch-up pattern; a live feed runs the same
-    query untriggered).  Each batch: sketch the new rows, merge with the
-    stored sketch by union + sum, then atomically RENAME the staged store
-    into place (``os.replace``, the same swap as ``run_stream_upsert`` —
-    a second Spark overwrite of the live path would leave a partial store
-    on a crash mid-write).
+    """Maintain a CMS parquet store over a parquet event feed through
+    ``store.merge_stream_into_store``: each micro-batch is sketched and
+    merged with the stored sketch by union + sum.  Counter merges — unlike
+    latest-wins upserts — are NOT idempotent under duplicate delivery, so
+    the runner's replay marker skips a redelivered batch id."""
 
-    Counter merges — unlike latest-wins upserts — are NOT idempotent
-    under duplicate delivery, so the store carries a ``_merged_batches``
-    marker (underscore-prefixed: invisible to parquet readers) that
-    travels atomically with the data; a replayed micro-batch (crash
-    between store swap and checkpoint commit, foreachBatch's documented
-    at-least-once window) is recognized and skipped, restoring
-    exactly-once per (store, batch_id)."""
-    import json
-    import shutil
-
-    # Conf pins, same as the canonical loaders (sources/registry.py):
-    # the driver's events.parquet has shipped as TIMESTAMP(NANOS), which
-    # a bare vanilla-session read refuses outright — the sketch never
-    # touches ts, but the schema inference does.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    # Generic parquet feed reader (no timestamp normalization needed):
-    # static schema, single-file paths via parent-dir glob, optional
-    # read limit so availableNow splits into several micro-batches.
-    static = spark.read.parquet(events_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if os.path.isfile(events_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(events_path))
-        stream = reader.parquet(os.path.dirname(events_path))
-    else:
-        stream = reader.parquet(events_path)
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        marker = os.path.join(store_path, "_merged_batches")
-        merged_ids: set[int] = set()
-        if os.path.exists(marker):
-            merged_ids = set(json.load(open(marker)))
-            if batch_id in merged_ids:
-                return  # duplicate delivery: this batch is already in
+    def merge(base: DataFrame | None, batch: DataFrame) -> DataFrame:
         delta = cms_build(batch, key_col, depth, width)
-        if os.path.isdir(store_path) and any(
-            f.endswith(".parquet") for f in os.listdir(store_path)
-        ):
-            base = s.read.parquet(store_path)
-            merged = (
-                base.unionByName(delta)
-                .groupBy("d", "bucket")
-                .sum("cnt")
-                .withColumnRenamed("sum(cnt)", "cnt")
-            )
-        else:
-            merged = delta
-        scratch = store_path.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(scratch)  # materializes FIRST
-        with open(os.path.join(scratch, "_merged_batches"), "w") as f:
-            json.dump(sorted(merged_ids | {batch_id}), f)
-        if os.path.isdir(store_path):
-            shutil.rmtree(store_path)
-        os.replace(scratch, store_path)
+        if base is None:
+            return delta
+        return (
+            base.unionByName(delta)
+            .groupBy("d", "bucket")
+            .sum("cnt")
+            .withColumnRenamed("sum(cnt)", "cnt")
+        )
 
-    (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    merge_stream_into_store(
+        events_stream(spark, events_path, max_files_per_trigger),
+        store_path,
+        checkpoint_dir,
+        merge,
     )

@@ -3,6 +3,8 @@ with the batch twin of the same rollup."""
 
 from __future__ import annotations
 
+import pytest
+
 from aspep_etl_spark.sources.registry import load_table
 from aspep_etl_spark.streaming import hourly_rollup_batch, run_streaming_rollup, sessionize
 
@@ -407,3 +409,81 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
     replayed = spark.read.parquet(store)
     assert replayed.exceptAll(want).count() == 0
     assert want.exceptAll(replayed).count() == 0
+
+
+@pytest.mark.parametrize("runner", ["upsert", "cms", "mv"])
+def test_store_survives_crash_at_swap(spark, tmp_path, monkeypatch, runner):
+    """A crash inside a store swap (the second staging -> store rename
+    raises once) must lose no earlier batch: re-run with the same
+    checkpoint, the interrupted batch is redelivered and the store equals
+    the one-shot batch result."""
+    import datetime
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    feed, store, ck = (str(tmp_path / n) for n in ("feed", "store", "ck"))
+    if runner == "upsert":
+        from aspep_etl_spark.operators.setops import upsert_latest
+        from aspep_etl_spark.streaming.enrich import run_stream_upsert
+
+        sch = "k long, v string, ver long"
+        base = spark.createDataFrame([(1, "a0", 0), (2, "b0", 0), (3, "c0", 0)], sch)
+        base.write.parquet(store)
+        updates = spark.createDataFrame(
+            [(1, "a1", 1), (2, "b1", 1), (1, "a2", 2), (4, "d2", 2)], sch
+        )
+        updates.repartition(3).write.parquet(feed)
+        want = upsert_latest(base, updates, ["k"], "ver", ["v"])
+
+        def run():
+            run_stream_upsert(spark, feed, store, ["k"], "ver", ck, ["v"], 1)
+
+    elif runner == "cms":
+        from aspep_etl_spark.operators.sketch import cms_build
+        from aspep_etl_spark.streaming.sketches import run_streaming_cms
+
+        ev = spark.createDataFrame(
+            [(i, i % 17) for i in range(500)], "event_id long, user_id long"
+        )
+        ev.repartition(3).write.parquet(feed)
+        want = cms_build(ev, "user_id", 4, 64)
+
+        def run():
+            run_streaming_cms(spark, feed, store, "user_id", ck, 4, 64, 1)
+
+    else:
+        from aspep_etl_spark.streaming.events import events_stream
+        from aspep_etl_spark.streaming.mv import mv_delta_agg, mv_store_merge
+        from aspep_etl_spark.streaming.store import merge_stream_into_store
+
+        ev = spark.createDataFrame(
+            [
+                (datetime.datetime(2024, 1, 1 + i % 5, i % 24), "ab"[i % 2], i * 0.25, i)
+                for i in range(60)
+            ],
+            "ts timestamp, event_type string, value double, event_id long",
+        )
+        ev.repartition(3).write.parquet(feed)
+        want = mv_delta_agg(ev)
+
+        def run():
+            merge_stream_into_store(events_stream(spark, feed, 1), store, ck, mv_store_merge)
+
+    real_replace, swaps = os.replace, []
+
+    def replace(src, dst):
+        if str(src).endswith("__staging"):
+            swaps.append(src)
+            if len(swaps) == 2:
+                raise OSError("injected crash inside the store swap")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(StreamingQueryException):
+        run()
+    run()
+    got = spark.read.parquet(store)
+    want = want.select(*got.columns)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0

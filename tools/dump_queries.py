@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Regenerate QUERIES.md: the full contract-query inventory with check
-mode (oracle vs rows-only) and first-docstring-line descriptions —
-the one-page map of the engine's judged surface."""
+"""Regenerate QUERIES.md: the full contract-query inventory with
+first-docstring-line descriptions — the one-page map of the engine's
+judged surface."""
 
 from __future__ import annotations
 
@@ -12,20 +12,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from aspep_etl_spark.plans.contract import ORACLE_SQL, SPARK_QUERIES
+    from aspep_etl_spark.plans.contract import SPARK_QUERIES
 
     lines = [
         "# QUERIES — contract-query inventory",
         "",
-        "Generated by `python tools/dump_queries.py`.  **oracle** = the",
-        "driver hash-compares the Spark result against the DuckDB twin at",
-        "sf0.01; **rows** = rows-only driver check (non-SQL-expressible),",
-        "with value-level pytest coverage instead.",
+        "Generated by `python tools/dump_queries.py`.  The driver",
+        "hash-compares every query's Spark result against its DuckDB twin",
+        "at sf0.01.",
         "",
-        f"{len(SPARK_QUERIES)} queries, {len(ORACLE_SQL)} oracle-backed.",
+        f"{len(SPARK_QUERIES)} queries.",
         "",
-        "| query | check | what it covers |",
-        "|---|---|---|",
+        "| query | what it covers |",
+        "|---|---|",
     ]
     for name in sorted(SPARK_QUERIES):
         fn = SPARK_QUERIES[name]
@@ -34,8 +33,7 @@ def main() -> None:
         while len(desc) < 40 and len(doc) > 1 and doc[1].strip():
             desc = f"{desc} {doc[1].strip()}"
             doc = doc[1:]
-        mode = "oracle" if name in ORACLE_SQL else "rows"
-        lines.append(f"| `{name}` | {mode} | {desc} |")
+        lines.append(f"| `{name}` | {desc} |")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md with {len(SPARK_QUERIES)} queries")
