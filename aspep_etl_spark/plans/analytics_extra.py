@@ -585,10 +585,14 @@ def streaming_cms_heavy_hitters(spark, sf_dir):
     import os
     import tempfile
 
+    from pyspark import SparkFiles
+
     from ..operators.sketch import cms_estimate
     from ..streaming.sketches import run_streaming_cms
 
-    d = tempfile.mkdtemp(prefix="cms-stream-")
+    # the returned frame reads the store lazily; Spark deletes its root
+    # dir, and this work dir with it, at spark.stop()
+    d = tempfile.mkdtemp(prefix="cms-stream-", dir=SparkFiles.getRootDirectory())
     store = os.path.join(d, "store")
     run_streaming_cms(
         spark, f"{sf_dir}/events.parquet", store, "user_id",

@@ -21,6 +21,17 @@ def default_shuffle_partitions() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of physical memory capped at
+    16g: a 16g default on a 16 GB host let two concurrent sessions take
+    the machine down."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mb // 2, 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "aspep-etl-spark",
     master: str | None = None,
@@ -60,7 +71,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # 128 MB input splits: good parquet scan granularity at scale.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         # Wide analytic plans (the ~150-column delta/rank fan-out) serialize
         # deeply nested operator trees; default 1 MB thread stacks overflow
         # during task (de)serialization.  Applied at JVM launch.

@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,20 +89,19 @@ def run_streaming_mv_maintenance(
     The one input file is re-sharded into ``n_splits`` files so
     ``maxFilesPerTrigger=1`` yields that many real micro-batches; each
     one's delta is merged into the parquet store by
-    ``store.merge_stream_into_store``. Work dirs are fresh ``mkdtemp``s
-    per call (the final returned frame still reads the store, so they
-    must outlive the call — test-scale debris, a real deployment points
-    at durable paths)."""
-    work = tempfile.mkdtemp(prefix="mv_stream_")
+    ``store.merge_stream_into_store``. The work dir is a fresh ``mkdtemp``
+    per call under the SparkContext's root dir: the returned frame still
+    reads the store, so it must outlive the call, and Spark deletes it at
+    ``spark.stop()`` (a real deployment points at durable paths)."""
+    work = tempfile.mkdtemp(prefix="mv_stream_", dir=SparkFiles.getRootDirectory())
     shards = os.path.join(work, "shards")
     store = os.path.join(work, "store")
     ckpt = os.path.join(work, "ckpt")
-    # re-shard in ONE pass: an explicit numbered repartition on event_id
-    # writes ~n_splits part files from a single scan (the per-residue
-    # filter loop scanned the input n_splits times — at 30 splits that
-    # setup dominated the probe).  Exactly-once row coverage is what the
-    # merge algebra needs; the maintained MV is split-invariant (its
-    # oracle is the flat recompute).
+    # re-shard in ONE pass: the repartition writes ~n_splits part files
+    # from a single scan (the per-residue filter loop scanned the input
+    # n_splits times — at 30 splits that setup dominated the probe).
+    # Exactly-once row coverage is what the merge algebra needs; the
+    # maintained MV is split-invariant (its oracle is the flat recompute).
     # round-robin repartition (no key): hash partitioning on event_id can
     # leave empty partitions on small/skewed inputs, silently writing
     # fewer than n_splits shard files and weakening the many-batch

@@ -11,15 +11,14 @@ import struct
 import zlib
 
 from aspep_etl_spark.functions.media import (
-    make_bmp,
-    make_gif,
-    make_jpeg,
     make_mp4,
     make_png,
     make_wav,
     parse_media_header,
     sniff_format,
 )
+
+from .media_fixture import make_bmp, make_gif, make_jpeg
 
 
 # ---------------------------------------------------------------------------

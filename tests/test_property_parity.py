@@ -52,7 +52,7 @@ def test_yoy_deltas_match_pandas(spark, rows):
     pdf = pd.DataFrame(rows, columns=["g", "year", "v"]).astype({"v": float})
     sdf = spark.createDataFrame(pdf)
     out = (
-        yoy_deltas(sdf, ["g"], ["year"], ["v"], lags=(1, 4))
+        yoy_deltas(sdf, ["g"], ["year"], ["v"])
         .toPandas()
         .sort_values(["g", "year"])
         .reset_index(drop=True)

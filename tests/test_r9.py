@@ -722,7 +722,9 @@ def test_png_decode_all_filter_types(ftype):
 
 
 def test_png_decode_rejects_non_grayscale_profile():
-    from aspep_etl_spark.functions.media import decode_png_gray, make_jpeg
+    from aspep_etl_spark.functions.media import decode_png_gray
+
+    from .media_fixture import make_jpeg
 
     assert decode_png_gray(make_jpeg(8, 8)) is None
     assert decode_png_gray(b"\x89PNG\r\n\x1a\n" + b"\x00" * 20) is None

@@ -487,3 +487,27 @@ def test_store_survives_crash_at_swap(spark, tmp_path, monkeypatch, runner):
     want = want.select(*got.columns)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def test_streaming_work_dirs_live_under_spark_root(spark, sf_dir):
+    """The MV maintenance and the streaming CMS query keep their work dirs
+    under ``SparkFiles.getRootDirectory()``: the returned frames read
+    their stores lazily, and Spark deletes that root at ``spark.stop()``,
+    so no call leaves a temp dir behind."""
+    from urllib.parse import urlparse
+
+    from pyspark import SparkFiles
+
+    from aspep_etl_spark.plans.analytics_extra import streaming_cms_heavy_hitters
+    from aspep_etl_spark.streaming.mv import run_streaming_mv_maintenance
+
+    root = SparkFiles.getRootDirectory() + "/"
+    mv = run_streaming_mv_maintenance(spark, f"{sf_dir}/events.parquet", n_splits=2)
+    mv_files = [urlparse(f).path for f in mv.inputFiles()]
+    assert mv_files and all(f.startswith(root) for f in mv_files), mv_files
+    # the CMS query also reads the events table itself; every other input
+    # is its sketch store
+    cms = streaming_cms_heavy_hitters(spark, sf_dir)
+    cms_files = [urlparse(f).path for f in cms.inputFiles()]
+    store_files = [f for f in cms_files if not f.startswith(sf_dir)]
+    assert store_files and all(f.startswith(root) for f in store_files), store_files
