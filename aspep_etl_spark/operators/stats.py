@@ -5,12 +5,12 @@ statistic for every measure — a single shuffle on the grouping keys with
 map-side partial aggregation (Catalyst's partial+final hash agg).  The
 reference runs two separate pandas groupbys (assets.py:366-367); fusing them
 halves the shuffle volume, which matters when the fact table is 100 TB.
+``append_cohort_stats`` turns that one aggregate into one labelled row per
+stat through a single explode, so the plan computes it once: union branches
+that each read different columns of one aggregate would each get their own
+copy of it after column pruning.
 
-Median is exact (`F.median`, Spark ≥3.4) by default.  At extreme scale
-request ``"median_approx"`` instead — ``percentile_approx(c, 0.5,
-accuracy)`` is a mergeable sketch (partial+final, no per-group sort),
-and the golden-check budget is rel_tol=1e-3 (reference
-asset_checks.py:60), well within approx reach at the default accuracy.
+Median is exact (`F.median`, Spark ≥3.4).
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from .setops import union_by_name
 
 #: percentile_approx accuracy (max rank error = 1/accuracy) for the
-#: "median_approx" stat; 10⁴ keeps grouped medians well inside the
+#: sketch-median queries; 10⁴ keeps grouped medians well inside the
 #: reference's rel 1e-3 golden budget while staying sketch-sized.
 APPROX_MEDIAN_ACCURACY = 10_000
 
@@ -43,13 +43,10 @@ _STAT_FNS = {
     "median": F.median,
     "mean": F.avg,
     "mean_ordered": _mean_ordered,
-    "median_approx": lambda c: F.percentile_approx(
-        c, F.lit(0.5), F.lit(APPROX_MEDIAN_ACCURACY)
-    ),
 }
 
 
-def grouped_stats_fused(
+def grouped_stats(
     df: DataFrame,
     group_keys: list[str],
     stat_cols: list[str],
@@ -66,26 +63,6 @@ def grouped_stats_fused(
     return df.groupBy(*group_keys).agg(*agg_exprs)
 
 
-def grouped_stats(
-    df: DataFrame,
-    group_keys: list[str],
-    stat_cols: list[str],
-    stats: tuple[str, ...] = ("median", "mean"),
-) -> dict[str, DataFrame]:
-    """Compute grouped statistics for every stat column in one shuffle.
-
-    Returns {stat_name: DataFrame[group_keys..., stat_cols...]} — the fused
-    aggregate is computed once and each per-stat view is a cheap projection.
-    """
-    fused = grouped_stats_fused(df, group_keys, stat_cols, stats)
-    out = {}
-    for s in stats:
-        out[s] = fused.select(
-            *group_keys, *[F.col(f"__{s}__{c}").alias(c) for c in stat_cols]
-        )
-    return out
-
-
 def append_cohort_stats(
     fact: DataFrame,
     group_keys: list[str],
@@ -99,17 +76,27 @@ def append_cohort_stats(
     """derive_stats' A1-A3 composite: grouped median+mean over the non-rollup
     rows, stamped with pseudo-key labels, unioned back into the fact table
     by name with missing columns null (reference assets.py:359-376).
+
+    One ``grouped_stats`` aggregate emits every labelled row through one
+    ``inline`` (the explode of an array holding one struct per stat), so
+    the fact is aggregated once.
     """
     stat_labels = stat_labels or {"median": "US-median", "mean": "US-mean"}
     base = fact.filter(exclude_filter) if exclude_filter is not None else fact
-    per_stat = grouped_stats(base, group_keys, stat_cols, tuple(stat_labels))
-    frames = [fact]
-    for stat, label in stat_labels.items():
-        stat_df = per_stat[stat].withColumn(label_col, F.lit(label))
-        if scope_col is not None:
-            stat_df = stat_df.withColumn(scope_col, F.lit(scope_value))
-        frames.append(stat_df)
-    return union_by_name(frames)
+    fused = grouped_stats(base, group_keys, stat_cols, tuple(stat_labels))
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(label).alias(label_col),
+                *[F.col(f"__{s}__{c}").alias(c) for c in stat_cols],
+            )
+            for s, label in stat_labels.items()
+        ]
+    )
+    stat_df = fused.select(*group_keys, F.inline(rows))
+    if scope_col is not None:
+        stat_df = stat_df.withColumn(scope_col, F.lit(scope_value))
+    return union_by_name([fact, stat_df])
 
 
 def sketch_median_rank_audit(

@@ -378,10 +378,10 @@ def a1_grouped_median(spark, sf_dir):
     projection-join of two views of the same agg re-executes the agg on
     both sides unless ReuseExchange catches it; at 100 TB that's a whole
     extra scan+shuffle)."""
-    from ..operators.stats import grouped_stats_fused
+    from ..operators.stats import grouped_stats
 
     li = _t(spark, sf_dir, "lineitem")
-    fused = grouped_stats_fused(
+    fused = grouped_stats(
         li, ["l_returnflag", "l_linestatus"], ["l_quantity", "l_extendedprice"]
     )
     return fused.select(
@@ -405,7 +405,7 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 
 
 def a1_grouped_median_approx(spark, sf_dir):
-    """A1 with the sketch-based median ("median_approx"): mergeable
+    """A1 with the sketch-based median (``percentile_approx``): mergeable
     percentile_approx partials instead of exact median's per-group sort —
     the 100 TB path (reference asset_checks.py:60 rel-1e-3 budget).
 
@@ -1415,7 +1415,7 @@ FROM base WHERE doc_id NOT IN (SELECT DISTINCT id_b FROM near)
 """
 
 
-def aspep_extended_pipeline(spark, sf_dir, median_of="exact"):
+def aspep_extended_pipeline(spark, sf_dir):
     """The reference's core analytic chain end-to-end at benchmark scale:
     an ASPEP-shaped fact derived from lineitem (supplier→state analog,
     returnflag×linestatus→function, ship-year→year), then the full
@@ -1431,12 +1431,7 @@ def aspep_extended_pipeline(spark, sf_dir, median_of="exact"):
     inputs on both engines — the full 130-column chain hash-matches with NO
     rounding macros (plans/pipeline_oracle.py).  Plan shape is unchanged:
     the per-row multiply+round+cast stays inside whole-stage codegen and
-    the sums remain partial+final hash aggregates.
-
-    ``median_of="approx"`` runs the whole chain with the mergeable
-    percentile_approx median (the 100 TB path — see derive_stats); the
-    approx US-median rows stay within the reference's rel-1e-3 golden
-    budget of the exact ones (pinned in tests/test_pipeline_parity.py)."""
+    the sums remain partial+final hash aggregates."""
     from .pipeline import derive_extended_stats, derive_stats
 
     li = _t(spark, sf_dir, "lineitem")
@@ -1462,27 +1457,22 @@ def aspep_extended_pipeline(spark, sf_dir, median_of="exact"):
             F.count("*").cast("double").alias("ft_employment"),
         )
     )
-    # Scale-adaptive fact materialization (r12, VERDICT r11 ask #2; guide
-    # §2.4/§5): the 3-branch stats union physically rebuilds the fact per
-    # branch (3 lineitem scans + 3 fact aggregations — column pruning
-    # splits the fused stats agg across union branches).  Measured 2×2
-    # (PERF.md r12): the duplicate rebuilds ride idle cores while the
-    # three scan branches roughly fit the core budget — sf0.1/local[32]
-    # (33 scan tasks on 32 cores, ~1× subscription): persist loses ~10%
-    # (the InMemoryRelation barrier + broken codegen fusion cost more
-    # than the contention saves); once the duplicated scan work
-    # oversubscribes the cores ≥2× the persist wins decisively —
-    # sf0.1/local[8] +23%, sf1/local[32] +23%, sf1/local[8] +25-30%.
-    # The switch is derived from the ACTUAL scan split count vs the
-    # session's parallelism, not a constant tuned for either mode — on a
-    # saturated 100 TB cluster it is always on, and the driver's
-    # vanilla-session sf0.01 correctness runs (1-split scan) keep the
-    # r11 plan.  The persisted frame is aggregate-grain (states ×
-    # functions × years rows, KBs); harness sweeps free it via
-    # ``cache.free_cached_blocks``.
+    # Scale-adaptive fact materialization: the stats union has two
+    # branches (the fact and append_cohort_stats' one aggregate), and each
+    # rebuilds the fact (2 lineitem scans + 2 fact aggregations).  Measured
+    # on 4 cores (tools/bench_tier.py, 5 alternating pairs, medians): sf0.1
+    # (4 scan splits) 3.49 s persisted vs 4.10 s rebuilt, sf1 14.81 s vs
+    # 18.47 s.  On the earlier three-branch plan, sf0.1/local[32] (~1 scan
+    # task per core) lost ~10% to the persist (the InMemoryRelation
+    # barrier + broken codegen fusion), so the switch is derived from the
+    # ACTUAL scan split count vs the session's parallelism, not a constant
+    # — the driver's vanilla-session sf0.01 correctness runs (1-split
+    # scan) keep the unpersisted plan.  The persisted frame is
+    # aggregate-grain (states × functions × years rows, KBs); harness
+    # sweeps free it via ``cache.free_cached_blocks``.
     if 3 * li.rdd.getNumPartitions() > 2 * spark.sparkContext.defaultParallelism:
         fact = fact.persist()
-    stats = derive_stats(fact, median_of=median_of)
+    stats = derive_stats(fact)
     return derive_extended_stats(stats)
 
 def dedup_minhash_lsh_q(spark, sf_dir):

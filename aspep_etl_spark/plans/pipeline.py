@@ -62,7 +62,7 @@ def normalize_fact(raw: DataFrame, census_dim: DataFrame | None = None) -> DataF
     return filter_year_range(df, maps.START_YEAR, maps.END_YEAR)
 
 
-def derive_stats(fact: DataFrame, median_of: str = "exact") -> DataFrame:
+def derive_stats(fact: DataFrame) -> DataFrame:
     """Ratio metrics + nationwide median/mean cohort rows
     (reference assets.py:336-385).
 
@@ -74,16 +74,7 @@ def derive_stats(fact: DataFrame, median_of: str = "exact") -> DataFrame:
       per cohort at any raw scale), and the fold makes the published
       stats bitwise reproducible across runs/partitionings — also what
       lets the full-chain DuckDB oracle hash-match (pipeline_oracle.py).
-    - ``median_of``: ``"exact"`` (default — `F.median`, the verification
-      baseline) or ``"approx"`` (mergeable ``percentile_approx`` sketch,
-      the 100 TB path: partial+final agg, no per-group sort buffer).  The
-      approx median stays inside the reference's golden rel-1e-3 budget
-      (asset_checks.py:60; pinned by tests/test_pipeline_parity.py) and
-      the cohort label remains `US-median` either way.
     """
-    if median_of not in ("exact", "approx"):
-        raise ValueError(f"median_of must be 'exact' or 'approx', got {median_of!r}")
-    median_stat = "median" if median_of == "exact" else "median_approx"
     df = fact.withColumns(
         {
             "pay_per_fte": safe_ratio(F.col("total_pay"), F.col("ft_eq_employment")),
@@ -97,7 +88,7 @@ def derive_stats(fact: DataFrame, median_of: str = "exact") -> DataFrame:
         group_keys=["year", "gov_function"],
         stat_cols=stat_cols,
         exclude_filter=F.col("state_code") != "US",
-        stat_labels={median_stat: "US-median", "mean_ordered": "US-mean"},
+        stat_labels={"median": "US-median", "mean_ordered": "US-mean"},
     )
 
 

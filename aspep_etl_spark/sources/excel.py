@@ -11,8 +11,10 @@ The adapters are written grid-first: ``(grid, year) → canonical pandas
 frame`` where a grid is ``list[list]`` of raw cell values.  That keeps the
 header-collapse/slugify/rename logic independent of any Excel parser —
 driver-side ``pd.read_excel`` feeds it when openpyxl/xlrd exist (they are
-optional), and the same function runs inside ``mapInPandas`` over a
-``binaryFile`` scan for many-file scale (``ingest_binary_workbooks``).
+optional), the stdlib readers ``xlsx_lite`` (OOXML) and ``xls_lite`` (BIFF
+``.xls``) feed it otherwise, and the same function runs inside
+``mapInPandas`` over a ``binaryFile`` scan for many-file scale
+(``ingest_binary_workbooks``).
 
 Reference behavior reproduced: process_aspep/assets.py:115-165 (both
 adapters), 270-333 (per-year loop with quarantine).
@@ -154,8 +156,8 @@ def grids_from_raw_dir(raw_dir: str) -> tuple[dict[int, pd.DataFrame], list[dict
 
 def _read_grid(raw: bytes, filename: str, year: int) -> list[list]:
     """Excel bytes → positional grid.  Prefers pandas engines (openpyxl /
-    xlrd) when installed; falls back to the stdlib OOXML reader for .xlsx
-    (``xlsx_lite``).  BIFF .xls needs xlrd (optional extra)."""
+    xlrd) when installed; falls back to the stdlib readers: ``xlsx_lite``
+    for OOXML .xlsx, ``xls_lite`` for BIFF .xls."""
     engine = "openpyxl" if filename.lower().endswith(".xlsx") else "xlrd"
     sheet = maps.SHEET_NAMES.get(year)
     try:

@@ -15,8 +15,8 @@ import os
 from html.parser import HTMLParser
 from typing import Callable
 
-START_YEAR = 2003
-END_YEAR = 2025
+from .. import maps
+
 ANCHOR_TEXT = "State Government Employment"
 
 
@@ -74,7 +74,7 @@ def _default_fetch(url: str) -> str | None:
 def build_year_url_mapping(
     mapping_file: str,
     fetch: Callable[[str], str | None] = _default_fetch,
-    years: range = range(START_YEAR, END_YEAR + 1),
+    years: range = range(maps.START_YEAR, maps.END_YEAR + 1),
 ) -> dict:
     """Scrape (or reuse cached) per-year download URLs (S1/S3/S4)."""
     if os.path.exists(mapping_file):

@@ -5,7 +5,7 @@ and normally feed from ``pd.read_excel``; this container ships neither
 openpyxl nor xlrd, so this reader provides the OOXML path from the standard
 library alone — enough to ingest the reference's real 2020+ ``.xlsx``
 workbooks and reproduce its golden values.  Legacy BIFF ``.xls`` (≤2019)
-still requires xlrd (optional extra).
+goes through its stdlib sibling, ``xls_lite``.
 
 Supports exactly what the ASPEP workbooks need: first worksheet (workbook
 order), shared strings, inline strings, numeric cells, sparse rows/cells

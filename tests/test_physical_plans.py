@@ -762,3 +762,40 @@ def test_a1_approx_invariant_flags_hold(spark, sf):
     for r in rows:
         assert r["approx_qty_ok"] == 1 and r["approx_price_ok"] == 1, r
         assert r["n_rows"] > 0
+
+
+def _lineitem_scans(plan: str) -> int:
+    return sum(
+        "Scan parquet" in line and "lineitem" in line for line in plan.splitlines()
+    )
+
+
+def _cohort_stat_aggs(plan: str) -> list[str]:
+    """Final (non-partial) aggregate nodes computing a median or an
+    ordered mean — the cohort-stats aggregate of append_cohort_stats."""
+    return [
+        line
+        for line in plan.splitlines()
+        if "Aggregate(" in line
+        and ("percentile(" in line or "collect_list(" in line)
+        and "partial_" not in line
+    ]
+
+
+def test_cohort_stats_computed_by_one_aggregate(spark, sf):
+    """append_cohort_stats emits every labelled stat row from ONE
+    aggregate through one explode: the union has two branches (the fact
+    and the stat rows), so the fact is built twice and the stats once.
+    One union branch per stat would give each its own pruned copy of the
+    aggregate and one more fact rebuild."""
+    from aspep_etl_spark.plans import derive_stats
+
+    from .aspep_fixture import make_combined_fact
+
+    a3 = plan_of(contract.a3_stats_union_back(spark, sf), mode="simple")
+    assert _lineitem_scans(a3) == 2, a3
+    assert len(_cohort_stat_aggs(a3)) == 1, a3
+
+    stats = derive_stats(spark.createDataFrame(make_combined_fact()))
+    aggs = _cohort_stat_aggs(plan_of(stats, mode="simple"))
+    assert len(aggs) == 1, aggs

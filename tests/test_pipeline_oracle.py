@@ -54,7 +54,7 @@ def test_mean_ordered_matches_avg_and_is_partitioning_invariant(spark):
     """mean_ordered: value-sorted fold == plain avg within float noise,
     and bitwise identical to itself under a different partitioning —
     the reproducibility property plain F.avg does not have."""
-    from aspep_etl_spark.operators.stats import grouped_stats_fused
+    from aspep_etl_spark.operators.stats import grouped_stats
 
     pdf = pd.DataFrame(
         {
@@ -65,7 +65,7 @@ def test_mean_ordered_matches_avg_and_is_partitioning_invariant(spark):
     df = spark.createDataFrame(pdf)
 
     def means(frame):
-        out = grouped_stats_fused(frame, ["k"], ["v"], stats=("mean_ordered",))
+        out = grouped_stats(frame, ["k"], ["v"], stats=("mean_ordered",))
         return {
             r["k"]: r["__mean_ordered__v"] for r in out.collect()
         }
@@ -83,13 +83,13 @@ def test_mean_ordered_matches_avg_and_is_partitioning_invariant(spark):
 
 
 def test_mean_ordered_empty_group_is_null(spark):
-    from aspep_etl_spark.operators.stats import grouped_stats_fused
+    from aspep_etl_spark.operators.stats import grouped_stats
 
     df = spark.createDataFrame(
         [(1, None), (1, None), (2, 5.0)], "k int, v double"
     )
     out = {
         r["k"]: r["__mean_ordered__v"]
-        for r in grouped_stats_fused(df, ["k"], ["v"], stats=("mean_ordered",)).collect()
+        for r in grouped_stats(df, ["k"], ["v"], stats=("mean_ordered",)).collect()
     }
     assert out[1] is None and out[2] == 5.0
