@@ -42,13 +42,14 @@ def run_aspep_job(
     census_dim: DataFrame | None = None,
     fetch=None,
     fetch_bytes=None,
-    grids_by_year: dict | None = None,
+    parsed: tuple[dict, list] | None = None,
     gzip_artifacts: bool = False,
     golden_checks: bool = False,
 ) -> dict:
     """Run the full pipeline.  Network edges are injectable; alternatively
-    pass pre-parsed ``grids_by_year`` to skip scrape/download/Excel-decode
-    entirely (the offline/test path).  Returns artifact paths + quarantine.
+    pass ``parsed`` — what ``parse_workbook_files`` returns, ``({year:
+    canonical frame}, quarantine)`` — to skip scrape/download/parse (the
+    offline path).  Returns artifact paths + quarantine.
 
     ``golden_checks=True`` evaluates the reference's 16 runtime asset
     checks (plans/golden_checks.py) against the produced frames and adds
@@ -57,16 +58,16 @@ def run_aspep_job(
     meaningful on the real corpus; synthetic fixtures won't contain the
     golden cells.
     """
-    bad_files: list = []
-    if grids_by_year is None:
+    if parsed is None:
         mapping_file = os.path.join(paths.out_dir, "year_url_mapping.json")
         mapping = build_year_url_mapping(mapping_file, fetch=fetch) if fetch else {}
         files, bad_dl = download_workbooks(mapping, paths.raw_dir, fetch_bytes)
-        grids_by_year, bad_parse = parse_workbook_files(files.items())
-        bad_files += bad_dl + bad_parse
+        frames, bad_parse = parse_workbook_files(files.items())
+        parsed = frames, bad_dl + bad_parse
+    frames, bad_files = parsed
 
-    fact, bad_ingest = ingest_grids(spark, grids_by_year, census_dim)
-    bad_files += bad_ingest
+    fact, bad_ingest = ingest_grids(spark, frames, census_dim)
+    bad_files = bad_files + bad_ingest
 
     # Canonical store: year-partitioned parquet; downstream stages read it
     # back so each stage starts from columnar storage, not lineage.

@@ -1,20 +1,22 @@
 """Ingest adapters for ASPEP workbooks (SURVEY.md §2.1 S5/S6, §7.3).
 
-Two raw layouts exist:
+One path: workbook bytes → positional grid → canonical year frame → fact.
 
-- **legacy era (≤2023)**: multi-row header windows at year-specific offsets
-  (``maps.HEADER_WINDOWS``), junk rows above, positional grid.
-- **tidy era (2024+)**: flat headers named by ``maps.TIDY_2024_COLUMN_CANON``
-  keys, dirty numeric strings.
+- **bytes → grid**: one stdlib reader per format, ``xlsx_lite`` for OOXML
+  ``.xlsx`` and ``xls_lite`` for BIFF ``.xls`` (no pandas Excel engines).
+- **grid → canonical frame**: ``grid_to_canonical``, the one era dispatch.
+  Two raw layouts exist:
 
-The adapters are written grid-first: ``(grid, year) → canonical pandas
-frame`` where a grid is ``list[list]`` of raw cell values.  That keeps the
-header-collapse/slugify/rename logic independent of any Excel parser —
-driver-side ``pd.read_excel`` feeds it when openpyxl/xlrd exist (they are
-optional), the stdlib readers ``xlsx_lite`` (OOXML) and ``xls_lite`` (BIFF
-``.xls``) feed it otherwise, and the same function runs inside
-``mapInPandas`` over a ``binaryFile`` scan for many-file scale
-(``ingest_binary_workbooks``).
+  - **legacy era (≤2023)**: multi-row header windows at year-specific
+    offsets (``maps.HEADER_WINDOWS``), junk rows above, positional grid.
+  - **tidy era (2024+)**: a flat header row whose names are
+    ``maps.TIDY_2024_COLUMN_CANON`` keys, dirty numeric strings.
+
+- **canonical frames → fact**: ``ingest_grids``, one ``createDataFrame``
+  per year, then ``normalize_fact``.
+
+A workbook that fails to read or to fit its era's adapter is quarantined
+by ``parse_workbook_files`` with its year and file; the other years land.
 
 Reference behavior reproduced: process_aspep/assets.py:115-165 (both
 adapters), 270-333 (per-year loop with quarantine).
@@ -22,7 +24,6 @@ adapters), 270-333 (per-year loop with quarantine).
 
 from __future__ import annotations
 
-import io
 import os
 import re
 
@@ -32,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import maps, schema
 from ..functions.scalar import slugify_py
+from .xls_lite import read_xls_grid
+from .xlsx_lite import read_xlsx_grid
 
 _PAREN_RE = re.compile(r"\(.*?\)")
 _DASH_RE = re.compile("[−–—]")
@@ -95,10 +98,12 @@ def cleanse_numeric_series(s: pd.Series) -> pd.Series:
     return pd.to_numeric(t, errors="coerce")
 
 
-def tidy_2024_to_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Tidy-era adapter: canonical rename, keep only mapped columns, cleanse
-    dirty numerics (reference assets.py:141-165)."""
-    out = pdf.rename(columns=maps.TIDY_2024_COLUMN_CANON)
+def tidy_2024_to_frame(grid: list[list]) -> pd.DataFrame:
+    """Tidy-era adapter: the first row is the flat header; canonical rename,
+    keep only mapped columns, cleanse dirty numerics (reference
+    assets.py:141-165)."""
+    header = [str(c) if c is not None else "" for c in grid[0]]
+    out = pd.DataFrame(grid[1:], columns=header).rename(columns=maps.TIDY_2024_COLUMN_CANON)
     keep = [c for c in maps.TIDY_2024_COLUMN_CANON.values() if c in out.columns]
     out = out.loc[:, keep]
     for c in maps.TIDY_2024_NUMERIC_COLS:
@@ -128,20 +133,31 @@ def _to_canonical(pdf: pd.DataFrame, year: int) -> pd.DataFrame:
     return out
 
 
+def grid_to_canonical(grid: list[list], year: int) -> pd.DataFrame:
+    """The era dispatch: a year in ``maps.HEADER_WINDOWS`` takes the legacy
+    adapter, any other year the tidy one; both land on the canonical
+    schema."""
+    if year in maps.HEADER_WINDOWS:
+        frame = legacy_grid_to_frame(grid, year)
+    else:
+        frame = tidy_2024_to_frame(grid)
+    return _to_canonical(frame, year)
+
+
 def parse_workbook_files(files) -> tuple[dict[int, pd.DataFrame], list[dict]]:
     """Parse ``(year, path)`` workbook files into canonical frames
     (driver-side).  A file that fails to read or parse is quarantined with
     its year, path and reason, not fatal (reference assets.py:317-320)."""
-    grids: dict[int, pd.DataFrame] = {}
+    frames: dict[int, pd.DataFrame] = {}
     bad: list[dict] = []
     for year, path in files:
         year = int(year)
         try:
             with open(path, "rb") as f:
-                grids[year] = parse_workbook_bytes(f.read(), path, year)
+                frames[year] = parse_workbook_bytes(f.read(), path, year)
         except Exception as exc:  # noqa: BLE001 — quarantine
             bad.append({"year": year, "file": path, "reason": str(exc)})
-    return grids, bad
+    return frames, bad
 
 
 def grids_from_raw_dir(raw_dir: str) -> tuple[dict[int, pd.DataFrame], list[dict]]:
@@ -155,50 +171,28 @@ def grids_from_raw_dir(raw_dir: str) -> tuple[dict[int, pd.DataFrame], list[dict
 
 
 def _read_grid(raw: bytes, filename: str, year: int) -> list[list]:
-    """Excel bytes → positional grid.  Prefers pandas engines (openpyxl /
-    xlrd) when installed; falls back to the stdlib readers: ``xlsx_lite``
-    for OOXML .xlsx, ``xls_lite`` for BIFF .xls."""
-    engine = "openpyxl" if filename.lower().endswith(".xlsx") else "xlrd"
+    """Excel bytes → positional grid: ``xlsx_lite`` for OOXML ``.xlsx``,
+    ``xls_lite`` for BIFF ``.xls``."""
     sheet = maps.SHEET_NAMES.get(year)
-    try:
-        kwargs: dict = {"engine": engine, "header": None}
-        if sheet:
-            kwargs["sheet_name"] = sheet
-        return pd.read_excel(io.BytesIO(raw), **kwargs).values.tolist()
-    except ImportError:
-        if engine == "openpyxl":
-            from .xlsx_lite import read_xlsx_grid
-
-            return read_xlsx_grid(raw, sheet_name=sheet)
-        from .xls_lite import read_xls_grid
-
-        return read_xls_grid(raw, sheet_name=sheet)
+    if filename.lower().endswith(".xlsx"):
+        return read_xlsx_grid(raw, sheet_name=sheet)
+    return read_xls_grid(raw, sheet_name=sheet)
 
 
 def parse_workbook_bytes(raw: bytes, filename: str, year: int) -> pd.DataFrame:
-    """Parse Excel bytes → canonical pandas frame (era dispatch per
-    ``maps.HEADER_WINDOWS``)."""
-    grid = _read_grid(raw, filename, year)
-    if year in maps.HEADER_WINDOWS:
-        frame = legacy_grid_to_frame(grid, year)
-    else:
-        # tidy era: first row is the flat header
-        header = [str(c) if c is not None else "" for c in grid[0]]
-        frame = tidy_2024_to_frame(pd.DataFrame(grid[1:], columns=header))
-    return _to_canonical(frame, year)
+    """Parse Excel bytes → canonical pandas frame (``grid_to_canonical``)."""
+    return grid_to_canonical(_read_grid(raw, filename, year), year)
 
 
 def ingest_grids(
     spark: SparkSession,
-    grids_by_year: dict[int, object],
+    frames_by_year: dict[int, pd.DataFrame],
     census_dim: DataFrame | None = None,
 ) -> tuple[DataFrame, list[dict]]:
-    """Driver-side ingest of pre-parsed per-year raw data.
-
-    ``grids_by_year`` values are either a positional grid (legacy era) or a
-    flat-header pandas frame (tidy era).  Bad years are quarantined, not
-    fatal (reference assets.py:317-320).  Returns the normalized canonical
-    fact DataFrame plus the quarantine list.
+    """Driver-side ingest of canonical year frames (the frames
+    ``parse_workbook_files`` returns).  Returns the normalized canonical
+    fact DataFrame plus the quarantine list; ``normalize_fact`` keeps only
+    the ``maps.START_YEAR``–``maps.END_YEAR`` window.
 
     Each year is converted by its own ``createDataFrame``, so a year whose
     frame fails the Arrow path (e.g. a numeric cell in ``state``) falls
@@ -213,18 +207,8 @@ def ingest_grids(
 
     frames: list[DataFrame] = []
     bad: list[dict] = []
-    for year, raw in sorted(grids_by_year.items()):
-        if not (maps.START_YEAR <= int(year) < maps.END_YEAR):
-            continue
+    for year, pdf in sorted(frames_by_year.items()):
         try:
-            if isinstance(raw, pd.DataFrame):
-                raw_cols = set(schema.aspep_raw_schema().fieldNames())
-                if raw_cols <= set(raw.columns):
-                    pdf = raw[schema.aspep_raw_schema().fieldNames()]  # pre-canonicalized
-                else:
-                    pdf = _to_canonical(tidy_2024_to_frame(raw), year)
-            else:
-                pdf = _to_canonical(legacy_grid_to_frame(raw, int(year)), year)
             frames.append(spark.createDataFrame(pdf, schema=schema.aspep_raw_schema()))
         except Exception as exc:  # noqa: BLE001 — quarantine, don't abort
             bad.append({"year": year, "reason": str(exc)})
@@ -233,39 +217,3 @@ def ingest_grids(
         return empty, bad
     raw_fact = union_by_name(frames).coalesce(spark.sparkContext.defaultParallelism)
     return normalize_fact(raw_fact, census_dim), bad
-
-
-def ingest_binary_workbooks(
-    spark: SparkSession, path_glob: str, census_dim: DataFrame | None = None
-) -> DataFrame:
-    """Scale path: many workbooks via the ``binaryFile`` source with the
-    same adapter running in executors (Arrow-batched).
-
-    File-name convention ``*_{year}.xls[x]`` supplies the year stamp.  At
-    22 files this is overkill (driver-side ``ingest_grids`` wins), but at
-    100k workbooks it is the only shape that works — scan parallelism,
-    task retry, and quarantine-by-row all come from Spark.
-    """
-    from ..plans.pipeline import normalize_fact
-
-    binf = spark.read.format("binaryFile").load(path_glob)
-
-    def parse_partition(batches):
-        for pdf in batches:
-            out = []
-            for path, raw in zip(pdf["path"], pdf["content"]):
-                m = re.search(r"(\d{4})\.(xlsx?|XLSX?)$", path)
-                if not m:
-                    continue
-                year = int(m.group(1))
-                try:
-                    out.append(parse_workbook_bytes(bytes(raw), path, year))
-                except Exception:  # noqa: BLE001 — quarantine
-                    continue
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    parsed = binf.select("path", "content").mapInPandas(
-        parse_partition, schema=schema.aspep_raw_schema()
-    )
-    return normalize_fact(parsed, census_dim)

@@ -74,9 +74,10 @@ def _default_fetch(url: str) -> str | None:
 def build_year_url_mapping(
     mapping_file: str,
     fetch: Callable[[str], str | None] = _default_fetch,
-    years: range = range(maps.START_YEAR, maps.END_YEAR + 1),
+    years: range = range(maps.START_YEAR, maps.END_YEAR),
 ) -> dict:
-    """Scrape (or reuse cached) per-year download URLs (S1/S3/S4)."""
+    """Scrape (or reuse cached) per-year download URLs (S1/S3/S4).  The
+    default years are the ingest window (``maps.END_YEAR`` is exclusive)."""
     if os.path.exists(mapping_file):
         try:
             with open(mapping_file) as f:
@@ -108,7 +109,11 @@ def download_workbooks(
     fetch_bytes: Callable[[str], bytes | None] | None = None,
 ) -> tuple[dict, list[dict]]:
     """Cached per-year workbook download with per-file error isolation
-    (S5, reference assets.py:231-267).  Returns (year→path, quarantine)."""
+    (S5, reference assets.py:231-267).  Returns (year→path, quarantine).
+
+    Any existing ``aspep_{year}.xls[x]`` counts as cached, so a workbook is
+    written under a temporary name and renamed into place only once
+    complete: a cut-off write leaves no file that a later run would keep."""
 
     def _default(url: str) -> bytes | None:
         try:
@@ -134,7 +139,13 @@ def download_workbooks(
         if content is None:
             bad.append({"year": year, "url": row["data_url"], "reason": "fetch failed"})
             continue
-        with open(out, "wb") as f:
-            f.write(content)
+        part = os.path.join(raw_dir, f".aspep_{year}{ext}.part")
+        try:
+            with open(part, "wb") as f:
+                f.write(content)
+            os.replace(part, out)
+        finally:
+            if os.path.exists(part):
+                os.remove(part)
         files[year] = out
     return files, bad

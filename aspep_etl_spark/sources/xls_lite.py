@@ -1,8 +1,8 @@
 """Minimal stdlib BIFF8 (.xls) grid reader.
 
 Legacy ASPEP workbooks (2000-2019) are BIFF8 inside an OLE2/CFB compound
-file; this container has no xlrd, so this reader implements just enough of
-both formats from the standard library: CFB FAT chains → the Workbook
+file; this reader, the engine's one ``.xls`` source, implements just enough
+of both formats from the standard library: CFB FAT chains → the Workbook
 stream, then the BIFF record types the ASPEP sheets actually use
 (SST/CONTINUE with split unicode strings, LABELSST, LABEL, NUMBER,
 RK/MULRK, FORMULA cached numbers, BOUNDSHEET for sheet selection).

@@ -1,11 +1,10 @@
 """Minimal stdlib XLSX grid reader (zipfile + ElementTree).
 
-The engine's Excel adapters are grid-first (``excel.legacy_grid_to_frame``)
-and normally feed from ``pd.read_excel``; this container ships neither
-openpyxl nor xlrd, so this reader provides the OOXML path from the standard
-library alone — enough to ingest the reference's real 2020+ ``.xlsx``
-workbooks and reproduce its golden values.  Legacy BIFF ``.xls`` (≤2019)
-goes through its stdlib sibling, ``xls_lite``.
+The engine's Excel adapters are grid-first (``excel.grid_to_canonical``);
+this reader is their one OOXML source, from the standard library alone —
+enough to ingest the reference's real 2020+ ``.xlsx`` workbooks and
+reproduce its golden values.  Legacy BIFF ``.xls`` (≤2019) goes through
+its stdlib sibling, ``xls_lite``.
 
 Supports exactly what the ASPEP workbooks need: first worksheet (workbook
 order), shared strings, inline strings, numeric cells, sparse rows/cells

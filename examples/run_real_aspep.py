@@ -24,10 +24,8 @@ def main() -> None:
 
     work_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/aspep_real_job"
     spark = get_spark(app_name="aspep-real-job")
-    grids, bad_parse = grids_from_raw_dir(RAW_DIR)
-    result = run_aspep_job(spark, JobPaths(work_dir), grids_by_year=grids)
-    print("parse quarantine:", bad_parse)
-    print("ingest quarantine:", result["bad_files"])
+    result = run_aspep_job(spark, JobPaths(work_dir), parsed=grids_from_raw_dir(RAW_DIR))
+    print("quarantine:", result["bad_files"])
     print("store:", result["store"])
     for name, path in result["artifacts"].items():
         print(f"artifact {name}: {path} ({os.path.getsize(path):,} bytes)")

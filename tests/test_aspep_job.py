@@ -12,7 +12,7 @@ from aspep_etl_spark.sources.census import (
     read_json_artifact,
 )
 
-from .test_ingest import census_dim, legacy_grid_2003, tidy_frame_2024
+from .test_ingest import canonical_frames, census_dim
 
 
 def test_csv_dim_source(spark, tmp_path):
@@ -34,7 +34,7 @@ def test_full_job_offline(spark, tmp_path):
         spark,
         paths,
         census_dim=census_dim(spark),
-        grids_by_year={2003: legacy_grid_2003(), 2024: tidy_frame_2024()},
+        parsed=(canonical_frames(), []),
     )
     assert result["bad_files"] == []
 
@@ -81,9 +81,9 @@ def test_job_releases_stats_cache(spark, tmp_path, monkeypatch):
     from aspep_etl_spark import cache
     from aspep_etl_spark.plans import aspep_job
 
-    grids = {2003: legacy_grid_2003(), 2024: tidy_frame_2024()}
+    parsed = (canonical_frames(), [])
     before = cache.persistent_rdd_ids(spark)
-    run_aspep_job(spark, JobPaths(str(tmp_path / "ok")), grids_by_year=grids)
+    run_aspep_job(spark, JobPaths(str(tmp_path / "ok")), parsed=parsed)
     assert cache.persistent_rdd_ids(spark) - before == set()
 
     real = aspep_job.write_json_array
@@ -99,7 +99,7 @@ def test_job_releases_stats_cache(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(aspep_job, "write_json_array", fail_on_second)
     before = cache.persistent_rdd_ids(spark)
     with pytest.raises(RuntimeError, match="sink failed"):
-        run_aspep_job(spark, JobPaths(str(tmp_path / "fail")), grids_by_year=grids)
+        run_aspep_job(spark, JobPaths(str(tmp_path / "fail")), parsed=parsed)
     assert len(calls) == 2
     assert calls[1], "derived_stats should have filled the stats cache"
     assert cache.persistent_rdd_ids(spark) - before == set()

@@ -5,16 +5,17 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
-import pytest
-
 from aspep_etl_spark import schema
 from aspep_etl_spark.sources.excel import (
     collapse_headers,
+    grid_to_canonical,
     ingest_grids,
     legacy_grid_to_frame,
+    parse_workbook_files,
     tidy_2024_to_frame,
 )
+
+from .xlsx_fixture import xlsx_bytes
 
 
 def legacy_grid_2003():
@@ -32,23 +33,44 @@ def legacy_grid_2003():
     ]
 
 
-def tidy_frame_2024():
-    return pd.DataFrame(
-        {
-            "Geographic Area Name": ["Missouri", "Iowa", "United States"],
-            "Meaning of Aggregate Description": ["Corrections", "Hospitals", "Corrections"],
-            "Full-Time Employment": ["9,591", "(42)", "−7"],
-            "Full-Time Payroll": ["38,884,335", "120,000", "N/A"],
-            "Part-Time Employment": ["10", "20", "30"],
-            "Part-Time Payroll": ["1,000", "2,000", "3,000"],
-            "Part-Time Hours": ["100", "200", "300"],
-            "Full-Time Equivalent Employment": ["9,600", "50", "1000"],
-            "Total Full-Time and Part-Time Employment": ["9,601", "62", "1030"],
-            "Total Full-Time and Part-Time Payroll": ["38,885,335", "122,000", "993,000"],
-            "Unmapped Extra 1": ["x", "y", "z"],
-            "Unmapped Extra 2": ["1", "2", "3"],
-        }
-    )
+def tidy_grid_2024():
+    """Flat header row, dirty numerics, two unmapped columns."""
+    return [
+        [
+            "Geographic Area Name",
+            "Meaning of Aggregate Description",
+            "Full-Time Employment",
+            "Full-Time Payroll",
+            "Part-Time Employment",
+            "Part-Time Payroll",
+            "Part-Time Hours",
+            "Full-Time Equivalent Employment",
+            "Total Full-Time and Part-Time Employment",
+            "Total Full-Time and Part-Time Payroll",
+            "Unmapped Extra 1",
+            "Unmapped Extra 2",
+        ],
+        ["Missouri", "Corrections", "9,591", "38,884,335", "10", "1,000", "100", "9,600",
+         "9,601", "38,885,335", "x", "1"],
+        ["Iowa", "Hospitals", "(42)", "120,000", "20", "2,000", "200", "50",
+         "62", "122,000", "y", "2"],
+        ["United States", "Corrections", "−7", "N/A", "30", "3,000", "300", "1000",
+         "1030", "993,000", "z", "3"],
+    ]
+
+
+def canonical_frames():
+    """Both eras through the era dispatch, as ``parse_workbook_files``
+    returns them."""
+    return {
+        2003: grid_to_canonical(legacy_grid_2003(), 2003),
+        2024: grid_to_canonical(tidy_grid_2024(), 2024),
+    }
+
+
+def tidy_frame_as(year):
+    """The 2024 tidy fixture's canonical frame, stamped with ``year``."""
+    return grid_to_canonical(tidy_grid_2024(), 2024).assign(year=year)
 
 
 def census_dim(spark):
@@ -81,7 +103,7 @@ def test_legacy_grid_to_frame_canonical_columns():
 
 
 def test_tidy_2024_cleanse():
-    pdf = tidy_2024_to_frame(tidy_frame_2024())
+    pdf = tidy_2024_to_frame(tidy_grid_2024())
     assert list(pdf["ft_employment"]) == [9591.0, -42.0, -7.0]
     assert math.isnan(pdf["ft_pay"][2])  # N/A → NaN
     assert "Unmapped Extra 1" not in pdf.columns
@@ -93,14 +115,13 @@ def test_ingest_grids_end_to_end(spark):
     fact, bad = ingest_grids(
         spark,
         {
-            2003: legacy_grid_2003(),
-            2024: tidy_frame_2024(),
-            2010: [["broken"]],  # header window beyond grid → quarantined
-            1999: legacy_grid_2003(),  # outside year range → skipped
+            **canonical_frames(),
+            1999: grid_to_canonical(tidy_grid_2024(), 1999),  # outside year range
         },
         census_dim=census_dim(spark),
     )
-    assert [b["year"] for b in bad] == [2010]
+    assert bad == []
+    assert {r["year"] for r in fact.select("year").distinct().collect()} == {2003, 2024}
     rows = {(r["state_code"], r["gov_function"], r["year"]): r for r in fact.collect()}
 
     al = rows[("AL", "corrections", 2003)]
@@ -125,6 +146,25 @@ def test_ingest_grids_end_to_end(spark):
     assert al["pt_hours"] is None
 
 
+def test_parse_quarantines_a_workbook_its_adapter_rejects(spark, tmp_path):
+    """A workbook that reads but does not fit its era's adapter (2010's
+    header window lies beyond a one-cell sheet) is quarantined at the parse
+    stage with its year and file; the other years still land."""
+    books = {2003: legacy_grid_2003(), 2010: [["broken"]], 2024: tidy_grid_2024()}
+    files = []
+    for year, grid in books.items():
+        path = tmp_path / f"aspep_{year}.xlsx"
+        path.write_bytes(xlsx_bytes(grid))
+        files.append((year, str(path)))
+    frames, bad = parse_workbook_files(files)
+    assert [(b["year"], b["file"]) for b in bad] == [(2010, str(tmp_path / "aspep_2010.xlsx"))]
+    assert set(frames) == {2003, 2024}
+
+    fact, bad = ingest_grids(spark, frames)
+    assert bad == []
+    assert {r["year"] for r in fact.select("year").distinct().collect()} == {2003, 2024}
+
+
 def test_ingest_empty_input(spark):
     fact, bad = ingest_grids(spark, {})
     assert fact.count() == 0 and bad == []
@@ -139,7 +179,7 @@ def test_ingest_grids_store_layout(spark, tmp_path):
     from aspep_etl_spark.sinks.publish import write_canonical_store
 
     years = list(range(2015, 2024))
-    fact, bad = ingest_grids(spark, {y: tidy_frame_2024() for y in years})
+    fact, bad = ingest_grids(spark, {y: tidy_frame_as(y) for y in years})
     assert bad == []
     cores = spark.sparkContext.defaultParallelism
     assert fact.rdd.getNumPartitions() <= cores
@@ -159,8 +199,11 @@ def test_ingest_grids_numeric_state_falls_back_alone(spark):
     the Arrow path (NaN measures → null)."""
     grid = legacy_grid_2003()
     grid[5][0] = 1.5  # "Alabama  " → a number on the Streets & Hwys row
-    grids = {2003: grid, **{y: tidy_frame_2024() for y in range(2015, 2023)}}
-    fact, bad = ingest_grids(spark, grids)
+    frames = {
+        2003: grid_to_canonical(grid, 2003),
+        **{y: tidy_frame_as(y) for y in range(2015, 2023)},
+    }
+    fact, bad = ingest_grids(spark, frames)
     assert bad == []
     rows = fact.collect()
     assert {r["year"] for r in rows} == {2003, *range(2015, 2023)}

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from aspep_etl_spark.sources.manifest import (
     build_year_url_mapping,
     census_url_for_year,
@@ -77,3 +79,57 @@ def test_download_cache_and_quarantine(tmp_path):
     seen.clear()
     files2, _ = download_workbooks(mapping, str(tmp_path), fetch_bytes)
     assert set(files2) == {"2003", "2004"} and seen == ["https://x/aspep_2005.xls"]
+
+
+def test_default_scrape_covers_the_ingest_window(tmp_path):
+    """The default years are the ones ingest keeps: 2003-2024, no 2025
+    (``maps.END_YEAR`` is exclusive)."""
+    calls = []
+
+    def fetch(url):
+        calls.append(url)
+        return None
+
+    build_year_url_mapping(str(tmp_path / "year_url_mapping.json"), fetch=fetch)
+    assert calls == [census_url_for_year(y) for y in range(2003, 2025)]
+
+
+def test_cut_off_download_is_fetched_again(tmp_path, monkeypatch):
+    """A write that fails halfway leaves no ``aspep_{year}.*`` behind, so
+    the next call fetches that year again instead of keeping a truncated
+    workbook as cached."""
+    from aspep_etl_spark.sources import manifest
+
+    mapping = {"2003": {"year": 2003, "data_url": "https://x/aspep_2003.xls"}}
+    seen = []
+
+    def fetch_bytes(url):
+        seen.append(url)
+        return b"excel-bytes"
+
+    class CutFile:
+        def __init__(self, f):
+            self.f = f
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+        def write(self, data):
+            self.f.write(data[: len(data) // 2])
+            self.f.flush()
+            raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(manifest, "open", lambda p, m="r": CutFile(open(p, m)), raising=False)
+    with pytest.raises(OSError, match="No space left"):
+        download_workbooks(mapping, str(tmp_path), fetch_bytes)
+    assert list(tmp_path.glob("aspep_2003.*")) == []
+
+    monkeypatch.delattr(manifest, "open")
+    files, bad = download_workbooks(mapping, str(tmp_path), fetch_bytes)
+    assert bad == [] and seen == ["https://x/aspep_2003.xls"] * 2
+    with open(files["2003"], "rb") as f:
+        assert f.read() == b"excel-bytes"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["aspep_2003.xls"]

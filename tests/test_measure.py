@@ -1,11 +1,14 @@
 """The shared timing loop (``aspep_etl_spark/measure.py``), driven by a
 fake ``run(name) -> seconds`` — no Spark session.  Also pins the key set
-of the ``bench.py`` result line and byte-compiles the harness scripts,
-which no other test imports."""
+of the ``bench.py`` result line, byte-compiles the harness and example
+scripts, which no other test imports, and checks the package names they
+and the benchmark's tracer look up."""
 
 from __future__ import annotations
 
+import ast
 import glob
+import importlib
 import os
 import py_compile
 
@@ -165,10 +168,56 @@ def test_bench_line_keeps_its_keys():
     )
 
 
-@pytest.mark.parametrize(
-    "path",
-    [os.path.join(REPO, "bench.py"), *sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))],
-    ids=os.path.basename,
-)
+SCRIPTS = [
+    os.path.join(REPO, "bench.py"),
+    *sorted(glob.glob(os.path.join(REPO, "tools", "*.py"))),
+    *sorted(glob.glob(os.path.join(REPO, "examples", "*.py"))),
+]
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=os.path.basename)
 def test_harness_scripts_compile(path, tmp_path):
     py_compile.compile(path, cfile=str(tmp_path / "out.pyc"), doraise=True)
+
+
+def _resolves(module: str, name: str) -> bool:
+    mod = importlib.import_module(module)
+    if hasattr(mod, name):
+        return True
+    try:
+        importlib.import_module(f"{module}.{name}")
+    except ModuleNotFoundError:
+        return False
+    return True
+
+
+def test_script_package_imports_resolve():
+    """Every ``from aspep_etl_spark... import name`` in the scripts names
+    something the package has (the scripts import it lazily, inside
+    ``main``, so compiling them does not catch a rename)."""
+    missing = []
+    for path in SCRIPTS:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            package = (node.module or "").split(".")[0] if isinstance(node, ast.ImportFrom) else ""
+            if package == "aspep_etl_spark":
+                missing += [
+                    (os.path.basename(path), node.module, a.name)
+                    for a in node.names
+                    if not _resolves(node.module, a.name)
+                ]
+    assert missing == []
+
+
+def test_perfbench_trace_targets_exist():
+    """Each function the benchmark's tracer wraps exists under its name; a
+    rename would leave its per-layer metric silently at zero."""
+    from perfbench.trace import TARGETS
+
+    missing = [
+        (mod, fn)
+        for mod, fn, _, _ in TARGETS
+        if not callable(getattr(importlib.import_module(mod), fn, None))
+    ]
+    assert missing == []
