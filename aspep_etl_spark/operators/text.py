@@ -63,6 +63,17 @@ def quality_metrics(text: Column) -> dict[str, Column]:
     }
 
 
+
+def passes_quality(m: dict[str, Column]) -> Column:
+    """The training-data quality gate over ``quality_metrics``' columns:
+    enough tokens, not too many stopwords, a plausible mean token length.
+    The one Spark-side copy of the thresholds (the oracles keep their own)."""
+    return (
+        (m["n_tokens"] >= 20)
+        & (m["stopword_ratio"] <= 0.35)
+        & m["mean_token_len"].between(2.0, 12.0)
+    )
+
 # Tie-break priority for the language vote (first = wins ties).
 LANG_PRIORITY = ("en", "es", "de", "fr")
 

@@ -44,19 +44,11 @@ def run_aspep_job(
     fetch_bytes=None,
     parsed: tuple[dict, list] | None = None,
     gzip_artifacts: bool = False,
-    golden_checks: bool = False,
 ) -> dict:
     """Run the full pipeline.  Network edges are injectable; alternatively
     pass ``parsed`` — what ``parse_workbook_files`` returns, ``({year:
     canonical frame}, quarantine)`` — to skip scrape/download/parse (the
     offline path).  Returns artifact paths + quarantine.
-
-    ``golden_checks=True`` evaluates the reference's 16 runtime asset
-    checks (plans/golden_checks.py) against the produced frames and adds
-    the audit under ``result["golden_checks"]`` — the engine-side
-    equivalent of the reference's pipeline-attached check gate.  Only
-    meaningful on the real corpus; synthetic fixtures won't contain the
-    golden cells.
     """
     if parsed is None:
         mapping_file = os.path.join(paths.out_dir, "year_url_mapping.json")
@@ -97,14 +89,6 @@ def run_aspep_job(
         }
         if gzip_artifacts:
             artifacts = {k: gzip_publish(p) for k, p in artifacts.items()}
-        result = {"artifacts": artifacts, "bad_files": bad_files, "store": paths.store_dir}
-        if golden_checks:
-            from .golden_checks import run_golden_checks
-
-            result["golden_checks"] = run_golden_checks(
-                spark,
-                {"combine_years": fact, "derive_stats": stats, "derive_extended_stats": ext},
-            ).collect()
-        return result
+        return {"artifacts": artifacts, "bad_files": bad_files, "store": paths.store_dir}
     finally:
         stats.unpersist()

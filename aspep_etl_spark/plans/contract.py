@@ -46,7 +46,7 @@ from ..operators.recode import recode_values
 from ..operators.setops import union_by_name
 from ..operators.similarity import brute_force_topk, ivf_topk, srp_lsh_topk, srp_planes
 from ..operators.stats import append_cohort_stats
-from ..operators.text import fingerprint, langid_scores, quality_metrics
+from ..operators.text import fingerprint, langid_scores, passes_quality, quality_metrics
 from ..operators.windows import cohort_ranks, signed_delta_ranks, yoy_deltas
 from ..streaming.events import hourly_rollup_batch, run_streaming_rollup
 
@@ -1309,18 +1309,10 @@ def docs_quality_filter(spark, sf_dir):
     """Training-data quality gate ([EXT]): keep documents passing the
     length/stopword/token heuristics — the canonical pre-training filter
     shape (filter is pure codegen; no shuffle)."""
-    docs = _t(spark, sf_dir, "documents")
     m = quality_metrics(F.col("text"))
-    scored = docs.select(
+    return _t(spark, sf_dir, "documents").filter(passes_quality(m)).select(
         "doc_id", "lang",
-        m["n_tokens"].alias("n_tokens"),
-        m["stopword_ratio"].alias("stopword_ratio"),
-        m["mean_token_len"].alias("mean_token_len"),
-    )
-    return scored.filter(
-        (F.col("n_tokens") >= 20)
-        & (F.col("stopword_ratio") <= 0.35)
-        & (F.col("mean_token_len").between(2.0, 12.0))
+        *(m[k].alias(k) for k in ("n_tokens", "stopword_ratio", "mean_token_len")),
     )
 
 
@@ -2326,14 +2318,14 @@ def merge_queries(modules) -> dict:
 
 from . import (  # noqa: E402
     analytics_extra, analytics_r6, analytics_r6b, analytics_r7, analytics_r8, analytics_r9,
-    analytics_r10, curation, ingest_funnel, llm_extra, llm_scale, relational_extra, tokenizer,
+    analytics_r10, curation, llm_extra, llm_scale, relational_extra, tokenizer,
     tpch_extra,
 )
 
 _REGISTRY = merge_queries((
     sys.modules[__name__], tpch_extra, llm_extra, relational_extra, curation, llm_scale,
     analytics_extra, analytics_r6, analytics_r6b, analytics_r7, analytics_r8, analytics_r9,
-    analytics_r10, ingest_funnel, tokenizer,
+    analytics_r10, tokenizer,
 ))
 SPARK_QUERIES = {name: builder for name, (builder, _) in _REGISTRY.items()}
 ORACLE_SQL = {name: sql for name, (_, sql) in _REGISTRY.items()}

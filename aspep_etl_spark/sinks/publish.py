@@ -20,6 +20,7 @@ import json
 import math
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -162,9 +163,13 @@ def gzip_publish(local_path: str) -> str:
     (reference assets.py:91-97).  Copied in 1 MiB chunks: iterating the
     file by line makes one small write per line of the indent-4 JSON."""
     out = f"{local_path}.gz"
-    with open(local_path, "rb") as f_in, gzip.open(out, "wb") as f_out:
-        shutil.copyfileobj(f_in, f_out, 1 << 20)
+    _gzip_to(local_path, out)
     return out
+
+
+def _gzip_to(src: str, dst: str) -> None:
+    with open(src, "rb") as f_in, gzip.open(dst, "wb") as f_out:
+        shutil.copyfileobj(f_in, f_out, 1 << 20)
 
 
 _TEXT_EXTS = (".json", ".csv", ".txt")
@@ -190,7 +195,9 @@ def publish_dir(
     its publish step — gzip OR upload — is quarantined per-file and
     OMITTED from the result list, exactly like the reference
     (assets.py:565-566 appends only successful uploads); one unreadable
-    file never aborts the walk.
+    file never aborts the walk.  Each gzip goes to a temporary directory
+    removed after its upload, so the walked tree is left as it was and a
+    second call uploads the same keys.
     """
     results: list[dict] = []
     for root, _, files in sorted(os.walk(out_dir)):
@@ -202,15 +209,17 @@ def publish_dir(
             is_text = filename.endswith(_TEXT_EXTS)
             extra_args: dict = {"ACL": "public-read"}
             try:
-                send_path = local_path
-                if is_text:
-                    send_path = gzip_publish(local_path)
-                    extra_args.update(
-                        {"ContentType": "text/plain", "ContentEncoding": "gzip"}
-                    )
-                if uploader is None:
-                    raise RuntimeError("publish_dir: no uploader injected")
-                uploader(send_path, bucket, key, extra_args)
+                with tempfile.TemporaryDirectory() as tmp:
+                    send_path = local_path
+                    if is_text:
+                        send_path = os.path.join(tmp, f"{filename}.gz")
+                        _gzip_to(local_path, send_path)
+                        extra_args.update(
+                            {"ContentType": "text/plain", "ContentEncoding": "gzip"}
+                        )
+                    if uploader is None:
+                        raise RuntimeError("publish_dir: no uploader injected")
+                    uploader(send_path, bucket, key, extra_args)
             except Exception:  # noqa: BLE001 — per-file quarantine
                 continue
             results.append(

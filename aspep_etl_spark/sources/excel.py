@@ -114,15 +114,19 @@ def tidy_2024_to_frame(grid: list[list]) -> pd.DataFrame:
 
 def _to_canonical(pdf: pd.DataFrame, year: int) -> pd.DataFrame:
     """Coerce an adapter frame onto the canonical fact schema (missing
-    measures → null, extra columns dropped, measures numeric)."""
+    measures → null, extra columns dropped, measures numeric).
+
+    Dimension cells become ``str`` (missing → ``None``): a number in
+    ``state`` would fail the Arrow conversion, and the non-Arrow fallback
+    keeps that year's missing measures as NaN, which Spark ranks and
+    averages as a value, where every other year gets null."""
     # Column order must mirror schema.aspep_raw_schema() — pandas→Spark
     # conversion with an explicit schema aligns by position.
     out = pd.DataFrame()
     out["index"] = pd.Series(range(len(pdf)), dtype="int64")
-    out["state"] = pdf.get("state", pd.Series(dtype=object)).reset_index(drop=True).astype(object)
-    out["gov_function"] = (
-        pdf.get("gov_function", pd.Series(dtype=object)).reset_index(drop=True).astype(object)
-    )
+    for dim in ("state", "gov_function"):
+        cells = pdf.get(dim, pd.Series(dtype=object)).reset_index(drop=True)
+        out[dim] = cells.map(lambda v: None if pd.isna(v) else str(v)).astype(object)
     out["year"] = int(year)  # trust the filename, not the sheet (assets.py:302)
     for m in schema.MEASURE_COLS:
         out[m] = (
@@ -194,13 +198,12 @@ def ingest_grids(
     fact DataFrame plus the quarantine list; ``normalize_fact`` keeps only
     the ``maps.START_YEAR``–``maps.END_YEAR`` window.
 
-    Each year is converted by its own ``createDataFrame``, so a year whose
-    frame fails the Arrow path (e.g. a numeric cell in ``state``) falls
-    back alone, and a year that fails outright is quarantined alone.  Each
-    conversion slices its frame into ``defaultParallelism`` partitions, so
-    the union is coalesced back to ``defaultParallelism`` (no shuffle; the
-    driver already holds every row) — otherwise N years reach the store
-    writer as N × cores tasks and files of a few rows each.
+    Each year is converted by its own ``createDataFrame``, so a year that
+    fails outright is quarantined alone.  Each conversion slices its frame
+    into ``defaultParallelism`` partitions, so the union is coalesced back
+    to ``defaultParallelism`` (no shuffle; the driver already holds every
+    row) — otherwise N years reach the store writer as N × cores tasks and
+    files of a few rows each.
     """
     from ..operators.setops import union_by_name
     from ..plans.pipeline import normalize_fact

@@ -20,7 +20,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from aspep_etl_spark.operators.dedup import incremental_jaccard_matches
-    from aspep_etl_spark.plans.ingest_funnel import ingest_batch, llm_ingest_funnel
+    from aspep_etl_spark.plans.curation import ingest_batch, llm_ingest_funnel
     from aspep_etl_spark.session import get_spark
     from aspep_etl_spark.sources.registry import load_table
 

@@ -6,7 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from aspep_etl_spark.plans.curation import curate_documents
+from aspep_etl_spark.operators.text import passes_quality, quality_metrics
+from aspep_etl_spark.plans.curation import curate_documents, ingest_batch, llm_ingest_funnel
 
 
 def test_curation_stage_invariants(spark, sf_dir):
@@ -44,8 +45,6 @@ class TestIngestFunnel:
     counterpart of the curation funnel)."""
 
     def test_stage_counts_monotone_and_coherent(self, spark, sf_dir):
-        from aspep_etl_spark.plans.ingest_funnel import llm_ingest_funnel
-
         rows = {r["stage"]: r["n_docs"] for r in llm_ingest_funnel(spark, sf_dir).collect()}
         order = ["0_batch", "1_exact", "2_neardup", "3_decontam", "4_quality",
                  "5_classifier"]
@@ -56,10 +55,24 @@ class TestIngestFunnel:
         assert split_total == rows["5_classifier"]
 
     def test_no_corpus_doc_admitted(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from aspep_etl_spark.plans.ingest_funnel import ingest_batch
-
         st = ingest_batch(spark, sf_dir)
         bad = st["admitted"].filter(F.col("doc_id") % 5 != 4)
         assert bad.count() == 0
+
+
+def test_quality_gate_bounds(spark):
+    """``passes_quality`` keeps each bound itself (20 tokens, stopword
+    ratio 0.35, mean token length 2.0 and 12.0) and drops just past it."""
+    cases = {
+        "20_tokens": ("abcd " * 20, True),
+        "19_tokens": ("abcd " * 19, False),
+        "ratio_0.35": ("the " * 7 + "abcd " * 13, True),
+        "ratio_0.4": ("the " * 8 + "abcd " * 12, False),
+        "len_2.0": ("ab " * 20, True),
+        "len_1.95": ("ab " * 19 + "b", False),
+        "len_12.0": ("abcdefghijkl " * 20, True),
+        "len_12.05": ("abcdefghijkl " * 19 + "abcdefghijklm", False),
+    }
+    docs = spark.createDataFrame([(k, t) for k, (t, _) in cases.items()], ["case", "text"])
+    kept = docs.filter(passes_quality(quality_metrics(F.col("text")))).collect()
+    assert {r["case"] for r in kept} == {k for k, (_, keep) in cases.items() if keep}

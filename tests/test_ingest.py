@@ -192,11 +192,10 @@ def test_ingest_grids_store_layout(spark, tmp_path):
     assert spark.read.parquet(store).count() == 3 * len(years)
 
 
-def test_ingest_grids_numeric_state_falls_back_alone(spark):
-    """A numeric ``state`` cell fails the Arrow conversion of its year only:
-    that year takes the non-Arrow path (the cell is stringified, its NaN
-    measures stay NaN) and is not quarantined, while every other year keeps
-    the Arrow path (NaN measures → null)."""
+def test_ingest_grids_numeric_state_is_stringified_with_null_measures(spark):
+    """A numeric ``state`` cell is stringified by ``grid_to_canonical``, so
+    its year takes the Arrow path like every other year: it is not
+    quarantined, and its missing measures are null, not NaN."""
     grid = legacy_grid_2003()
     grid[5][0] = 1.5  # "Alabama  " → a number on the Streets & Hwys row
     frames = {
@@ -212,7 +211,7 @@ def test_ingest_grids_numeric_state_falls_back_alone(spark):
     assert len(hwy) == 1
     assert hwy[0]["state"] == "1.5" and hwy[0]["state_code"] == "1.5"
     assert hwy[0]["ft_pay"] == 9000000.0
-    assert math.isnan(hwy[0]["pt_hours"])  # non-Arrow path keeps NaN
+    assert hwy[0]["pt_hours"] is None
 
     neighbours = [r for r in rows if r["year"] != 2003]
     assert len(neighbours) == 3 * 8

@@ -74,12 +74,14 @@ def test_publish_dir_walks_gzips_and_returns_urls(tmp_path):
     # failure (gzip runs INSIDE the per-file try), walk must continue
     (tmp_path / "broken.json").symlink_to(tmp_path / "does-not-exist")
 
-    calls = []
+    calls, sent_bytes = [], {}
 
     def uploader(path, bucket, key, extra):
         if key.endswith("stats.csv"):
             raise OSError("simulated transfer failure")
         calls.append((path, bucket, key, tuple(sorted(extra.items()))))
+        with open(path, "rb") as f:  # the gzip is removed after the upload
+            sent_bytes[key] = f.read()
 
     res = publish_dir(str(tmp_path), "my-bucket", prefix="aspep/v1", uploader=uploader)
     by_file = {r["file"]: r["url"] for r in res}
@@ -94,10 +96,40 @@ def test_publish_dir_walks_gzips_and_returns_urls(tmp_path):
     gz_path, extra = sent["aspep/v1/combined.json"]
     assert gz_path.endswith(".json.gz")  # text → gzipped upload
     assert extra["ContentEncoding"] == "gzip" and extra["ACL"] == "public-read"
-    with gz.open(gz_path) as f:
-        assert json.load(f) == [{"a": 1}]
+    assert json.loads(gz.decompress(sent_bytes["aspep/v1/combined.json"])) == [{"a": 1}]
     _, bin_extra = sent["aspep/v1/raw.parquet"]
     assert "ContentEncoding" not in bin_extra  # binary uploaded as-is
+
+
+def test_publish_dir_twice_uploads_same_keys_and_leaves_tree(tmp_path):
+    """The gzip of a text artifact is not written into the walked tree, so
+    a second publish of the same directory uploads the same keys (no
+    ``combined.json.gz`` as a raw binary key) and the listing is unchanged."""
+    from aspep_etl_spark.sinks import publish_dir
+
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "combined.json").write_text("[]")
+    (tmp_path / "sub" / "stats.csv").write_text("a,b\n1,2\n")
+    (tmp_path / "raw.parquet").write_bytes(b"\x00binary")
+
+    def listing():
+        return sorted(str(p.relative_to(tmp_path)) for p in tmp_path.rglob("*"))
+
+    before = listing()
+    runs = []
+    for _ in range(2):
+        calls = []
+        publish_dir(
+            str(tmp_path), "b",
+            uploader=lambda path, bucket, key, extra: calls.append(
+                (key, extra.get("ContentEncoding"))
+            ),
+        )
+        runs.append(calls)
+        assert listing() == before
+    assert runs[0] == runs[1] == [
+        ("combined.json", "gzip"), ("raw.parquet", None), ("sub/stats.csv", "gzip"),
+    ]
 
 
 def test_json_array_byte_parity_with_reference_serializer(spark, tmp_path):
