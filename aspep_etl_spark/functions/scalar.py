@@ -4,6 +4,13 @@ All hot-path functions return Column expressions built from
 ``pyspark.sql.functions`` so they stay inside whole-stage codegen — no
 row-at-a-time Python UDFs.  ``slugify_py`` is the one driver-side helper
 (used only while collapsing raw Excel header grids, pre-schema).
+
+Each ``F.*`` call costs about three py4j round trips (look up
+``functions``, look up the member, call it), so an expression over N
+columns built with the Column API costs ~3N or more.  A per-column
+fan-out is instead written as ONE SQL expression string whose
+identifiers and string literals go through ``sql_quote``, and handed to
+the JVM in one ``F.expr``; Catalyst resolves it to the same plan.
 """
 
 from __future__ import annotations
@@ -13,6 +20,20 @@ import unicodedata
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def sql_quote(text: str, ident: bool = False) -> str:
+    """Quote ``text`` for a Spark SQL expression string.
+
+    ``ident=True`` gives a backtick-quoted identifier (a backtick inside is
+    doubled), so a column name with spaces, dots or backticks names that
+    one top-level column.  Otherwise a single-quoted string literal, with
+    backslash and quote backslash-escaped the way the default parser
+    unescapes them (any other character, non-ASCII included, is literal).
+    """
+    if ident:
+        return "`" + text.replace("`", "``") + "`"
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def slugify_py(text: object) -> str:
@@ -85,7 +106,8 @@ def classify_state_scope(code_col: Column) -> Column:
 def max_abs_numeric(cols: list[str]) -> Column:
     """Row-wise max(|numeric cols|) (A4, reference assets.py:480) — a scalar
     `greatest` chain, not a shuffle.  Nulls are ignored per pandas
-    ``max(axis=1)`` skipna semantics (greatest skips nulls too)."""
-    if len(cols) == 1:
-        return F.abs(F.col(cols[0]))
-    return F.greatest(*[F.abs(F.col(c)) for c in cols])
+    ``max(axis=1)`` skipna semantics (greatest skips nulls too).  One
+    ``F.expr`` whatever the column count (the significance filter spans
+    ~300 columns)."""
+    terms = ", ".join(f"abs({sql_quote(c, ident=True)})" for c in cols)
+    return F.expr(terms if len(cols) == 1 else f"greatest({terms})")

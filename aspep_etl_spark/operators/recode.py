@@ -2,9 +2,11 @@
 
 Two physical strategies for the same logical operator:
 
-- ``recode_values``: the map is compiled into a literal ``create_map``
-  expression — zero shuffle, zero join, constant-folded by Catalyst.  Right
-  choice for maps up to a few thousand entries (ours are ≤60).
+- ``recode_values``: the map is compiled into one SQL ``map(…)`` literal
+  (its strings quoted by ``functions.scalar.sql_quote``) — zero shuffle,
+  zero join, constant-folded by Catalyst, and one JVM call however many
+  entries it has.  Right choice for maps up to a few thousand entries
+  (ours are ≤64).
 - ``recode_via_join``: the map becomes a broadcast-joined lookup table.
   Right choice when the vocabulary itself is a table (or too big for a
   literal expression).
@@ -21,12 +23,18 @@ from itertools import chain
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import sql_quote
+
 
 def recode_values(col: Column, mapping: dict[str, str]) -> Column:
     """Exact-match value recode with pass-through (J2/J3) as a literal map
-    expression evaluated entirely inside codegen."""
-    map_expr = F.create_map(*[F.lit(x) for x in chain.from_iterable(mapping.items())])
-    return F.coalesce(map_expr[col], col)
+    expression evaluated entirely inside codegen.  The map is one
+    ``F.expr``.  An empty mapping passes every value through (an empty
+    ``map()`` has key type VOID, which no column can index)."""
+    if not mapping:
+        return col
+    entries = ", ".join(sql_quote(x) for x in chain.from_iterable(mapping.items()))
+    return F.coalesce(F.expr(f"map({entries})")[col], col)
 
 
 def recode_via_join(

@@ -10,7 +10,11 @@ stat through a single explode, so the plan computes it once: union branches
 that each read different columns of one aggregate would each get their own
 copy of it after column pruning.
 
-Median is exact (`F.median`, Spark ≥3.4).
+Median is exact (SQL ``median``, Spark ≥3.4).
+
+The per-column expressions are SQL strings quoted by
+``functions.scalar.sql_quote`` (one ``F.expr`` per aggregate output, one
+for the whole ``inline``); ``functions/scalar.py`` says why.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import sql_quote
 from .setops import union_by_name
 
 #: percentile_approx accuracy (max rank error = 1/accuracy) for the
@@ -25,24 +30,23 @@ from .setops import union_by_name
 #: reference's rel 1e-3 golden budget while staying sketch-sized.
 APPROX_MEDIAN_ACCURACY = 10_000
 
-def _mean_ordered(c):
-    """Mean as a left fold over the VALUE-SORTED group — bitwise
-    run-reproducible (and cross-engine reproducible) regardless of
-    partitioning, unlike ``F.avg`` whose float sum order is
-    partition-dependent.  Only for bounded-grain cohorts (the ASPEP stats
-    stage groups an already-aggregated fact: ≤ #states rows per group at
-    ANY raw-data scale) — ``collect_list`` on an unbounded group would
-    buffer it; use plain ``"mean"`` there."""
-    vals = F.sort_array(F.collect_list(c))
-    total = F.aggregate(vals, F.lit(0.0), lambda a, x: a + x)
-    n = F.count(c)
-    return F.when(n > 0, total / n)
 
-
-_STAT_FNS = {
-    "median": F.median,
-    "mean": F.avg,
-    "mean_ordered": _mean_ordered,
+#: SQL for each stat over the column ``{c}`` (a quoted identifier).
+#: ``mean_ordered`` is the mean as a left fold over the VALUE-SORTED group —
+#: bitwise run-reproducible (and cross-engine reproducible) regardless of
+#: partitioning, unlike ``avg`` whose float sum order is
+#: partition-dependent.  Only for bounded-grain cohorts (the ASPEP stats
+#: stage groups an already-aggregated fact: ≤ #states rows per group at
+#: ANY raw-data scale) — ``collect_list`` on an unbounded group would
+#: buffer it; use plain ``"mean"`` there.  ``0.0D`` is a DOUBLE seed (a
+#: bare ``0.0`` would be DECIMAL).
+_STAT_SQL = {
+    "median": "median({c})",
+    "mean": "avg({c})",
+    "mean_ordered": (
+        "CASE WHEN count({c}) > 0 THEN "
+        "aggregate(sort_array(collect_list({c})), 0.0D, (a, x) -> a + x) / count({c}) END"
+    ),
 }
 
 
@@ -56,7 +60,11 @@ def grouped_stats(
     shuffle with map-side partial agg; output columns are ``__{stat}__{col}``.
     """
     agg_exprs = [
-        _STAT_FNS[s](F.col(c)).alias(f"__{s}__{c}")
+        F.expr(
+            _STAT_SQL[s].format(c=sql_quote(c, ident=True))
+            + " AS "
+            + sql_quote(f"__{s}__{c}", ident=True)
+        )
         for c in stat_cols
         for s in stats
     ]
@@ -79,21 +87,24 @@ def append_cohort_stats(
 
     One ``grouped_stats`` aggregate emits every labelled row through one
     ``inline`` (the explode of an array holding one struct per stat), so
-    the fact is aggregated once.
+    the fact is aggregated once.  The ``inline`` is one SQL expression,
+    whatever the number of stats and columns.
     """
     stat_labels = stat_labels or {"median": "US-median", "mean": "US-mean"}
     base = fact.filter(exclude_filter) if exclude_filter is not None else fact
     fused = grouped_stats(base, group_keys, stat_cols, tuple(stat_labels))
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(label).alias(label_col),
-                *[F.col(f"__{s}__{c}").alias(c) for c in stat_cols],
-            )
-            for s, label in stat_labels.items()
+
+    def row(s, label):
+        fields = [f"{sql_quote(label)} AS {sql_quote(label_col, ident=True)}"] + [
+            f"{sql_quote(f'__{s}__{c}', ident=True)} AS {sql_quote(c, ident=True)}"
+            for c in stat_cols
         ]
+        return f"struct({', '.join(fields)})"
+
+    rows = ", ".join(row(s, label) for s, label in stat_labels.items())
+    stat_df = fused.selectExpr(
+        *[sql_quote(k, ident=True) for k in group_keys], f"inline(array({rows}))"
     )
-    stat_df = fused.select(*group_keys, F.inline(rows))
     if scope_col is not None:
         stat_df = stat_df.withColumn(scope_col, F.lit(scope_value))
     return union_by_name([fact, stat_df])

@@ -94,17 +94,24 @@ def _fmt_scalar(v) -> str:
 def render_records_json(records: list[dict], indent: int = 4) -> str:
     """Serialize records exactly as the reference artifact writer does
     (pandas ``to_json(orient="records", indent=4)``, assets.py:325,380,486):
-    no space after ``:``, indent-nested braces, ``[\\n\\n]`` for empty."""
+    no space after ``:``, indent-nested braces, ``[\\n\\n]`` for empty.
+
+    Each key's line start (indent, quoted key, ``:``) is rendered once per
+    artifact, not once per cell."""
     if not records:
         return "[\n\n]"
     pad_k = " " * (indent * 2)
     pad_b = " " * indent
+    prefix: dict = {}
     blocks = []
     for rec in records:
-        body = ",\n".join(
-            f"{pad_k}{_fmt_string(str(k))}:{_fmt_scalar(v)}" for k, v in rec.items()
-        )
-        blocks.append(f"{pad_b}{{\n{body}\n{pad_b}}}")
+        lines = []
+        for k, v in rec.items():
+            p = prefix.get(k)
+            if p is None:
+                p = prefix[k] = f"{pad_k}{_fmt_string(str(k))}:"
+            lines.append(p + _fmt_scalar(v))
+        blocks.append(f"{pad_b}{{\n" + ",\n".join(lines) + f"\n{pad_b}}}")
     return "[\n" + ",\n".join(blocks) + "\n]"
 
 
@@ -140,18 +147,21 @@ def write_json_array(
     # containing a missing value as float64, so its integers serialize as
     # "0.0" there — reproduce that column-level coercion or the bytes (and
     # round-trips through pandas) diverge.
-    null_cols = {
-        c
-        for c in df.columns
-        if any(r[c] is None for r in records)
-        and any(
-            isinstance(r[c], int) and not isinstance(r[c], bool) for r in records
-        )
-    }
+    # One pass finds both sets (``type(v) is int`` leaves bools out).
+    has_null: set = set()
+    has_int: set = set()
     for r in records:
-        for c in null_cols:
-            if isinstance(r[c], int) and not isinstance(r[c], bool):
-                r[c] = float(r[c])
+        for c, v in r.items():
+            if v is None:
+                has_null.add(c)
+            elif type(v) is int:
+                has_int.add(c)
+    null_cols = has_null & has_int
+    if null_cols:
+        for r in records:
+            for c in null_cols:
+                if type(r[c]) is int:
+                    r[c] = float(r[c])
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     with open(path, "w") as f:
         f.write(render_records_json(records, indent=indent))

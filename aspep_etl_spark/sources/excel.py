@@ -12,8 +12,9 @@ One path: workbook bytes → positional grid → canonical year frame → fact.
   - **tidy era (2024+)**: a flat header row whose names are
     ``maps.TIDY_2024_COLUMN_CANON`` keys, dirty numeric strings.
 
-- **canonical frames → fact**: ``ingest_grids``, one ``createDataFrame``
-  per year, then ``normalize_fact``.
+- **canonical frames → fact**: ``ingest_grids``, one Arrow table per
+  year, one ``createDataFrame`` over their concatenation, then
+  ``normalize_fact``.
 
 A workbook that fails to read or to fit its era's adapter is quarantined
 by ``parse_workbook_files`` with its year and file; the other years land.
@@ -28,8 +29,10 @@ import os
 import re
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import maps, schema
 from ..functions.scalar import slugify_py
@@ -117,11 +120,9 @@ def _to_canonical(pdf: pd.DataFrame, year: int) -> pd.DataFrame:
     measures → null, extra columns dropped, measures numeric).
 
     Dimension cells become ``str`` (missing → ``None``): a number in
-    ``state`` would fail the Arrow conversion, and the non-Arrow fallback
-    keeps that year's missing measures as NaN, which Spark ranks and
-    averages as a value, where every other year gets null."""
-    # Column order must mirror schema.aspep_raw_schema() — pandas→Spark
-    # conversion with an explicit schema aligns by position.
+    ``state`` would fail the year's Arrow conversion in ``ingest_grids``
+    and quarantine the whole year.  Columns follow
+    ``schema.aspep_raw_schema()`` order."""
     out = pd.DataFrame()
     out["index"] = pd.Series(range(len(pdf)), dtype="int64")
     for dim in ("state", "gov_function"):
@@ -198,25 +199,27 @@ def ingest_grids(
     fact DataFrame plus the quarantine list; ``normalize_fact`` keeps only
     the ``maps.START_YEAR``–``maps.END_YEAR`` window.
 
-    Each year is converted by its own ``createDataFrame``, so a year that
-    fails outright is quarantined alone.  Each conversion slices its frame
-    into ``defaultParallelism`` partitions, so the union is coalesced back
-    to ``defaultParallelism`` (no shuffle; the driver already holds every
-    row) — otherwise N years reach the store writer as N × cores tasks and
-    files of a few rows each.
+    Each year is converted to its own Arrow table with
+    ``schema.aspep_raw_schema()`` (columns matched by name, NaN → null), so
+    a year that fails to convert is quarantined alone.  The tables are
+    concatenated and handed to ONE ``createDataFrame``: a constant number
+    of JVM calls, where a conversion per year plus their union cost ~25
+    py4j round trips a year.  Spark holds the table as one local relation
+    scanned in at most ``defaultParallelism`` partitions, so the store
+    writer runs that many tasks, not N years × cores tasks writing files
+    of a few rows each.
     """
-    from ..operators.setops import union_by_name
     from ..plans.pipeline import normalize_fact
 
-    frames: list[DataFrame] = []
+    raw_schema = schema.aspep_raw_schema()
+    arrow_schema = to_arrow_schema(raw_schema)
+    tables: list[pa.Table] = []
     bad: list[dict] = []
     for year, pdf in sorted(frames_by_year.items()):
         try:
-            frames.append(spark.createDataFrame(pdf, schema=schema.aspep_raw_schema()))
+            tables.append(pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False))
         except Exception as exc:  # noqa: BLE001 — quarantine, don't abort
             bad.append({"year": year, "reason": str(exc)})
-    if not frames:
-        empty = spark.createDataFrame([], schema.aspep_raw_schema())
-        return empty, bad
-    raw_fact = union_by_name(frames).coalesce(spark.sparkContext.defaultParallelism)
+    table = pa.concat_tables(tables) if tables else arrow_schema.empty_table()
+    raw_fact = spark.createDataFrame(table, schema=raw_schema)
     return normalize_fact(raw_fact, census_dim), bad

@@ -171,9 +171,9 @@ def test_ingest_empty_input(spark):
 
 
 def test_ingest_grids_store_layout(spark, tmp_path):
-    """Per-year conversions are unioned and coalesced to the session's
-    parallelism, so the store writer runs at most ``defaultParallelism``
-    tasks and writes at most one file per (task, year)."""
+    """The years reach Spark as one table scanned in at most
+    ``defaultParallelism`` partitions, so the store writer runs at most
+    that many tasks and writes at most one file per (task, year)."""
     import glob
 
     from aspep_etl_spark.sinks.publish import write_canonical_store
@@ -216,3 +216,30 @@ def test_ingest_grids_numeric_state_is_stringified_with_null_measures(spark):
     neighbours = [r for r in rows if r["year"] != 2003]
     assert len(neighbours) == 3 * 8
     assert all(r["pt_hour"] is None for r in neighbours)
+
+
+def test_ingest_grids_quarantines_a_year_that_cannot_convert(spark):
+    """Each year becomes its own Arrow table before the one
+    ``createDataFrame``, so a year whose ``index`` cell is not an integer
+    is quarantined alone and the other years land.  Their missing measures
+    (NaN in the pandas frames) arrive as null, never NaN."""
+    from pyspark.sql import functions as F
+
+    broken = tidy_frame_as(2016)
+    broken["index"] = broken["index"].astype(object)
+    broken.loc[1, "index"] = "x"
+    frames = {
+        2003: grid_to_canonical(legacy_grid_2003(), 2003),
+        2015: tidy_frame_as(2015),
+        2016: broken,
+    }
+    fact, bad = ingest_grids(spark, frames)
+    assert [b["year"] for b in bad] == [2016]
+    assert {r["year"] for r in fact.select("year").distinct().collect()} == {2003, 2015}
+
+    nans = fact.select(*[F.sum(F.isnan(m).cast("int")).alias(m) for m in schema.MEASURE_COLS])
+    assert all(n == 0 for n in nans.first())
+    us = fact.filter((F.col("state_code") == "US") & (F.col("year") == 2015)).first()
+    assert us["ft_pay"] is None and us["pt_hour"] is None  # "N/A" and absent
+    al = fact.filter((F.col("state_code") == "AL") & (F.col("year") == 2003)).first()
+    assert al["pt_hours"] is None and al["total_pay"] is None
