@@ -21,6 +21,19 @@ Layout
 - ``plans``      full pipelines: combine_years / derive_stats /
                  derive_extended_stats as DataFrame→DataFrame transforms
 - ``streaming``  Structured Streaming ingestion path for event streams [EXT]
+
+Python kernels (``mapInPandas``, ``applyInPandas``,
+``applyInPandasWithState``) reach the package one way: it is registered to
+be pickled BY VALUE, so every kernel carries the package code it uses and
+runs on Python workers that cannot import the package, whoever built the
+session.  A module global a kernel reads therefore arrives with the
+driver's value, not a fresh import's.
 """
+
+import sys
+
+from pyspark import cloudpickle
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __version__ = "0.1.0"

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.xxh64 import xxh64_bytes
 from .text import WORD_RE
 
 
@@ -123,8 +124,6 @@ def score_documents_kernel(
         import math
         import re
         from decimal import ROUND_HALF_UP, Decimal
-
-        from ..functions.xxh64 import xxh64_bytes
 
         word_re = re.compile(WORD_RE)
         q = Decimal(1).scaleb(-round_dp)

@@ -154,11 +154,9 @@ def files_as_media(binary_df: DataFrame) -> DataFrame:
     ``files_as_media`` → ``extract_media_features``.  The asset id is a
     deterministic hash of the path; the modality is resolved from the
     decoded container (sniffed from magic bytes), not the file extension."""
-    from ..functions.media import AUDIO_FORMATS, IMAGE_FORMATS, VIDEO_FORMATS
+    from ..functions.media import AUDIO_FORMATS, IMAGE_FORMATS, VIDEO_FORMATS, sniff_format
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.media import sniff_format
-
         modality_of = {f: "image" for f in IMAGE_FORMATS}
         modality_of.update({f: "audio" for f in AUDIO_FORMATS})
         modality_of.update({f: "video" for f in VIDEO_FORMATS})

@@ -90,8 +90,9 @@ def _cohort_kernel(
     fine.  (A per-group ``applyInPandas`` costs ~10 ms of pandas overhead
     per cohort — ruinous with thousands of small cohorts.)
 
-    The chunker and each ``derive`` are closures, pickled by value: the
-    Python workers never import this package.
+    Like every kernel, the chunker reaches the workers by value (the
+    package registers itself with cloudpickle in ``__init__``), so
+    ``derive`` may call module-level helpers.
     """
     import numpy as np
     import pandas as pd

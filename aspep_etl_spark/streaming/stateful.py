@@ -51,30 +51,30 @@ def _ts_str(t) -> str:
     return s
 
 
+def _ordered_events(pdf_iter):
+    """One key's rows in event-time order (ts, event_id), plus their
+    epoch seconds."""
+    events = pd.concat(list(pdf_iter), ignore_index=True)
+    events = events.sort_values(["ts", "event_id"])
+    # normalize to ns first: pandas may hand back datetime64[us]
+    return events, events["ts"].astype("datetime64[ns]").astype("int64") // 10**9
+
+
 def _session_fn(gap_seconds: int):
     def fn(key, pdf_iter, state: GroupState):
         (user_id,) = key
         counter, last_end = state.get if state.exists else (0, None)
-        events = pd.concat(list(pdf_iter), ignore_index=True)
-        events = events.sort_values(["ts", "event_id"])
-        # normalize to ns first: pandas may hand back datetime64[us]
-        ts_s = events["ts"].astype("datetime64[ns]").astype("int64") // 10**9
+        events, ts_s = _ordered_events(pdf_iter)
 
         out = []
-        cur = None  # (start_ts_str, n, total)
+        cur = None  # the open session's output row
         for t, tstr, v in zip(ts_s, events["ts"], events["value"]):
             if last_end is None or t - last_end > gap_seconds:
-                if cur is not None:
+                if cur is not None:  # the gap closes the open session
                     out.append(cur)
+                    cur = None
                 counter += 1
-                cur = {
-                    "user_id": user_id,
-                    "session_id": counter,
-                    "n_events": 0,
-                    "session_start": _ts_str(tstr),
-                    "total_value": 0.0,
-                }
-            if cur is None:  # continuation of the previous batch's session
+            if cur is None:  # a new session, or the previous batch's one
                 cur = {
                     "user_id": user_id,
                     "session_id": counter,
@@ -143,9 +143,7 @@ def _rate_limit_fn(limit: int, slot_seconds: int):
     def fn(key, pdf_iter, state: GroupState):
         (user_id,) = key
         cur_slot, admitted = state.get if state.exists else (None, 0)
-        events = pd.concat(list(pdf_iter), ignore_index=True)
-        events = events.sort_values(["ts", "event_id"])
-        ts_s = events["ts"].astype("datetime64[ns]").astype("int64") // 10**9
+        events, ts_s = _ordered_events(pdf_iter)
 
         out = []
         for t, eid in zip(ts_s, events["event_id"]):

@@ -9,7 +9,8 @@ below the cohort size, plus a deliberately skewed single-cohort frame),
 once with Spark's default Arrow batches and once with 3-row batches so the
 multi-batch buffer and the previous-batch key compare run, and pin exact
 equality against the unchunked JVM-expression twins.  A subprocess test
-runs both kernels where the Python workers cannot import the package.
+runs where the Python workers cannot import the package: both wide kernels
+under tiny chunks, and one registry entry per Python-kernel site.
 """
 
 import math
@@ -215,22 +216,49 @@ spark.stop()
 """
 
 
-def test_kernels_run_where_workers_cannot_import_the_package(tmp_path):
-    # The chunker and the derives are closures pickled by value; a
-    # module-level helper would be pickled by reference and make every
-    # Python worker import this package.  Run from outside the repo with
-    # no PYTHONPATH so the workers cannot.
+#: One ``queries()`` entry per Python-kernel site: the classifier, the three
+#: media kernels, both similarity kernels, both stateful streaming kernels
+#: and ``_cohort_kernel``.
+ENTRY_PER_KERNEL_SITE = [
+    "docs_classifier_score",
+    "multimodal_features",
+    "media_phash_dedup",
+    "dedup_embedding_cosine",
+    "dedup_semantic",
+    "streaming_sessionize",
+    "streaming_rate_limit",
+    "aspep_extended_pipeline",
+]
+
+
+@pytest.mark.parametrize("case", ["wide_kernels", "one_entry_per_kernel_site"])
+def test_kernels_run_where_workers_cannot_import_the_package(tmp_path, case):
+    # The package registers itself with cloudpickle to be pickled by value,
+    # so every kernel ships the package code it uses.  Run from outside the
+    # repo with no PYTHONPATH so the Python workers cannot import it.
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    script = tmp_path / "kernels.py"
-    script.write_text(textwrap.dedent(_NO_PACKAGE_SCRIPT))
+    if case == "wide_kernels":
+        script = tmp_path / "kernels.py"
+        script.write_text(textwrap.dedent(_NO_PACKAGE_SCRIPT))
+        argv, marker = [str(script), repo], "KERNELS_OK"
+    else:  # every entry must match its DuckDB oracle exactly
+        n = len(ENTRY_PER_KERNEL_SITE)
+        argv = [os.path.join(repo, "tools", "check_correctness.py"), *ENTRY_PER_KERNEL_SITE]
+        marker = f"{n}/{n} exact"
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    env.update(
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
+    )
     proc = subprocess.run(
-        [sys.executable, str(script), repo],
+        [sys.executable, *argv],
         cwd=tmp_path,
         env=env,
         capture_output=True,
         text=True,
         timeout=600,
     )
-    assert proc.returncode == 0 and "KERNELS_OK" in proc.stdout, proc.stderr[-4000:]
+    assert proc.returncode == 0 and marker in proc.stdout, (
+        proc.stdout[-2000:] + proc.stderr[-4000:]
+    )

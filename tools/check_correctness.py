@@ -23,12 +23,16 @@ at the repo root — the same per-query shape as the driver's
 sample misses stay auditable per-round without re-running Spark.
 ``--out PATH`` redirects that snapshot (judge/CI verification runs can
 point it at a scratch file and leave the committed tree untouched).
+Every snapshot is stamped with the ``code_rev`` it certifies (``git
+rev-parse HEAD``, ``-dirty`` when tracked files differ from it) and the
+session's ``cpus`` (its default parallelism).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -36,7 +40,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -81,6 +86,23 @@ def value_match(a: pd.DataFrame, b: pd.DataFrame) -> tuple[bool, bool, str]:
                 i = int((av2 != bv2).idxmax())
                 detail += f" [{c}] row{i}: {av2[i]!r} vs {bv2[i]!r};"
     return exact, close, detail
+
+
+def code_rev() -> str | None:
+    """``git rev-parse HEAD`` of the checkout, suffixed ``-dirty`` when a
+    tracked file differs from it; None outside a git checkout."""
+
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", *args], cwd=ROOT, capture_output=True, text=True, check=True
+        ).stdout.strip()
+
+    try:
+        rev = git("rev-parse", "HEAD")
+        changed = git("status", "--porcelain", "--untracked-files=no")
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return rev + ("-dirty" if changed else "")
 
 
 def run_oracle(con, sql: str, timeout: float | None) -> pd.DataFrame:
@@ -137,7 +159,9 @@ def main(argv: list[str]) -> int:
     oracles = contract.oracle_sql()
     targets = names or list(qs)
 
+    rev = code_rev()
     spark = get_spark(app_name="check-correctness")
+    cpus = spark.sparkContext.defaultParallelism
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"
@@ -236,14 +260,13 @@ def main(argv: list[str]) -> int:
         # separators into the filename)
         base = os.path.basename(SF_DIR.rstrip("/"))
         sf_tag = "" if base == "sf0.01" else "_" + base
-        out = out_override or os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            f"CORRECTNESS_local{sf_tag}.json",
-        )
+        out = out_override or os.path.join(ROOT, f"CORRECTNESS_local{sf_tag}.json")
         n_oracle = sum(1 for r in report.values() if r["mode"] == "oracle")
         with open(out, "w") as fh:
             json.dump(
                 {
+                    "code_rev": rev,
+                    "cpus": cpus,
                     "sf_dir": SF_DIR,
                     "total": len(report),
                     "oracle_checked": n_oracle,
